@@ -1021,11 +1021,9 @@ def _q_curate_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ok.select("url", "warc_ts", "text", "lang")
        .write.mode("overwrite").parquet(os.path.join(_Q58_LAND, "input")))
     inp = spark.read.parquet(os.path.join(_Q58_LAND, "input"))
-    out, report = curate(inp, lang_rates=_Q58_RATES,
-                         default_permille=_Q58_DEFAULT_PERMILLE,
-                         dedup_hash="md5_60", quality=_Q58_QF)
-    out.unpersist()  # curate returns the persisted frame; free it — only
-    # the stage-count report leaves this function
+    _, report = curate(inp, lang_rates=_Q58_RATES,
+                       default_permille=_Q58_DEFAULT_PERMILLE,
+                       dedup_hash="md5_60", quality=_Q58_QF)
     return spark.createDataFrame(
         [(k, v) for k, v in report.items()], "stage string, n long")
 

@@ -26,6 +26,13 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "src
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
+def _positive_int(text: str) -> int:
+    n = int(text)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be >= 1, got {n}")
+    return n
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="+")
@@ -33,7 +40,7 @@ def main() -> None:
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--cpus", type=int,
                     default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    ap.add_argument("--reps", type=int, default=2)
+    ap.add_argument("--reps", type=_positive_int, default=2)
     ap.add_argument("--explain", default=None,
                     help="directory to write <name>_<suffix>.txt plans into")
     ap.add_argument("--suffix", default="before")

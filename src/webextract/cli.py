@@ -123,7 +123,6 @@ def cmd_curate(args) -> int:
                          default_permille=args.default_permille,
                          near_dup=not args.no_near_dup)
     out.write.mode("overwrite").parquet(args.output)
-    out.unpersist()
     print(json.dumps({"output": args.output, "stages": report}))
     return 0
 
@@ -142,7 +141,6 @@ def cmd_prep(args) -> int:
         gram_n=args.gram_n, text_col=args.text_col, id_col=args.id_col,
         source_col=args.source_col)
     out.write.mode("overwrite").parquet(args.output)
-    out.unpersist()  # pretrain_prep returns the persisted frame
     print(json.dumps({"output": args.output, "stages": report}))
     return 0
 

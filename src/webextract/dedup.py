@@ -23,7 +23,7 @@ near-dup operating point.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W, functions as F
+from pyspark.sql import Column, DataFrame, Observation, Window as W, functions as F
 
 # ---------------------------------------------------------------------------
 # exact
@@ -225,7 +225,9 @@ def minhash_lsh_pairs(df: DataFrame, *, text_col: str = "text",
     band bucket, never the full cross product. The candidate dedup shuffles
     bare ``(id_a, id_b)`` pairs ONLY (≈16 bytes/row); the 64-long signature
     arrays are re-joined per unique doc id afterwards for verification —
-    never carried through the band-collision distinct.
+    never carried through the band-collision distinct. The signature table
+    is read four times; give it a local checkpoint, not a ``persist()``ed
+    frame, so all four reads share one signature exchange (:func:`observed`).
     """
     assert num_perm % bands == 0
     rows_per_band = num_perm // bands
@@ -378,6 +380,29 @@ def dedup_against_index(df: DataFrame, index: DataFrame, *,
 
 
 # ---------------------------------------------------------------------------
+# stage boundaries: observed local checkpoints
+# ---------------------------------------------------------------------------
+
+
+def observed(df: DataFrame, *aggs: Column) -> tuple[DataFrame, Observation]:
+    """``df`` with ``aggs`` (default: the row count, as ``n``) attached as
+    observed metrics — the package's one stage-boundary idiom:
+
+        df, obs = observed(df)
+        df, n = df.localCheckpoint(eager=True), obs.get["n"]
+
+    The eager checkpoint is the boundary's ONE job: it materializes the
+    stage and fills ``obs`` (reading ``obs.get`` before it blocks forever).
+    The caller runs it, so the job's call site is the boundary's own line.
+    A local checkpoint, unlike a ``persist()``ed frame, lets AQE reuse
+    equal exchanges above it, and Spark's ContextCleaner frees it once
+    unreachable. It cuts lineage, as in :func:`connected_components`.
+    """
+    obs = Observation()
+    return df.observe(obs, *(aggs or [F.count(F.lit(1)).alias("n")])), obs
+
+
+# ---------------------------------------------------------------------------
 # cluster assignment: connected components over the near-dup pair graph
 # ---------------------------------------------------------------------------
 
@@ -425,17 +450,14 @@ def connected_components(edges: DataFrame, *, src: str = "id_a",
     # round re-shuffles the edges; only the per-round label groupBy moves
     # data (guide §2.4: operations keyed the same way share one exchange)
     sym = sym.repartition("a").localCheckpoint(eager=True)
-
-    def _label_sum(df: DataFrame):
-        # labels only ever DECREASE, so their exact sum (decimal — no long
-        # overflow, no float fuzz) is a strictly decreasing progress
-        # measure: an unchanged sum IS the fixpoint. One tiny aggregate per
-        # round instead of a labels-vs-labels join + count.
-        return df.agg(
-            F.sum(F.col("label").cast("decimal(38,0)"))).first()[0]
-
+    # labels only ever DECREASE, so their exact sum (decimal — no long
+    # overflow, no float fuzz) is a strictly decreasing progress measure:
+    # an unchanged sum IS the fixpoint. Observed by each round's checkpoint
+    # job, so a round is one job (an empty vertex set sums to None twice)
+    label_sum = F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
+    labels, obs = observed(labels, label_sum)
     labels = labels.localCheckpoint(eager=True)
-    prev_sum = _label_sum(labels)
+    prev_sum = obs.get["s"]
     converged = False
     # max_iter bounds label-CHANGING rounds; the +1 grants the no-change
     # verification round, so a graph whose diameter is exactly max_iter
@@ -443,11 +465,11 @@ def connected_components(edges: DataFrame, *, src: str = "id_a",
     for _ in range(max_iter + 1):
         msgs = (sym.join(labels.withColumnRenamed("id", "a"), "a")
                    .select(F.col("b").alias("id"), "label"))
-        new_labels = (labels.unionByName(msgs)
-                      .groupBy("id").agg(F.min("label").alias("label"))
-                      .localCheckpoint(eager=True))
-        cur_sum = _label_sum(new_labels)
-        labels = new_labels
+        labels, obs = observed(
+            labels.unionByName(msgs)
+            .groupBy("id").agg(F.min("label").alias("label")), label_sum)
+        labels = labels.localCheckpoint(eager=True)
+        cur_sum = obs.get["s"]
         if cur_sum == prev_sum:
             converged = True
             break
@@ -492,21 +514,19 @@ def connected_components_star(edges: DataFrame, *, src: str = "id_a",
     because endpoint sums strictly decrease while edges churn). Ids must be
     numeric, like :func:`connected_components`.
     """
-    e = (edges.select(F.col(src).cast("long").alias("x"),
-                      F.col(dst).cast("long").alias("y"))
-         .filter(F.col("x") != F.col("y"))
-         .select(F.greatest("x", "y").alias("hi"),
-                 F.least("x", "y").alias("lo"))
-         .distinct().localCheckpoint(eager=True))
-
-    def _sig(df: DataFrame):
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("hi").cast("decimal(38,0)")).alias("sh"),
-            F.sum(F.col("lo").cast("decimal(38,0)")).alias("sl")).first()
-        return (row["n"], row["sh"], row["sl"])
-
-    prev = _sig(e)
+    # the fixpoint signature, observed by each round's checkpoint job
+    sig = (F.count(F.lit(1)).alias("n"),
+           F.sum(F.col("hi").cast("decimal(38,0)")).alias("sh"),
+           F.sum(F.col("lo").cast("decimal(38,0)")).alias("sl"))
+    e, obs = observed(
+        edges.select(F.col(src).cast("long").alias("x"),
+                     F.col(dst).cast("long").alias("y"))
+        .filter(F.col("x") != F.col("y"))
+        .select(F.greatest("x", "y").alias("hi"),
+                F.least("x", "y").alias("lo"))
+        .distinct(), *sig)
+    e = e.localCheckpoint(eager=True)
+    prev = obs.get
     converged = False
     for _ in range(max_iter + 1):  # +1: the no-change verification round
         # r6 plan shape: each star phase keys ALL its operations on one
@@ -535,8 +555,9 @@ def connected_components_star(edges: DataFrame, *, src: str = "id_a",
                  .filter(F.col("x") != F.col("y"))
                  .select(F.greatest("x", "y").alias("hi"),
                          F.least("x", "y").alias("lo")))
-        e = small.repartition("hi").distinct().localCheckpoint(eager=True)
-        cur = _sig(e)
+        e, obs = observed(small.repartition("hi").distinct(), *sig)
+        e = e.localCheckpoint(eager=True)
+        cur = obs.get
         if cur == prev:
             converged = True
             break

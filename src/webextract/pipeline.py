@@ -24,7 +24,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .dedup import HASH_FNS
+from .dedup import (HASH_FNS, _norm_text, best_copy, connected_components,
+                    minhash_lsh_pairs, observed)
+
+# curate's report keys, in stage order
+_STAGES = ("input", "after_latest_crawl", "after_gates", "after_exact_dedup",
+           "after_near_dedup", "final")
 
 
 def curate(pages: DataFrame, *, lang_rates: dict[str, int] | None = None,
@@ -38,27 +43,29 @@ def curate(pages: DataFrame, *, lang_rates: dict[str, int] | None = None,
     ratio gate defaults OFF — it presumes one language's stopword list).
 
     Returns (curated DataFrame, per-stage row counts). Stage boundaries
-    are persisted so the audit counts and the downstream stages read the
-    materialized stage, not a recomputation of everything upstream
-    (measured 8x on the test corpus); the returned DataFrame keeps the
-    last persist — ``unpersist()`` it after the final write.
+    are local checkpoints that count their rows in the same job
+    (:func:`webextract.dedup.observed`), so the audit counts and the
+    downstream stages read the materialized stage, not a recomputation of
+    everything upstream (measured 8x on the test corpus). Spark's
+    ContextCleaner frees them once unreachable (no ``unpersist()``); like
+    connected_components' rounds, they trade lineage for speed.
     """
     from .analysis import (pii_redact_columns, quality_filter_columns,
                            repetition_keep_expr)
-    from .dedup import best_copy, connected_components, minhash_lsh_pairs
     from .sampling import stratified_sample
 
     from pyspark.sql import Window
 
     report: dict[str, int] = {}
-    ok = pages.filter(F.col("status") == "ok") if "status" in pages.columns \
+    # `df` is the one live stage: reassigning it drops the superseded one
+    df = pages.filter(F.col("status") == "ok") if "status" in pages.columns \
         else pages
-    # persist the input boundary FIRST: the input count, the latest-crawl
-    # window, and every later stage otherwise each re-run the full upstream
-    # plan (extraction scan + parse) from scratch
-    ok = raw = ok.persist()  # `raw` keeps the persisted handle: `ok` is
-    report["input"] = ok.count()  # reassigned below and unpersist on the
-    # derived frame would be a silent no-op, leaking the cache
+    # checkpoint the input boundary FIRST: the latest-crawl window and every
+    # later stage otherwise each re-run the full upstream plan (extraction
+    # scan + parse) from scratch. Each boundary's tuple runs the checkpoint
+    # job before it reads the count that job observed.
+    df, obs = observed(df)
+    df, report["input"] = df.localCheckpoint(eager=True), obs.get["n"]
 
     # --- recrawl resolution: latest successful crawl per url -------------
     # recrawls REPEAT the id (same url, new warc_ts) — every downstream
@@ -67,12 +74,12 @@ def curate(pages: DataFrame, *, lang_rates: dict[str, int] | None = None,
     # md5(text) DESC: deterministic across runs/engines (a bare ts order
     # would let Spark pick an arbitrary copy, making downstream dedup
     # membership non-reproducible)
-    if "warc_ts" in ok.columns:
+    latest = None
+    if "warc_ts" in df.columns:
         w = Window.partitionBy(id_col).orderBy(
             F.desc("warc_ts"), F.desc(F.md5(F.col(text_col))))
-        ok = (ok.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1).drop("_rn"))
-        report["after_latest_crawl"] = ok.count()
+        df, latest = observed(df.withColumn("_rn", F.row_number().over(w))
+                                .filter(F.col("_rn") == 1).drop("_rn"))
 
     # --- gates + scrub: one fused projection over the scan ---------------
     # stopword-ratio gate OFF by default: it presumes one language's
@@ -94,22 +101,18 @@ def curate(pages: DataFrame, *, lang_rates: dict[str, int] | None = None,
     # projection as the quality gate and the PII scrub.
     r_keep = repetition_keep_expr(toks)
     _, red = pii_redact_columns(text_col)
-    gated = (ok.filter(q_keep.cast("boolean"))
-               .filter(r_keep.cast("boolean"))
-               .withColumn(text_col, red))
-    # stage boundaries are persisted: every later stage AND each report
-    # count would otherwise recompute extraction + the gates from the scan
-    gated = gated.persist()
-    report["after_gates"] = gated.count()
-    raw.unpersist()
+    df, obs = observed(df.filter(q_keep.cast("boolean"))
+                         .filter(r_keep.cast("boolean"))
+                         .withColumn(text_col, red))
+    df, report["after_gates"] = df.localCheckpoint(eager=True), obs.get["n"]
+    if latest is not None:  # observed by the gates job, not a job of its own
+        report["after_latest_crawl"] = latest.get["n"]
 
     # --- exact dedup: keep the best copy per content group ---------------
-    kept = best_copy(gated, text_col=text_col, id_col=id_col,
-                     hash_fn=dedup_hash)
-    survivors = (gated.join(kept.filter(F.col("is_kept") == 1)
-                            .select(id_col), id_col, "left_semi")
-                 .persist())
-    report["after_exact_dedup"] = survivors.count()
+    df, obs = observed(df.join(
+        best_copy(df, text_col=text_col, id_col=id_col, hash_fn=dedup_hash)
+        .filter(F.col("is_kept") == 1).select(id_col), id_col, "left_semi"))
+    df, report["after_exact_dedup"] = df.localCheckpoint(eager=True), obs.get["n"]
 
     # --- near-dup clusters: BEST copy per MinHash-LSH component ----------
     if near_dup:
@@ -119,53 +122,42 @@ def curate(pages: DataFrame, *, lang_rates: dict[str, int] | None = None,
         # HIGHEST-QUALITY one (longest normalized text, min id tie-break) —
         # same "keep the best copy" semantics as the exact-dedup stage, not
         # an arbitrary min-hash representative.
-        from .dedup import _norm_text
-
-        exact_surv = survivors
-        pairs = minhash_lsh_pairs(survivors, text_col=text_col,
-                                  id_col=id_col, n=2, hash_fn=dedup_hash)
-        hpairs = pairs.select(F.xxhash64("id_a").alias("id_a"),
-                              F.xxhash64("id_b").alias("id_b"))
-        if hpairs.limit(1).count() > 0:
+        pairs = minhash_lsh_pairs(df, text_col=text_col, id_col=id_col, n=2,
+                                  hash_fn=dedup_hash)
+        # one job builds and counts the pair set: over the checkpointed
+        # stage all four signature reads share one exchange, and CC gets
+        # the pairs already built
+        pairs, obs = observed(pairs.select(F.xxhash64("id_a").alias("id_a"),
+                                           F.xxhash64("id_b").alias("id_b")))
+        pairs = pairs.localCheckpoint(eager=True)
+        if obs.get["n"] > 0:
             cc = connected_components(
-                hpairs,
-                vertices=survivors.select(
-                    F.xxhash64(F.col(id_col)).alias("hid")),
+                pairs,
+                vertices=df.select(F.xxhash64(F.col(id_col)).alias("hid")),
                 id_col="hid")
-            labeled = (survivors
-                       .withColumn("_hid", F.xxhash64(F.col(id_col)))
-                       .withColumn("_q", F.length(_norm_text(text_col)))
-                       .join(cc.select(F.col("id").alias("_hid"),
-                                       "cluster_id"), "_hid"))
+            labeled = (df.withColumn("_hid", F.xxhash64(F.col(id_col)))
+                         .withColumn("_q", F.length(_norm_text(text_col)))
+                         .join(cc.select(F.col("id").alias("_hid"),
+                                         "cluster_id"), "_hid"))
             reps = labeled.groupBy("cluster_id").agg(
                 F.min_by(id_col, F.struct((-F.col("_q")).alias("nq"),
                                           F.col(id_col))).alias("_rep"))
-            survivors = survivors.join(
-                reps.select(F.col("_rep").alias(id_col)), id_col,
-                "left_semi")
-        if survivors is not exact_surv:  # pairs found: new persisted stage
-            survivors = survivors.persist()
-            report["after_near_dedup"] = survivors.count()
-            exact_surv.unpersist()
+            df, obs = observed(df.join(
+                reps.select(F.col("_rep").alias(id_col)), id_col, "left_semi"))
+            df, report["after_near_dedup"] = df.localCheckpoint(eager=True), obs.get["n"]
         else:  # no candidate pairs: stage is a pass-through
             report["after_near_dedup"] = report["after_exact_dedup"]
-    gated.unpersist()
 
     # --- language-stratified sample --------------------------------------
-    # the RETURNED frame is always the persisted one, so the caller's
-    # documented `unpersist()` actually frees the cache: when sampling
-    # applies, persist the sampled frame and release its (persisted) parent
     if lang_rates:
-        parent = survivors
-        survivors = stratified_sample(
-            survivors, key_col=id_col, strata_col=lang_col,
-            rates=lang_rates, default_permille=default_permille,
-            bucket_out=None).persist()
-        report["final"] = survivors.count()
-        parent.unpersist()
+        df, obs = observed(stratified_sample(
+            df, key_col=id_col, strata_col=lang_col, rates=lang_rates,
+            default_permille=default_permille, bucket_out=None))
+        df, report["final"] = df.localCheckpoint(eager=True), obs.get["n"]
     else:
-        report["final"] = survivors.count()
-    return survivors, report
+        report["final"] = report.get("after_near_dedup",
+                                     report["after_exact_dedup"])
+    return df, {k: report[k] for k in _STAGES if k in report}
 
 
 def _rebalance(clean: DataFrame, *, hash_fn: str = "md5_60") -> DataFrame:
@@ -235,8 +227,8 @@ def pretrain_prep(docs: DataFrame, bench: DataFrame, *,
 
     Returns (packed assignment: one row per surviving doc with
     (id, source, tokens, shard, offset, first_chunk, last_chunk,
-    n_chunks), per-stage report). Stage boundaries are persisted like
-    :func:`curate`; ``unpersist()`` the result after the final write.
+    n_chunks), per-stage report). Stage boundaries are :func:`curate`'s
+    observed local checkpoints (no ``unpersist()``).
     """
     from .sampling import pack_sequences
 
@@ -246,22 +238,20 @@ def pretrain_prep(docs: DataFrame, bench: DataFrame, *,
     t = F.trim(F.col(text_col))
     toks = F.when(F.length(t) == 0, F.array().cast("array<string>")) \
             .otherwise(F.split(t, r"\s+"))
-    # r6: persist only the SMALL columns (id, source, n_tokens ≈ 24 B/row)
-    # — caching the token ARRAYS cost more in serialization + memory than
-    # one lazy re-split for the gram stage saves (measured: base
+    # r6: materialize only the SMALL columns (id, source, n_tokens ≈ 24
+    # B/row) — caching the token ARRAYS cost more in serialization + memory
+    # than one lazy re-split for the gram stage saves (measured: base
     # materialization 3.0 s -> ~1 s at sf1.0; the decon stage re-derives
     # tokens from the text in the same scan that builds its grams).
-    base = docs.select(F.col(id_col).alias("id"),
-                       F.col(source_col).alias("source"),
-                       F.size(toks).cast("long").alias("n_tokens")) \
-               .persist()
-    report["input"] = base.count()
+    base, obs = observed(docs.select(
+        F.col(id_col).alias("id"), F.col(source_col).alias("source"),
+        F.size(toks).cast("long").alias("n_tokens")))
+    base, report["input"] = base.localCheckpoint(eager=True), obs.get["n"]
     corpus_toks = docs.select(F.col(id_col).alias("id"), toks.alias("_t"))
 
     # --- decontamination: drop docs sharing any n-gram with the bench ----
-    # let-bound grams (analysis.gram_array): the corpus side reads the
-    # persisted _t, but the bench side's split would otherwise inline into
-    # every per-gram access
+    # let-bound grams (analysis.gram_array): the bench side's split would
+    # otherwise inline into every per-gram access
     from .analysis import gram_array
 
     gram = gram_array(F.col("_t"), gram_n)
@@ -277,28 +267,22 @@ def pretrain_prep(docs: DataFrame, bench: DataFrame, *,
     bench_idx = _grams(bench_toks).select("gh").distinct()
     hits = (_grams(corpus_toks).join(F.broadcast(bench_idx), "gh")
             .select("id").distinct())
-    clean = base.join(hits, "id", "left_anti").persist()
-    report["after_decontamination"] = clean.count()
-    base.unpersist()
+    clean, obs = observed(base.join(hits, "id", "left_anti"))
+    clean, report["after_decontamination"] = (
+        clean.localCheckpoint(eager=True), obs.get["n"])
 
     # --- temperature rebalance: alpha=0.5 quota per source ---------------
-    mixed = _rebalance(clean, hash_fn=hash_fn).persist()
-    report["after_rebalance"] = mixed.count()
-    clean.unpersist()
+    mixed, obs = observed(_rebalance(clean, hash_fn=hash_fn))
+    mixed, report["after_rebalance"] = (
+        mixed.localCheckpoint(eager=True), obs.get["n"])
 
     # --- sequence packing -------------------------------------------------
     packed = pack_sequences(mixed.select("id", "n_tokens"), id_col="id",
                             tokens_col="n_tokens", capacity=capacity,
                             shards=shards, hash_fn=hash_fn)
-    out = (mixed.select("id", "source")
-           .join(packed, "id")
-           .select(F.col("id").alias(id_col), "source", "tokens", "shard",
-                   "offset", "first_chunk", "last_chunk", "n_chunks")
-           .persist())
-    # the RETURNED frame is the persisted one (curate's contract: the
-    # caller's documented unpersist() must actually free the cache, and a
-    # derived-frame unpersist would be a silent no-op); materialize it
-    # before releasing the parent so the packed count is also audited
-    report["packed"] = out.count()
-    mixed.unpersist()
+    out, obs = observed(
+        mixed.select("id", "source").join(packed, "id")
+        .select(F.col("id").alias(id_col), "source", "tokens", "shard",
+                "offset", "first_chunk", "last_chunk", "n_chunks"))
+    out, report["packed"] = out.localCheckpoint(eager=True), obs.get["n"]
     return out, report

@@ -3009,10 +3009,6 @@ def q73(spark, sf_dir):
     bench = d.filter(F.pmod("doc_id", F.lit(_PREP_BENCH_MOD)) == 0)
     out, _report = pretrain_prep(d, bench, capacity=_PREP_CAP,
                                  shards=_PREP_SHARDS, gram_n=_PREP_GRAM_N)
-    # registry entries must not leak session caches: release the recipe's
-    # persisted result here — the driver's single collect recomputes the
-    # (deterministic) lineage once instead of pinning a cache forever
-    out.unpersist()
     return out
 
 

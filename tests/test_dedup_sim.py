@@ -426,6 +426,57 @@ def test_cc_star_matches_hashmin_and_handles_chains(spark):
         assert a == b, (trial, sorted(a - b)[:5], sorted(b - a)[:5])
 
 
+def test_observed_count_equals_count(spark):
+    from webextract.dedup import observed
+
+    # the last two are empty, the last one provably so to the optimizer:
+    # the observation must still be filled, or ``obs.get`` would block
+    for df in (spark.range(37).filter(F.col("id") % 3 == 0),
+               spark.createDataFrame([], "id long"),
+               spark.range(10).filter(F.lit(False))):
+        got, obs = observed(df)
+        got = got.localCheckpoint(eager=True)
+        assert obs.get["n"] == df.count() == got.count()
+
+
+def test_cc_over_empty_vertex_set_converges(spark):
+    from webextract.dedup import (connected_components,
+                                  connected_components_star, observed)
+
+    empty = spark.createDataFrame([], "id_a long, id_b long")
+    verts = spark.createDataFrame([], "id long")
+    # the label sum of an empty set is NULL before AND after the round, so
+    # the one round max_iter=0 grants must read as the fixpoint
+    summed, obs = observed(
+        verts, F.sum(F.col("id").cast("decimal(38,0)")).alias("s"))
+    summed.localCheckpoint(eager=True)
+    assert obs.get["s"] is None
+    assert connected_components(empty, vertices=verts, max_iter=0).collect() == []
+    assert connected_components_star(empty, vertices=verts,
+                                     max_iter=0).collect() == []
+
+
+def test_minhash_signatures_aggregate_once_over_checkpoint(spark):
+    """Over a local checkpoint (curate's stage boundary) the four reads of
+    the signature table share ONE signature exchange; over a persist()ed
+    frame AQE plans each cache scan as its own query stage and nothing is
+    reused, so the 64-hash aggregate runs four times."""
+    base = " ".join(f"w{i}" for i in range(40))
+    rows = ([(f"u{i}", f"{base} extra{i % 3}") for i in range(12)]
+            + [(f"v{i}", f"other doc {i} " * 5) for i in range(6)])
+    df = spark.createDataFrame(rows, "url string, text string")
+    pairs = minhash_lsh_pairs(df.localCheckpoint(eager=True), n=2)
+    assert pairs.collect()
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    lines = final.splitlines()
+    sig_exchanges = [ln for ln, nxt in zip(lines, lines[1:])
+                     if "Exchange hashpartitioning" in ln
+                     and "partial_min(" in nxt]
+    assert len(sig_exchanges) == 1, final
+    assert sum("ReusedExchange" in ln for ln in lines) >= 3, final
+
+
 def test_strip_common_paragraphs(spark):
     from webextract.dedup import strip_common_paragraphs
 
