@@ -128,64 +128,29 @@ def merge_expr(pair: str, rep_col: str = "rep") -> str:
     return f"replace({one}, {search}, {repl})"
 
 
-def bpe_train(docs: DataFrame, *, n_merges: int,
+def bpe_train(docs: DataFrame, *, n_merges: int, batch_k: int = 1,
               text_col: str = "text") -> DataFrame:
     """Train ``n_merges`` BPE merges over the corpus; returns the ordered
     merge table (step, left, right, merged, pair_count) — the tokenizer
-    artifact a dataloader consumes."""
-    spark = docs.sparkSession
-    reps = (word_counts(docs, text_col=text_col)
-            .select("cnt", _initial_rep().alias("rep"))
-            .persist())
-    reps.count()
-    merges: list[tuple[int, str, str, str, int]] = []
-    try:
-        for step in range(n_merges):
-            top = (_pair_counts(reps)
-                   .orderBy(F.col("c").desc(), F.col("pair"))
-                   .limit(1).collect())
-            if not top:
-                break
-            pair, c = top[0]["pair"], int(top[0]["c"])
-            left, right = pair.split(SEP)
-            merges.append((step, left, right, left + right, c))
-            # localCheckpoint (eager) materializes AND truncates lineage:
-            # with plain persist the logical plan still nests one replace
-            # layer per round, and by a few hundred merges the driver dies
-            # in plan-tree stringification (measured: JVM heap OOM in
-            # generateTreeString at ~1k merges). Blocks are |vocab|-sized;
-            # superseded ones are freed by the ContextCleaner.
-            nxt = (reps.select("cnt", F.expr(merge_expr(pair)).alias("rep"))
-                   .localCheckpoint(eager=True))
-            reps.unpersist()
-            reps = nxt
-    finally:
-        reps.unpersist()
-    return spark.createDataFrame(
-        merges, "step int, left string, right string, merged string, "
-                "pair_count long")
+    artifact a dataloader consumes.
 
+    Each |vocab| scan selects up to ``batch_k`` symbol-DISJOINT pairs from
+    one frequency snapshot (descending count, lexicographic tie-break) and
+    applies them all before the next scan — cutting driver round-trips from
+    ``n_merges`` to ~``n_merges / batch_k``, the standard distributed-BPE
+    batching. ``batch_k=1`` is classic greedy BPE: the top pair of an
+    empty batch is always disjoint.
 
-def bpe_train_batched(docs: DataFrame, *, n_merges: int, batch_k: int = 8,
-                      text_col: str = "text") -> DataFrame:
-    """BPE training with MULTI-MERGE rounds: each |vocab| scan selects up
-    to ``batch_k`` symbol-DISJOINT pairs from one frequency snapshot
-    (descending count, lexicographic tie-break) and applies them all
-    before the next scan — cutting driver round-trips from ``n_merges``
-    to ~``n_merges / batch_k``, the standard distributed-BPE batching.
-
-    SEMANTICS (deterministic variant, pinned by tests): disjointness makes
-    the batched applications commute and keeps every selected pair's own
-    count exact (merging (a,b) only perturbs counts of pairs containing a
-    or b), so each batch equals sequentially applying its members in
-    snapshot order. The sequence can diverge from single-merge
-    :func:`bpe_train` only when a merge's NEWLY CREATED pair (x, ab)
-    outranks a later batch member — classic greedy would take (x, ab)
-    next, the batch has already committed. ``batch_k=1`` is exactly
-    classic (differential-tested); larger k is the documented
-    throughput/fidelity trade every distributed trainer makes. Output
-    schema matches :func:`bpe_train` (step = global merge index in
-    applied order; pair_count = the snapshot count).
+    SEMANTICS for ``batch_k > 1`` (deterministic variant, pinned by tests):
+    disjointness makes the batched applications commute and keeps every
+    selected pair's own count exact (merging (a,b) only perturbs counts of
+    pairs containing a or b), so each batch equals sequentially applying
+    its members in snapshot order. The sequence can diverge from classic
+    only when a merge's NEWLY CREATED pair (x, ab) outranks a later batch
+    member — classic greedy would take (x, ab) next, the batch has already
+    committed; the documented throughput/fidelity trade every distributed
+    trainer makes. step = global merge index in applied order; pair_count
+    = the snapshot count.
     """
     spark = docs.sparkSession
     reps = (word_counts(docs, text_col=text_col)
@@ -222,9 +187,12 @@ def bpe_train_batched(docs: DataFrame, *, n_merges: int, batch_k: int = 8,
                 left, right = pair.split(SEP)
                 merges.append((len(merges), left, right, left + right, c))
                 rep_sql = merge_expr(pair, rep_sql)
-            # eager localCheckpoint: see bpe_train — truncates the
-            # one-replace-layer-per-round logical plan that OOMs the
-            # driver's plan stringification at production merge counts
+            # localCheckpoint (eager) materializes AND truncates lineage:
+            # with plain persist the logical plan still nests one replace
+            # layer per round, and by a few hundred merges the driver dies
+            # in plan-tree stringification (measured: JVM heap OOM in
+            # generateTreeString at ~1k merges). Blocks are |vocab|-sized;
+            # superseded ones are freed by the ContextCleaner.
             nxt = (reps.select("cnt", F.expr(rep_sql).alias("rep"))
                    .localCheckpoint(eager=True))
             reps.unpersist()

@@ -644,14 +644,6 @@ def q14(spark, sf_dir):
     )
 
 
-def _dot_expr(a: str, b: str):
-    """Sequential left-fold dot product (matches DuckDB list_dot_product)."""
-    return F.expr(
-        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-
-
 @register(
     "q15_cosine_topk",
     """
@@ -672,19 +664,15 @@ def _dot_expr(a: str, b: str):
     doc="brute-force cosine top-k ANN baseline over the embedding column",
 )
 def q15(spark, sf_dir):
+    from .sim import cosine_vs_query_exact
+
     e = _t(spark, sf_dir, "embeddings")
     qrow = e.filter(F.col("vec_id") == 0).select("embedding").first()
     qv = [float(x) for x in qrow.embedding]
-    lit_q = F.array(*[F.lit(x).cast("double") for x in qv])
-    scored = (
-        e.filter(F.col("vec_id") != 0)
-        .withColumn("qv", lit_q)
-        .withColumn(
-            "cos",
-            _dot_expr("embedding", "qv")
-            / (F.sqrt(_dot_expr("embedding", "embedding")) * F.sqrt(_dot_expr("qv", "qv"))),
-        )
-    )
+    # ordered by the ROUNDED cosine (the oracle's tie-break), unlike
+    # sim.cosine_topk's raw ordering
+    scored = (e.filter(F.col("vec_id") != 0)
+              .withColumn("cos", cosine_vs_query_exact(qv, "embedding")))
     return (
         scored.orderBy(F.round(F.col("cos"), 9).desc(), F.col("vec_id"))
         .limit(20)
@@ -1823,7 +1811,8 @@ _IVF_NPROBE, _IVF_K = 3, 20
 def _centroid_case_sql(C: list[list[float]]):
     """(dcols, cell_case, lits) for a literal-centroid CASE argmax over a
     relation exposing the vector as ``e`` — the SINGLE DuckDB twin of
-    sim.ivf_assign_expr's first-max tie-break (``>=``, lowest index wins).
+    sim.ivf_assign_pandas_exact's first-max tie-break (``>=``, lowest index
+    wins).
     q26 (IVF probe) and q68 (SemDeDup clustering) both depend on this
     staying bit-identical to the engine fold; keep it in one place for the
     same reason _md5h_sql exists."""
@@ -1848,7 +1837,7 @@ def _q26_sql() -> str:
     to a trained model): the L2-normalized centroids from
     :mod:`webextract.ivf_snapshot` are embedded as literals in BOTH engines,
     cell assignment is a first-max CASE over sequential-fold dots (bit-equal
-    to sim.ivf_assign_expr), probe ranking orders cells by dot(centroid,
+    to sim.ivf_assign_pandas_exact), probe ranking orders cells by dot(centroid,
     query) with the same tie-break, and the final cosine is the q15-proven
     list_dot_product form — every float op has an identical twin, so rows,
     cells, and hashes all agree.
@@ -1893,9 +1882,8 @@ def _q26_sql() -> str:
         "served-index path: centroids trained once (tools/train_ivf.py), "
         "embedded as literals in both engines, assignment + probing + "
         "scoring all bit-reproducible (sequential folds) — full oracle. "
-        "The trained path (kmeans_centroids + pandas-UDF assignment) is "
-        "pytest-verified (test_ivf_topk_matches_exact_on_clusters, "
-        "test_ivf_served_fold_matches_pandas_assign).",
+        "The trained path (kmeans_centroids + normalize_centroids) is "
+        "pytest-verified (test_ivf_topk_matches_exact_on_clusters).",
 )
 def q26(spark, sf_dir):
     from .ivf_snapshot import IVF_CENTROIDS_SF001
@@ -1903,12 +1891,8 @@ def q26(spark, sf_dir):
 
     e = _t(spark, sf_dir, "embeddings")
     q = [float(x) for x in e.filter(F.col("vec_id") == 0).first().embedding]
-    # r6: assign="exact" — the vectorized bit-identical kernels (same
-    # sequential folds, same first-argmax) instead of the interpreted
-    # CASE-chain + per-row fold scoring; the oracle SQL still mirrors the
-    # "fold" expression form, which these kernels reproduce bit-for-bit
     out = ivf_topk(e, q, k=_IVF_K, nprobe=_IVF_NPROBE,
-                   centroids=IVF_CENTROIDS_SF001, assign="exact")
+                   centroids=IVF_CENTROIDS_SF001)
     return out.select("vec_id", "cell",
                       F.round("cosine", 9).cast("double").alias("cosine"))
 

@@ -1,15 +1,16 @@
 """Embedding similarity search: brute-force cosine top-k + LSH-bucketed ANN.
 
 Implementations over an ``array<float>`` embedding column. Float semantics
-are pinned to the sequential left fold everywhere (Spark
-``aggregate``/``zip_with`` ≡ DuckDB ``list_dot_product``); since r6 the hot
-paths compute that fold VECTORIZED in Arrow batches (``np.cumsum`` is
-bit-identical to the fold — see the kernel notes below), while the all-JVM
-expression forms remain for the oracle-SQL derivations:
+are pinned to the sequential left fold (Spark ``aggregate``/``zip_with`` ≡
+DuckDB ``list_dot_product``). Every kernel here computes that fold
+vectorized in Arrow batches (``np.cumsum`` is bit-identical to the fold —
+see the kernel notes below), including the SQL edge semantics of NULL,
+ragged and NULL-element vectors; ``tests/test_dedup_sim.py`` keeps the
+all-JVM expression forms as the reference the kernels are pinned against:
 
 - :func:`cosine_topk`      — exact top-k vs a query vector (the baseline);
-  sequential-fold dot products (``aggregate``/``zip_with``) so results are
-  bit-reproducible and oracle-comparable.
+  sequential-fold dot products so results are bit-reproducible and
+  oracle-comparable.
 - :func:`ann_topk`         — random-hyperplane LSH bucketing: probe only the
   buckets the query falls in; at 10^12 scale the bucket column is the
   partition key, so a query touches a bounded slice of the corpus.
@@ -28,37 +29,68 @@ fixed Lloyd iteration count), so cell assignments are reproducible.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 
-def _dot(a: str, b: str):
-    return F.expr(
-        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
+def _has_null_elem(vec_col: str):
+    """JVM-side flag: the array holds a NULL element. Arrow hands such an
+    element to pandas as NaN, indistinguishable from NaN data, but in the
+    SQL fold it nulls the whole dot product — so flagged rows take each
+    kernel's NULL-vector path."""
+    return F.coalesce(F.exists(F.col(vec_col), lambda x: x.isNull()),
+                      F.lit(False))
+
+
+def _fold_rows(v: pd.Series, bad: pd.Series, dim: int):
+    """(ok, E) for one Arrow batch: ``ok`` marks rows the SQL fold computes
+    (non-NULL, length ``dim``, no NULL element); ``E`` stacks them as a
+    float64 matrix. Every other row's fold is NULL."""
+    arrs = v.to_numpy()
+    ok = np.fromiter((w is not None and len(w) == dim for w in arrs),
+                     dtype=bool, count=len(arrs)) & ~bad.to_numpy(dtype=bool)
+    E = (np.stack([np.asarray(w, dtype=np.float64) for w in arrs[ok]])
+         if ok.any() else np.zeros((0, dim)))
+    return ok, E
+
+
+def _nan_keeping(values: np.ndarray, null: np.ndarray) -> pd.Series:
+    """float64 result column whose NULLs are exactly ``null``: Spark turns
+    every NaN of a plain float Series into NULL, but SQL NaN stays NaN."""
+    return pd.Series(pd.arrays.FloatingArray(values, null))
+
+
+def normalize_centroids(centroids: list[list[float]]) -> list[list[float]]:
+    """L2-normalize with pure-python sequential arithmetic, so the doubles
+    are engine-neutral (the :mod:`webextract.ivf_snapshot` form). Cell
+    assignment is argmax of dot, which equals argmax of cosine only at
+    constant ``|c_i|``; a zero centroid stays zero."""
+    out = []
+    for c in centroids:
+        s = 0.0
+        for x in c:
+            s += float(x) * float(x)
+        n = math.sqrt(s) or 1.0
+        out.append([float(x) / n for x in c])
+    return out
+
+
+def _topk(scored: DataFrame, id_col: str, extra: list[str], k: int) -> DataFrame:
+    return (
+        scored.select(id_col, *extra, "cosine")
+        .orderBy(F.col("cosine").desc(), F.col(id_col))
+        .limit(k)
     )
-
-
-def _norm(a: str):
-    return F.sqrt(_dot(a, a))
-
-
-def _lit_vec(vec: list[float]):
-    return F.array(*[F.lit(float(x)).cast("double") for x in vec])
 
 
 def cosine_topk(df: DataFrame, query_vec: list[float], *, k: int = 10,
                 vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
     """Exact cosine top-k: one scan, one top-k sort (no shuffle of vectors)."""
-    scored = df.withColumn("qv", _lit_vec(query_vec)).withColumn(
-        "cosine", _dot(vec_col, "qv") / (_norm(vec_col) * _norm("qv"))
-    )
-    return (
-        scored.select(id_col, "cosine")
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
+    scored = df.withColumn("cosine", cosine_vs_query_exact(query_vec, vec_col))
+    return _topk(scored, id_col, [], k)
 
 
 def _hyperplane(plane: int, dim: int, seed: int = 7) -> list[float]:
@@ -67,23 +99,6 @@ def _hyperplane(plane: int, dim: int, seed: int = 7) -> list[float]:
 
     r = random.Random(f"{seed}|{plane}")
     return [r.gauss(0.0, 1.0) for _ in range(dim)]
-
-
-def lsh_bucket_col(vec_col: str, dim: int, n_planes: int = 8, seed: int = 7):
-    """Sign-of-projection bit code: bucket = Σ (dot(v, p_i) > 0) << i."""
-    code = None
-    for p in range(n_planes):
-        plane = _hyperplane(p, dim, seed)
-        proj = F.expr(
-            "aggregate(zip_with({v}, array({plane}), (x, y) -> CAST(x AS DOUBLE) * y), "
-            "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)".format(
-                v=vec_col, plane=", ".join(f"CAST({x!r} AS DOUBLE)" for x in plane)
-            )
-        )
-        bit = F.when(proj > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        term = F.shiftleft(bit, p)
-        code = term if code is None else code.bitwiseXOR(term)
-    return code
 
 
 def ann_topk(df: DataFrame, query_vec: list[float], *, k: int = 10,
@@ -97,11 +112,8 @@ def ann_topk(df: DataFrame, query_vec: list[float], *, k: int = 10,
     probed buckets.
     """
     dim = len(query_vec)
-    # r6: vectorized bucket + scoring kernels — bit-identical to the SQL
-    # fold expressions (see lsh_bucket_pandas / cosine_vs_query_exact),
-    # one Arrow pass instead of per-row interpreted folds
     bucketed = df.withColumn(
-        "bucket", lsh_bucket_pandas(dim, n_planes, seed)(F.col(vec_col)))
+        "bucket", lsh_bucket_pandas(vec_col, dim, n_planes, seed))
     # query bucket, computed driver-side with the same planes
     qcode = 0
     for p in range(n_planes):
@@ -109,84 +121,21 @@ def ann_topk(df: DataFrame, query_vec: list[float], *, k: int = 10,
         proj = sum(float(x) * y for x, y in zip(query_vec, plane))
         qcode |= (1 if proj > 0 else 0) << p
     probe = F.bit_count(F.col("bucket").bitwiseXOR(F.lit(qcode))) <= probe_hamming
-    cand = bucketed.filter(probe)
-    scored = cand.withColumn(
+    scored = bucketed.filter(probe).withColumn(
         "cosine", cosine_vs_query_exact(query_vec, vec_col))
-    return (
-        scored.select(id_col, "bucket", "cosine")
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
-def ivf_cell_col(centroids: list[list[float]], vec_col: str = "embedding"):
-    """Column assigning each vector to its max-cosine centroid (its IVF cell).
-
-    Vectorized: one numpy matmul per Arrow batch inside a pandas UDF; the
-    C×dim centroid matrix ships once per executor in the UDF closure.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    cm = np.asarray(centroids, dtype=np.float64)
-    cm = cm / np.maximum(np.linalg.norm(cm, axis=1, keepdims=True), 1e-12)
-
-    @pandas_udf("int")
-    def _assign(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype="int32")
-        m = np.stack([np.asarray(x, dtype=np.float64) for x in v])
-        m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        return pd.Series(np.argmax(m @ cm.T, axis=1).astype("int32"))
-
-    return _assign(F.col(vec_col))
-
-
-def _dot_lit(vec_col: str, vals: list[float]):
-    """Sequential-fold dot product against a literal vector — the same fold
-    as :func:`_dot`, so it is bit-equal to DuckDB ``list_dot_product`` on the
-    same doubles (the q15/q19-proven parity trick)."""
-    arr = ", ".join(f"CAST({float(x)!r} AS DOUBLE)" for x in vals)
-    return F.expr(
-        f"aggregate(zip_with({vec_col}, array({arr}), "
-        f"(x, y) -> CAST(x AS DOUBLE) * y), "
-        f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-
-
-def ivf_assign_expr(centroids: list[list[float]], vec_col: str = "embedding"):
-    """All-JVM IVF cell assignment: ``argmax_i dot(v, c_i)`` via sequential
-    folds + a first-max CASE chain (ties → lowest cell index, matching
-    ``np.argmax``).
-
-    The oracle-checkable twin of :func:`ivf_cell_col`: every float op has an
-    identical DuckDB form, so cell ids are bit-reproducible across engines —
-    no pandas/numpy in the plan at all. Expects **L2-normalized** centroids
-    (argmax of dot equals argmax of cosine only at constant ``|c_i|``);
-    :mod:`webextract.ivf_snapshot` stores them normalized.
-    """
-    d = [_dot_lit(vec_col, c) for c in centroids]
-    chain = None
-    for i in range(len(d) - 1):
-        rest = d[i + 1:]
-        best_rest = rest[0] if len(rest) == 1 else F.greatest(*rest)
-        cond = d[i] >= best_rest
-        chain = F.when(cond, i) if chain is None else chain.when(cond, i)
-    if chain is None:  # single centroid
-        return F.lit(0).cast("int")
-    return chain.otherwise(len(d) - 1).cast("int")
+    return _topk(scored, id_col, ["bucket"], k)
 
 
 def ivf_assign_pandas_exact(centroids: list[list[float]],
                             vec_col: str = "embedding"):
-    """Vectorized twin of :func:`ivf_assign_expr` — bit-identical cell ids.
+    """IVF cell assignment: ``argmax_i dot(v, c_i)``, ties → lowest index.
 
     Per row: the C dot products are sequential left-folds (cumsum — the same
     accumulation order as the SQL fold and DuckDB), and the winner is the
-    FIRST argmax (``np.argmax``), exactly the CASE chain's
-    ``d[i] >= greatest(d[i+1:])`` pick. One numpy pass per Arrow batch
-    replaces the O(C²·dim) interpreted expression tree per row (the CASE
-    chain re-evaluates every later dot at each level). Expects the same
-    L2-normalized centroids as :func:`ivf_assign_expr`.
+    FIRST argmax (``np.argmax``) — the oracle SQL's first-max CASE chain
+    ``d[i] >= greatest(d[i+1:])``. Rows whose fold is NULL (NULL, ragged or
+    NULL-element vectors) fall through that chain to cell C-1. Expects
+    **L2-normalized** centroids (:func:`normalize_centroids`).
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -194,18 +143,10 @@ def ivf_assign_pandas_exact(centroids: list[list[float]],
                     dtype=np.float64)
 
     @pandas_udf("int")
-    def _assign(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype="int32")
-        arrs = v.to_numpy()
-        # NULL / wrong-length vectors: every fold is NULL, every CASE cond
-        # is NULL, the chain falls through to otherwise(C-1)
-        out = np.full(len(arrs), cm.shape[0] - 1, dtype=np.int32)
-        ok = np.fromiter(
-            (w is not None and len(w) == cm.shape[1] for w in arrs),
-            dtype=bool, count=len(arrs))
+    def _assign(v: pd.Series, bad: pd.Series) -> pd.Series:
+        out = np.full(len(v), cm.shape[0] - 1, dtype=np.int32)
+        ok, E = _fold_rows(v, bad, cm.shape[1])
         if ok.any():
-            E = np.stack([np.asarray(w, dtype=np.float64) for w in arrs[ok]])
             # chunk rows so the (rows × C × dim) product tensor stays small
             cells = np.empty(E.shape[0], dtype=np.int32)
             step = max(1, int(32e6 / (8 * cm.shape[0] * max(cm.shape[1], 1))))
@@ -217,44 +158,38 @@ def ivf_assign_pandas_exact(centroids: list[list[float]],
             out[ok] = cells
         return pd.Series(out)
 
-    return _assign(F.col(vec_col))
+    return _assign(F.col(vec_col), _has_null_elem(vec_col))
 
 
 def cosine_vs_query_exact(query_vec: list[float], vec_col: str = "embedding"):
-    """Vectorized twin of ``_dot(v, qv)/(_norm(v)*_norm(qv))`` against a
-    literal query — bit-identical doubles (sequential folds via cumsum),
-    including the SQL edge semantics: NULL for NULL/ragged vectors (the
-    zip_with NULL tail) and for a zero denominator (Spark x/0 → NULL);
-    NaN data propagates as NaN."""
+    """Cosine against a literal query — ``fold(v·q) / (sqrt(fold(v·v)) *
+    sqrt(fold(q·q)))`` with sequential folds via cumsum, bit-identical to
+    the SQL fold, including its edge semantics: NULL for NULL, ragged and
+    NULL-element vectors (the fold is NULL) and for a zero denominator
+    (x/0 → NULL, as in DuckDB and non-ANSI Spark); NaN data stays NaN."""
     from pyspark.sql.functions import pandas_udf
 
     q = np.asarray([float(x) for x in query_vec], dtype=np.float64)
     qn = float(np.sqrt(np.cumsum(q * q)[-1])) if q.size else 0.0
 
     @pandas_udf("double")
-    def _cos(v: pd.Series) -> pd.Series:
-        n = len(v)
-        if n == 0:
-            return pd.Series([], dtype="float64")
-        arrs = v.to_numpy()
-        ok = np.fromiter(
-            (w is not None and len(w) == q.size for w in arrs),
-            dtype=bool, count=n)
-        out: list = [None] * n
+    def _cos(v: pd.Series, bad: pd.Series) -> pd.Series:
+        cos = np.zeros(len(v))
+        null = np.ones(len(v), dtype=bool)
+        ok, E = _fold_rows(v, bad, q.size)
         if ok.any():
-            E = np.stack([np.asarray(w, dtype=np.float64) for w in arrs[ok]])
             dots = (np.cumsum(E * q[None, :], axis=1)[:, -1]
                     if q.size else np.zeros(E.shape[0]))
             nrm = (np.sqrt(np.cumsum(E * E, axis=1)[:, -1])
                    if q.size else np.zeros(E.shape[0]))
             denom = nrm * qn
-            idxs = np.nonzero(ok)[0]
-            for j, i in enumerate(idxs):
-                d = denom[j]
-                out[i] = None if d == 0 else float(dots[j] / d)
-        return pd.Series(out, dtype=object)
+            nz = denom != 0
+            rows = np.nonzero(ok)[0][nz]
+            cos[rows] = dots[nz] / denom[nz]
+            null[rows] = False
+        return _nan_keeping(cos, null)
 
-    return _cos(F.col(vec_col))
+    return _cos(F.col(vec_col), _has_null_elem(vec_col))
 
 
 def kmeans_centroids(df: DataFrame, *, n_centroids: int = 8, n_iter: int = 3,
@@ -265,10 +200,12 @@ def kmeans_centroids(df: DataFrame, *, n_centroids: int = 8, n_iter: int = 3,
     Init: the ``n_centroids`` rows with the smallest ``xxhash64(id, seed)``
     — a deterministic pseudo-random sample taken with one top-k scan (never
     a corpus collect). Each Lloyd iteration is two distributed passes:
-    vectorized assignment (:func:`ivf_cell_col`) and an element-wise mean
-    via ``posexplode`` + ``groupBy(cell, pos)`` — the shuffle output is
-    C×dim rows regardless of corpus size, so iterations cost one scan each
-    at any scale. Empty cells keep their previous centroid.
+    assignment to the normalized current centroids
+    (:func:`ivf_assign_pandas_exact`) and an element-wise mean via
+    ``posexplode`` + ``groupBy(cell, pos)`` — the shuffle output is C×dim
+    rows regardless of corpus size, so iterations cost one scan each at any
+    scale. Empty cells keep their previous centroid. Returns the raw
+    (unnormalized) means.
     """
     init = (
         df.select(F.col(vec_col).alias("v"),
@@ -278,7 +215,8 @@ def kmeans_centroids(df: DataFrame, *, n_centroids: int = 8, n_iter: int = 3,
     cents = [[float(x) for x in r.v] for r in init]
     for _ in range(n_iter):
         assigned = df.select(
-            ivf_cell_col(cents, vec_col).alias("cell"),
+            ivf_assign_pandas_exact(normalize_centroids(cents), vec_col)
+            .alias("cell"),
             F.expr(f"transform({vec_col}, x -> CAST(x AS DOUBLE))").alias("v"),
         )
         means = (
@@ -296,68 +234,34 @@ def kmeans_centroids(df: DataFrame, *, n_centroids: int = 8, n_iter: int = 3,
 def ivf_topk(df: DataFrame, query_vec: list[float], *, k: int = 10,
              n_centroids: int = 8, nprobe: int = 2, n_iter: int = 3,
              vec_col: str = "embedding", id_col: str = "vec_id", seed: int = 7,
-             centroids: list[list[float]] | None = None,
-             assign: str = "pandas") -> DataFrame:
+             centroids: list[list[float]] | None = None) -> DataFrame:
     """IVF approximate top-k: probe the ``nprobe`` max-cosine cells only.
 
     At 10^12 scale the cell column is computed once at ingest and the table
     is partitioned by it, so the probe filter below becomes partition
     pruning and a query scans ~``nprobe / n_centroids`` of the corpus.
-    Pass precomputed ``centroids`` to skip training (the served-index path).
-
-    ``assign`` picks the cell-assignment implementation:
-
-    - ``"pandas"`` (default) — :func:`ivf_cell_col`, one numpy matmul per
-      Arrow batch; the production path (C×dim ships once per executor).
-    - ``"fold"``  — :func:`ivf_assign_expr`, sequential-fold dots + CASE
-      argmax, all-JVM and bit-reproducible against the DuckDB oracle; probe
-      ranking is computed with the same pure-python fold. Requires
-      L2-normalized ``centroids`` (the :mod:`webextract.ivf_snapshot` form).
+    Pass precomputed **L2-normalized** ``centroids`` (the
+    :mod:`webextract.ivf_snapshot` form) to skip training — the served-index
+    path; otherwise k-means centroids are trained and normalized here.
+    Probes rank cells by the sequential-fold dot(centroid, query), ties →
+    lowest cell — the same fold the oracle SQL uses.
     """
     if centroids is None:
-        centroids = kmeans_centroids(df, n_centroids=n_centroids, n_iter=n_iter,
-                                     vec_col=vec_col, id_col=id_col, seed=seed)
-    if assign in ("fold", "exact"):
-        qv = [float(x) for x in query_vec]
-        dots = []
-        for i, c in enumerate(centroids):
-            s = 0.0
-            for x, y in zip(c, qv):  # sequential fold ≡ the engine/oracle fold
-                s += float(x) * y
-            dots.append((s, i))
-        probes = [i for _, i in sorted(dots, key=lambda t: (-t[0], t[1]))[:nprobe]]
-        # "exact" (r6): the vectorized kernels — bit-identical cells and
-        # cosines (sequential folds via cumsum), one Arrow pass instead of
-        # the O(C²·dim) interpreted CASE chain + per-row fold expressions;
-        # "fold" keeps the all-JVM expression plan the oracle SQL mirrors.
-        cell = (ivf_assign_pandas_exact(centroids, vec_col)
-                if assign == "exact" else ivf_assign_expr(centroids, vec_col))
-        if assign == "exact":
-            cand = df.withColumn("cell", cell).filter(F.col("cell").isin(probes))
-            scored = cand.withColumn(
-                "cosine", cosine_vs_query_exact(query_vec, vec_col))
-            return (
-                scored.select(id_col, "cell", "cosine")
-                .orderBy(F.col("cosine").desc(), F.col(id_col))
-                .limit(k)
-            )
-    else:
-        cm = np.asarray(centroids, dtype=np.float64)
-        cm = cm / np.maximum(np.linalg.norm(cm, axis=1, keepdims=True), 1e-12)
-        q = np.asarray([float(x) for x in query_vec], dtype=np.float64)
-        q = q / max(float(np.linalg.norm(q)), 1e-12)
-        probes = [int(i) for i in np.argsort(-(cm @ q), kind="stable")[:nprobe]]
-        cell = ivf_cell_col(centroids, vec_col)
-
-    cand = df.withColumn("cell", cell).filter(F.col("cell").isin(probes))
-    scored = cand.withColumn("qv", _lit_vec(query_vec)).withColumn(
-        "cosine", _dot(vec_col, "qv") / (_norm(vec_col) * _norm("qv"))
-    )
-    return (
-        scored.select(id_col, "cell", "cosine")
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
+        centroids = normalize_centroids(kmeans_centroids(
+            df, n_centroids=n_centroids, n_iter=n_iter, vec_col=vec_col,
+            id_col=id_col, seed=seed))
+    qv = [float(x) for x in query_vec]
+    dots = []
+    for i, c in enumerate(centroids):
+        s = 0.0
+        for x, y in zip(c, qv):  # sequential fold ≡ the engine/oracle fold
+            s += float(x) * y
+        dots.append((s, i))
+    probes = [i for _, i in sorted(dots, key=lambda t: (-t[0], t[1]))[:nprobe]]
+    cand = (df.withColumn("cell", ivf_assign_pandas_exact(centroids, vec_col))
+            .filter(F.col("cell").isin(probes)))
+    scored = cand.withColumn("cosine", cosine_vs_query_exact(query_vec, vec_col))
+    return _topk(scored, id_col, ["cell"], k)
 
 
 # ---------------------------------------------------------------------------
@@ -378,11 +282,11 @@ def ivf_topk(df: DataFrame, query_vec: list[float], *, k: int = 10,
 #      DuckDB ``list_dot_product``) for candidate pairs only.
 #
 # Result rows are therefore bit-identical to the join+fold plan, including
-# the edge semantics: rows with NULL vectors never pair (their SQL cosine is
-# NULL), pairs of different-length vectors never pair (zip_with's NULL tail
-# nulls the fold), a zero-norm side yields NULL (Spark x/0 → NULL) and never
-# pairs, and a NaN cosine from NaN data PASSES the >= tau filter (Spark/
-# DuckDB order NaN above every value).
+# the edge semantics: rows with NULL vectors or NULL elements never pair
+# (their SQL cosine is NULL), pairs of different-length vectors never pair
+# (zip_with's NULL tail nulls the fold), a zero-norm side yields NULL (Spark
+# x/0 → NULL) and never pairs, and a NaN cosine from NaN data PASSES the
+# >= tau filter (Spark/DuckDB order NaN above every value).
 # ---------------------------------------------------------------------------
 
 _PAIR_PREFILTER_MARGIN = 1e-6
@@ -439,9 +343,10 @@ def _block_pair_arrays(ids, E, tau: float):
 
 
 def _near_pairs_grouped(v: DataFrame, tau: float, id_type: str) -> DataFrame:
-    """applyInPandas near-pair stage over ``v(id, blk, emb)``; one Arrow
-    batch per block, numpy kernel inside (guide §4.2). ``blk`` must be
-    non-null (null block keys never join in the SQL twin)."""
+    """applyInPandas near-pair stage over ``v(id, blk, emb, bad)``; one
+    Arrow batch per block, numpy kernel inside (guide §4.2). ``blk`` must be
+    non-null (null block keys never join in the SQL form); ``bad`` is the
+    :func:`_has_null_elem` flag."""
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame({"id_a": pd.Series([], dtype=object),
@@ -449,7 +354,7 @@ def _near_pairs_grouped(v: DataFrame, tau: float, id_type: str) -> DataFrame:
                               "cosine": pd.Series([], dtype="float64")})
         vecs = pdf["emb"].to_numpy()
         ok = np.fromiter((w is not None for w in vecs), dtype=bool,
-                         count=len(vecs))
+                         count=len(vecs)) & ~pdf["bad"].to_numpy(dtype=bool)
         if ok.sum() < 2:
             return empty
         ids_all = pdf["id"].to_numpy()[ok]
@@ -470,7 +375,8 @@ def _near_pairs_grouped(v: DataFrame, tau: float, id_type: str) -> DataFrame:
             got = _block_pair_arrays(ids, E, tau)
             if got is not None:
                 frames.append(pd.DataFrame(
-                    {"id_a": got[0], "id_b": got[1], "cosine": got[2]}))
+                    {"id_a": got[0], "id_b": got[1],
+                     "cosine": _nan_keeping(got[2], np.zeros(got[2].size, dtype=bool))}))
         if not frames:
             return empty
         return pd.concat(frames, ignore_index=True)
@@ -479,37 +385,33 @@ def _near_pairs_grouped(v: DataFrame, tau: float, id_type: str) -> DataFrame:
     return v.groupBy("blk").applyInPandas(fn, schema)
 
 
-def lsh_bucket_pandas(dim: int, n_planes: int = 6, seed: int = 7):
-    """Vectorized twin of :func:`lsh_bucket_col`: projections computed with
-    the exact sequential fold (cumsum), so the sign bits — and therefore the
-    bucket ids — are bit-identical to the SQL fold and the DuckDB oracle."""
+def lsh_bucket_pandas(vec_col: str, dim: int, n_planes: int = 6,
+                      seed: int = 7):
+    """Sign-of-projection bit code: bucket = Σ (dot(v, p_i) > 0) << i, the
+    projections computed with the exact sequential fold (cumsum), so the
+    bucket ids are bit-identical to the SQL fold and the DuckDB oracle.
+    Rows whose fold is NULL (NULL, ragged or NULL-element vectors) get
+    bucket 0 — the SQL ``otherwise(0)`` bit default; their pairs are
+    NULL-cosine anyway."""
     planes = np.stack([np.asarray(_hyperplane(p, dim, seed), dtype=np.float64)
                        for p in range(n_planes)])
 
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("long")
-    def _bucket(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype="int64")
-        arrs = v.to_numpy()
-        out = np.zeros(len(arrs), dtype=np.int64)
-        ok = np.fromiter(
-            (w is not None and len(w) == dim for w in arrs), dtype=bool,
-            count=len(arrs))
+    def _bucket(v: pd.Series, bad: pd.Series) -> pd.Series:
+        out = np.zeros(len(v), dtype=np.int64)
+        ok, E = _fold_rows(v, bad, dim)
         if ok.any():
-            E = np.stack([np.asarray(w, dtype=np.float64)
-                          for w in arrs[ok]])
             code = np.zeros(E.shape[0], dtype=np.int64)
             for p in range(n_planes):
                 proj = np.cumsum(E * planes[p][None, :], axis=1)[:, -1]
-                code |= (proj > 0).astype(np.int64) << p
+                # Spark orders NaN above every value: NaN > 0 holds
+                code |= ((proj > 0) | np.isnan(proj)).astype(np.int64) << p
             out[ok] = code
-        # None / wrong-length rows keep bucket 0, matching the SQL
-        # ``otherwise(0)`` bit default; their pairs are NULL-cosine anyway
         return pd.Series(out)
 
-    return _bucket
+    return _bucket(F.col(vec_col), _has_null_elem(vec_col))
 
 
 def pairwise_near(df: DataFrame, *, tau: float, vec_col: str = "embedding",
@@ -530,14 +432,14 @@ def pairwise_near(df: DataFrame, *, tau: float, vec_col: str = "embedding",
         if dim is None:
             dim = len(df.select(vec_col).first()[0])
         df = df.withColumn(
-            "_blk", lsh_bucket_pandas(dim, n_planes, seed)(F.col(vec_col)))
+            "_blk", lsh_bucket_pandas(vec_col, dim, n_planes, seed))
         block = "_blk"
     else:
         block = block_col
     id_type = dict(df.dtypes)[id_col]
     v = df.select(
         F.col(id_col).alias("id"), F.col(block).alias("blk"),
-        F.col(vec_col).alias("emb"),
+        F.col(vec_col).alias("emb"), _has_null_elem(vec_col).alias("bad"),
     ).filter(F.col("blk").isNotNull())
     return _near_pairs_grouped(v, tau, id_type).distinct()
 
@@ -547,7 +449,7 @@ def semdedup(df: DataFrame, *, tau: float,
              n_centroids: int = 8, n_iter: int = 2,
              vec_col: str = "embedding", id_col: str = "vec_id",
              seed: int = 7, mode: str = "minid",
-             cc: str = "auto", cc_max_iter: int = 25) -> DataFrame:
+             cc_max_iter: int = 25) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic dedup by k-means cluster +
     within-cluster cosine pruning.
 
@@ -572,20 +474,20 @@ def semdedup(df: DataFrame, *, tau: float,
       representative. Ids must be INTEGRAL (the CC label arithmetic casts
       to long) — non-integral id columns raise ``TypeError``; key string
       ids by ``xxhash64`` upstream (``"minid"`` accepts any orderable id).
-      CC strategy is picked by ``cc``: ``"auto"`` (default) runs Hash-Min
-      with a ``cc_max_iter`` diameter budget — within-cluster near-dup
-      graphs are quasi-cliques, 2-3 rounds — and on a budget blowout
-      (a drifting-template similarity CHAIN deeper than the budget) falls
-      back to :func:`webextract.dedup.connected_components_star`
-      (O(log^2 n) rounds on any topology); ``"hashmin"`` / ``"star"``
-      force one strategy (hashmin then raises instead of falling back).
+      Components come from Hash-Min with a ``cc_max_iter`` diameter
+      budget — within-cluster near-dup graphs are quasi-cliques, 2-3
+      rounds — and on a budget blowout (a drifting-template similarity
+      CHAIN deeper than the budget) from
+      :func:`webextract.dedup.connected_components_star` instead
+      (O(log^2 n) rounds on any topology).
       Neither keep rule subsumes the other: on edges (1,3),(2,3) minid
       keeps {1,2} while component keeps {1} (2 and 3 share the group
       through 3).
 
-    Scale shape: cluster assignment is the IVF fold (all-JVM, bit
-    reproducible with literal ``centroids``; trains a deterministic k-means
-    when none are given); the pairwise stage is :func:`pairwise_near`'s
+    Scale shape: cluster assignment is :func:`ivf_assign_pandas_exact`
+    (bit-reproducible against the oracle SQL with literal L2-normalized
+    ``centroids``; trains and normalizes a deterministic k-means when none
+    are given); the pairwise stage is :func:`pairwise_near`'s
     blocked self-join ON THE CLUSTER KEY, so candidate cost is bounded by
     cluster co-occupancy, never corpus². At 10^12 scale the cluster id is
     the partition key and each cluster prunes independently — SemDeDup's
@@ -596,24 +498,9 @@ def semdedup(df: DataFrame, *, tau: float,
     best copy, as pipeline.curate does for text near-dup).
     """
     if centroids is None:
-        raw = kmeans_centroids(df, n_centroids=n_centroids,
-                               n_iter=n_iter, vec_col=vec_col,
-                               id_col=id_col, seed=seed)
-        # ivf_assign_expr requires L2-NORMALIZED centroids (argmax of dot
-        # equals argmax of cosine only at constant |c_i|); kmeans_centroids
-        # returns raw element-wise means, so normalize here — with the same
-        # sequential fold the snapshot uses, keeping assignment
-        # deterministic and engine-neutral
-        centroids = []
-        for c in raw:
-            s = 0.0
-            for x in c:
-                s += float(x) * float(x)
-            n = (s ** 0.5) or 1.0
-            centroids.append([float(x) / n for x in c])
-    # bit-identical vectorized assignment (one numpy pass per Arrow batch)
-    # instead of the O(C²·dim)-per-row interpreted CASE chain; the fold twin
-    # ivf_assign_expr stays available for the oracle-SQL derivation
+        centroids = normalize_centroids(kmeans_centroids(
+            df, n_centroids=n_centroids, n_iter=n_iter, vec_col=vec_col,
+            id_col=id_col, seed=seed))
     assigned = df.select(
         F.col(id_col), F.col(vec_col),
         ivf_assign_pandas_exact(centroids, vec_col).alias("cluster"),
@@ -632,23 +519,14 @@ def semdedup(df: DataFrame, *, tau: float,
                 f"type {dt}; connected-components label arithmetic needs "
                 "an integral id — key string ids by xxhash64 upstream "
                 "(mode='minid' accepts any orderable id type)")
-        if cc == "star":
+        try:
+            comp = connected_components(pairs, src="id_a", dst="id_b",
+                                        max_iter=cc_max_iter)
+        except RuntimeError:
+            # diameter blowout (similarity chain): rerun with the
+            # long-chain-safe contraction; same (id, cluster_id =
+            # component min) contract
             comp = connected_components_star(pairs, src="id_a", dst="id_b")
-        elif cc in ("auto", "hashmin"):
-            try:
-                comp = connected_components(pairs, src="id_a", dst="id_b",
-                                            max_iter=cc_max_iter)
-            except RuntimeError:
-                if cc != "auto":
-                    raise
-                # diameter blowout (similarity chain): rerun with the
-                # long-chain-safe contraction; same (id, cluster_id =
-                # component min) contract
-                comp = connected_components_star(pairs, src="id_a",
-                                                 dst="id_b")
-        else:
-            raise ValueError(f"semdedup: unknown cc {cc!r} "
-                             "(expected 'auto', 'hashmin', or 'star')")
         # group min survives: cluster_id IS the component min
         dropped = (comp.filter(F.col("id") != F.col("cluster_id"))
                    .select(F.col("id").alias(id_col)))

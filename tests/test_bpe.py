@@ -262,34 +262,17 @@ def test_bpe_apply_batch_holds_at_production_merge_count(spark):
     assert got == want
 
 
-def test_bpe_train_batched_k1_is_exactly_classic(spark):
-    from webextract.bpe import bpe_train_batched
-
-    rnd = random.Random(7)
-    docs = [(i, " ".join("".join(rnd.choice("abcde") for _ in
-                                 range(rnd.randrange(1, 6)))
-                         for _ in range(rnd.randrange(3, 10))))
-            for i in range(25)]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    a = [tuple(r) for r in bpe_train(df, n_merges=6).orderBy("step").collect()]
-    b = [tuple(r) for r in bpe_train_batched(df, n_merges=6, batch_k=1)
-         .orderBy("step").collect()]
-    assert a == b
-
-
 def test_bpe_train_batched_semantics_pinned(spark):
     """batch_k>1 is the documented frequency-snapshot variant: within a
     batch all pairs come from one snapshot and are symbol-disjoint. Pin
     determinism + the disjointness invariant + that the classic example
     still learns the 'low/new' stem merges."""
-    from webextract.bpe import bpe_train_batched
-
     df = spark.createDataFrame(
         [(i, "low lower lowest new newer newest") for i in range(5)],
         "doc_id long, text string")
-    a = [tuple(r) for r in bpe_train_batched(df, n_merges=8, batch_k=4)
+    a = [tuple(r) for r in bpe_train(df, n_merges=8, batch_k=4)
          .orderBy("step").collect()]
-    b = [tuple(r) for r in bpe_train_batched(df, n_merges=8, batch_k=4)
+    b = [tuple(r) for r in bpe_train(df, n_merges=8, batch_k=4)
          .orderBy("step").collect()]
     assert a == b and len(a) == 8
     assert all(r[4] > 0 for r in a)

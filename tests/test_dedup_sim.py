@@ -12,14 +12,97 @@ from webextract.dedup import (
     simhash_pairs,
 )
 from webextract.sim import (
+    _hyperplane,
     ann_topk,
     cosine_topk,
+    cosine_vs_query_exact,
+    ivf_assign_pandas_exact,
     ivf_topk,
     kmeans_centroids,
+    lsh_bucket_pandas,
     pairwise_near,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
+NAN = float("nan")
+
+
+# ---------------------------------------------------------------------------
+# All-JVM sequential-fold reference forms. Each float op has an identical
+# DuckDB form (list_dot_product), so these are what the oracle SQL mirrors;
+# the vectorized kernels in webextract.sim are pinned bit-identical to them.
+# ---------------------------------------------------------------------------
+
+
+def _dot(a: str, b: str):
+    return F.expr(
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+        f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
+    )
+
+
+def _norm(a: str):
+    return F.sqrt(_dot(a, a))
+
+
+def _lit_vec(vec):
+    return F.array(*[F.lit(float(x)).cast("double") for x in vec])
+
+
+def _dot_lit(vec_col: str, vals):
+    """Sequential-fold dot product against a literal vector."""
+    arr = ", ".join(f"CAST({float(x)!r} AS DOUBLE)" for x in vals)
+    return F.expr(
+        f"aggregate(zip_with({vec_col}, array({arr}), "
+        f"(x, y) -> CAST(x AS DOUBLE) * y), "
+        f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
+    )
+
+
+def lsh_bucket_col(vec_col: str, dim: int, n_planes: int = 8, seed: int = 7):
+    """Sign-of-projection bit code: bucket = Σ (dot(v, p_i) > 0) << i."""
+    code = None
+    for p in range(n_planes):
+        proj = _dot_lit(vec_col, _hyperplane(p, dim, seed))
+        bit = F.when(proj > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
+        term = F.shiftleft(bit, p)
+        code = term if code is None else code.bitwiseXOR(term)
+    return code
+
+
+def ivf_assign_expr(centroids, vec_col: str = "embedding"):
+    """IVF cell assignment via sequential folds + a first-max CASE chain
+    (ties → lowest cell index); the twin of the oracle SQL's
+    ``_centroid_case_sql``. NULL folds fall through to cell C-1."""
+    d = [_dot_lit(vec_col, c) for c in centroids]
+    chain = None
+    for i in range(len(d) - 1):
+        rest = d[i + 1:]
+        best_rest = rest[0] if len(rest) == 1 else F.greatest(*rest)
+        cond = d[i] >= best_rest
+        chain = F.when(cond, i) if chain is None else chain.when(cond, i)
+    if chain is None:  # single centroid
+        return F.lit(0).cast("int")
+    return chain.otherwise(len(d) - 1).cast("int")
+
+
+def _ivf_topk_fold_reference(df, query_vec, *, k, nprobe, centroids,
+                             vec_col="embedding", id_col="vec_id"):
+    """ivf_topk's served path as the all-JVM plan the q26 oracle mirrors."""
+    qv = [float(x) for x in query_vec]
+    dots = []
+    for i, c in enumerate(centroids):
+        s = 0.0
+        for x, y in zip(c, qv):
+            s += float(x) * y
+        dots.append((s, i))
+    probes = [i for _, i in sorted(dots, key=lambda t: (-t[0], t[1]))[:nprobe]]
+    cand = (df.withColumn("cell", ivf_assign_expr(centroids, vec_col))
+            .filter(F.col("cell").isin(probes)))
+    scored = cand.withColumn("qv", _lit_vec(query_vec)).withColumn(
+        "cosine", _dot(vec_col, "qv") / (_norm(vec_col) * _norm("qv")))
+    return (scored.select(id_col, "cell", "cosine")
+            .orderBy(F.col("cosine").desc(), F.col(id_col)).limit(k))
 
 
 @pytest.fixture(scope="module")
@@ -274,18 +357,16 @@ def test_minhash_twin_hash_paths_equal_candidates(docs, n):
 
 
 def test_ivf_served_fold_matches_pandas_assign(spark):
-    """The all-JVM fold assignment (q26's oracle-checkable path) and the
-    numpy pandas-UDF assignment (the production path) agree on cells and
-    results for the served snapshot centroids."""
+    """The all-JVM fold plan (what q26's oracle SQL mirrors) and ivf_topk's
+    pandas-UDF kernels agree on ids, cells and unrounded cosines for the
+    served snapshot centroids."""
     from webextract.ivf_snapshot import IVF_CENTROIDS_SF001
 
     e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     q = [float(x) for x in e.filter("vec_id = 0").first().embedding]
     kw = dict(k=20, nprobe=3, centroids=IVF_CENTROIDS_SF001)
-    fold = [(r.vec_id, r.cell, round(r.cosine, 9)) for r in
-            ivf_topk(e, q, assign="fold", **kw).collect()]
-    pnd = [(r.vec_id, r.cell, round(r.cosine, 9)) for r in
-           ivf_topk(e, q, assign="pandas", **kw).collect()]
+    fold = [tuple(r) for r in _ivf_topk_fold_reference(e, q, **kw).collect()]
+    pnd = [tuple(r) for r in ivf_topk(e, q, **kw).collect()]
     assert fold == pnd
     assert len(fold) == 20
     assert len({c for _, c, _ in fold}) <= 3  # probed cells only
@@ -293,13 +374,13 @@ def test_ivf_served_fold_matches_pandas_assign(spark):
 
 def test_ivf_assign_expr_first_max_tiebreak(spark):
     """Equal-score cells resolve to the LOWEST index (np.argmax semantics)
-    in the fold path — the CASE chain's arm order is load-bearing for
-    oracle parity."""
-    from webextract.sim import ivf_assign_expr
-
+    in the fold reference and the kernel — the CASE chain's arm order is
+    load-bearing for oracle parity."""
     df = spark.createDataFrame([(1, [1.0, 0.0])], "vec_id int, embedding array<double>")
     cents = [[1.0, 0.0], [1.0, 0.0], [0.0, 1.0]]  # 0 and 1 tie exactly
-    assert df.withColumn("cell", ivf_assign_expr(cents)).first().cell == 0
+    got = df.select(ivf_assign_expr(cents).alias("a"),
+                    ivf_assign_pandas_exact(cents).alias("b")).first()
+    assert (got.a, got.b) == (0, 0)
 
 
 def test_dedup_against_index(docs, spark):
@@ -532,8 +613,6 @@ def _pairwise_near_sql_reference(df, *, tau, block_col, id_col="vec_id",
                                  vec_col="embedding"):
     """The r5 implementation (self-join on the block key + interpreted
     aggregate/zip_with fold), kept verbatim as the equivalence reference."""
-    from webextract.sim import _dot, _norm
-
     v = df.select(
         F.col(id_col).alias("id"), F.col(block_col).alias("blk"),
         F.expr(f"transform({vec_col}, x -> CAST(x AS DOUBLE))").alias("e"),
@@ -591,9 +670,10 @@ def test_pairwise_near_kernel_threshold_boundary_exact(spark):
 
 
 def test_pairwise_near_kernel_edge_rows_match_sql(spark):
-    """NULL vectors, empty arrays, ragged lengths, NULL block keys: the
-    kernel must reproduce the SQL join's edge semantics (none of these rows
-    ever emits a pair; same-length clean rows still do)."""
+    """NULL vectors, NULL elements, NaN data, empty arrays, ragged lengths,
+    NULL block keys: the kernel must reproduce the SQL join's edge semantics
+    (none of these rows ever emits a pair, except that a NaN cosine passes
+    ``>= tau``; same-length clean rows still do)."""
     rows = [
         (1, 0, [1.0, 2.0, 3.0]),
         (2, 0, [1.0, 2.0, 3.0]),     # pairs with 1
@@ -603,23 +683,24 @@ def test_pairwise_near_kernel_edge_rows_match_sql(spark):
         (6, 0, [1.0, 2.0]),          # ...but pairs with 5
         (7, None, [1.0, 2.0, 3.0]),  # NULL block never joins
         (8, 1, [0.5, 0.5, 0.5]),     # lone row in its block
+        (9, 0, [1.0, None, 3.0]),    # NULL element: NULL fold, no pairs
+        (10, 0, [NAN, 1.0, 1.0]),    # NaN data: NaN cosine passes >= tau
     ]
     df = spark.createDataFrame(
         rows, "vec_id long, label int, embedding array<float>")
-    new = {(x.id_a, x.id_b, x.cosine)
+    new = {(x.id_a, x.id_b, repr(x.cosine))
            for x in pairwise_near(df, tau=0.9, block_col="label").collect()}
-    ref = {(x.id_a, x.id_b, x.cosine)
+    ref = {(x.id_a, x.id_b, repr(x.cosine))
            for x in _pairwise_near_sql_reference(
                df, tau=0.9, block_col="label").collect()}
     assert new == ref
-    assert {(a, b) for a, b, _ in new} == {(1, 2), (5, 6)}
+    assert {(a, b) for a, b, _ in new} == {(1, 2), (5, 6), (1, 10), (2, 10)}
 
 
 def test_ivf_assign_pandas_exact_matches_fold_expr(spark):
     """Vectorized IVF assignment == the CASE-chain fold expression on
-    random data, exact ties (first-max), and NULL/ragged vectors."""
-    from webextract.sim import ivf_assign_expr, ivf_assign_pandas_exact
-
+    random data, exact ties (first-max), and NULL/ragged/NULL-element
+    vectors."""
     r = random.Random("r6-assign")
     cents = [[r.gauss(0, 1) for _ in range(9)] for _ in range(6)]
     # normalize like ivf_snapshot does
@@ -628,56 +709,53 @@ def test_ivf_assign_pandas_exact_matches_fold_expr(spark):
     rows += [(900, cents[2][:]),          # exact centroid hit
              (901, None),                 # NULL vector → otherwise(C-1)
              (902, [1.0, 2.0]),           # ragged → otherwise(C-1)
-             (903, [0.0] * 9)]            # all-zero → all dots 0.0 → cell 0
+             (903, [0.0] * 9),            # all-zero → all dots 0.0 → cell 0
+             (904, [1.0, None, 3.0] + [0.5] * 6),  # NULL element → C-1
+             (905, [NAN] * 9)]            # NaN data: NaN >= NaN → cell 0
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     got = df.select(
         "vec_id",
         ivf_assign_expr(cents).alias("a"),
         ivf_assign_pandas_exact(cents).alias("b")).collect()
     assert all(x.a == x.b for x in got)
-    assert {x.b for x in got if x.vec_id in (901, 902)} == {len(cents) - 1}
+    assert {x.b for x in got if x.vec_id in (901, 902, 904)} == {len(cents) - 1}
 
 
 def test_lsh_bucket_pandas_matches_sql_fold(spark):
-    from webextract.sim import lsh_bucket_col, lsh_bucket_pandas
-
     r = random.Random("r6-lsh")
     dim = 21
     rows = [(i, [r.gauss(0, 1) for _ in range(dim)]) for i in range(300)]
+    rows += [(900, [1.0, None, 3.0] + [-1.0] * (dim - 3)),  # NULL element
+             (901, [NAN] + [-1.0] * (dim - 1))]  # NaN data: NaN > 0 holds
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     got = df.select(
         lsh_bucket_col("embedding", dim, 6, 7).alias("a"),
-        lsh_bucket_pandas(dim, 6, 7)(F.col("embedding")).alias("b")).collect()
+        lsh_bucket_pandas("embedding", dim, 6, 7).alias("b")).collect()
     assert all(x.a == x.b for x in got)
 
 
 def test_ivf_topk_exact_assign_matches_fold(spark):
-    """assign='exact' (vectorized kernels) must return the identical rows —
-    ids, cells, and unrounded cosine doubles — as assign='fold' (the
-    all-JVM expression plan the oracle SQL mirrors)."""
-    from webextract.sim import ivf_topk
-
+    """ivf_topk (vectorized kernels) must return the identical rows — ids,
+    cells, and unrounded cosine doubles — as the all-JVM fold plan the
+    oracle SQL mirrors."""
     r = random.Random("r6-ivf-exact")
     cents = [[r.gauss(0, 1) for _ in range(8)] for _ in range(5)]
     cents = [[x / (sum(y * y for y in c) ** 0.5) for x in c] for c in cents]
     rows = [(i, [r.gauss(0, 1) for _ in range(8)]) for i in range(300)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     q = rows[3][1]
-    a = ivf_topk(df, q, k=25, nprobe=2, centroids=cents,
-                 assign="fold").collect()
-    b = ivf_topk(df, q, k=25, nprobe=2, centroids=cents,
-                 assign="exact").collect()
+    a = _ivf_topk_fold_reference(df, q, k=25, nprobe=2,
+                                 centroids=cents).collect()
+    b = ivf_topk(df, q, k=25, nprobe=2, centroids=cents).collect()
     assert [tuple(x) for x in a] == [tuple(x) for x in b]
 
 
 def test_cosine_vs_query_exact_matches_fold_expr(spark):
-    from pyspark.sql import functions as F
-
-    from webextract.sim import _dot, _lit_vec, _norm, cosine_vs_query_exact
-
     r = random.Random("r6-cosq")
     rows = [(i, [r.gauss(0, 1) for _ in range(11)]) for i in range(200)]
-    rows += [(900, None), (901, []), (902, [1.0, 2.0])]  # NULL/zero/ragged
+    rows += [(900, None), (901, []), (902, [1.0, 2.0]),  # NULL/zero/ragged
+             (903, [1.0, None, 3.0] + [0.5] * 8),        # NULL element
+             (904, [NAN] + [0.5] * 10)]                   # NaN data → NaN
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     q = rows[0][1]
     ref = (df.withColumn("qv", _lit_vec(q))
@@ -687,7 +765,7 @@ def test_cosine_vs_query_exact_matches_fold_expr(spark):
                    (_dot("e", "qv") / (_norm("e") * _norm("qv")))
                    .alias("c")))
     got = df.select("vec_id", cosine_vs_query_exact(q).alias("c"))
-    a = {(x.vec_id, x.c) for x in ref.collect()}
-    b = {(x.vec_id, x.c) for x in got.collect()}
+    a = {(x.vec_id, repr(x.c)) for x in ref.collect()}
+    b = {(x.vec_id, repr(x.c)) for x in got.collect()}
     assert a == b
-    assert (900, None) in b and (901, None) in b and (902, None) in b
+    assert {(i, "None") for i in (900, 901, 902, 903)} | {(904, "nan")} <= b

@@ -3,9 +3,10 @@
 
 Runs :func:`webextract.sim.kmeans_centroids` once over the driver's
 embeddings table (sf0.01 — the correctness-gate scale), L2-normalizes the
-centroids with PURE-PYTHON sequential arithmetic (so the stored floats are
-the exact doubles both engines will consume — no numpy reduction order
-involved), and writes ``src/webextract/ivf_snapshot.py``.
+centroids with :func:`webextract.sim.normalize_centroids` (PURE-PYTHON
+sequential arithmetic, so the stored floats are the exact doubles both
+engines will consume — no numpy reduction order involved), and writes
+``src/webextract/ivf_snapshot.py``.
 
 This is the q19 hyperplane trick applied to a data-dependent model: q19's
 planes are seed-derived, so both engines can re-derive them; IVF centroids
@@ -20,7 +21,6 @@ Usage: python tools/train_ivf.py [--sf /root/testdata/sf0.01]
 from __future__ import annotations
 
 import argparse
-import math
 import os
 import sys
 
@@ -37,7 +37,7 @@ def main():
     args = ap.parse_args()
 
     from webextract.session import get_spark
-    from webextract.sim import kmeans_centroids
+    from webextract.sim import kmeans_centroids, normalize_centroids
 
     spark = get_spark(app="train-ivf", master="local[8]", shuffle_partitions=8)
     e = spark.read.parquet(f"{args.sf}/embeddings.parquet")
@@ -45,13 +45,7 @@ def main():
                              id_col="vec_id", seed=SEED)
     spark.stop()
 
-    normed = []
-    for c in cents:
-        s = 0.0
-        for x in c:  # sequential fold — deterministic, engine-independent
-            s += float(x) * float(x)
-        nrm = math.sqrt(s)
-        normed.append([float(x) / nrm for x in c])
+    normed = normalize_centroids(cents)
 
     out = os.path.join(os.path.dirname(__file__), "..", "src", "webextract",
                        "ivf_snapshot.py")
