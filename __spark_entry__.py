@@ -3,10 +3,11 @@
 ``entry(spark)`` runs the flagship extraction + evaluation job over the
 deterministic synthetic Common-Crawl-style corpus (BASELINE.json input_hint;
 the table is synthesized because the driver's testdata has no web-pages
-table). ``queries()``/``oracle_sql()`` expose the operator registry from
+table). ``queries()``/``oracle_sql()`` expose the one operator registry,
 :mod:`webextract.queries` (relational surface + training-data ops), checked
-against DuckDB by the driver at sf0.01; extraction-specific entries are
-rows-only (non-SQL-expressible) and are byte-identity-tested in pytest.
+against DuckDB by the driver at sf0.01. The extraction-engine entries below
+register into that same registry; their oracles check each job's landed
+output, and the parse itself is byte-identity-tested in pytest.
 """
 
 from __future__ import annotations
@@ -19,6 +20,9 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "src"))
+
+from webextract import queries as _registry  # noqa: E402
+from webextract.queries import register  # noqa: E402
 
 _CORPUS_BASE_DOCS = 60_000  # docs at sf=1.0; sf0.01 → 600 docs
 
@@ -54,53 +58,6 @@ def _corpus_df(spark: SparkSession, n_docs: int, seed: int = 42):
         open(marker, "w").close()
     return (spark.read.parquet(os.path.join(d, "web_pages.parquet")),
             spark.read.parquet(os.path.join(d, "truth.parquet")))
-
-
-def _corpus_df_inline(spark: SparkSession, n_docs: int, seed: int = 42):
-    """createDataFrame variant (no filesystem); kept for environments where
-    /tmp writes are undesirable."""
-    from pyspark.sql import types as T
-
-    from webextract.corpus import make_corpus
-
-    pages, truth = make_corpus(n_docs, seed=seed)
-    pages_schema = T.StructType([
-        T.StructField("url", T.StringType()),
-        T.StructField("warc_ts", T.TimestampType()),
-        T.StructField("html", T.BinaryType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-    ])
-    span_t = T.ArrayType(T.StructType([
-        T.StructField("start", T.LongType()),
-        T.StructField("end", T.LongType()),
-        T.StructField("kind", T.StringType()),
-    ]))
-    truth_schema = T.StructType([
-        T.StructField("url", T.StringType()),
-        T.StructField("expected_text", T.StringType()),
-        T.StructField("expected_spans", span_t),
-        T.StructField("case", T.StringType()),
-    ])
-    pages_df = spark.createDataFrame(
-        [(p["url"], p["warc_ts"], p["html"], p["text"], p["lang"]) for p in pages],
-        pages_schema,
-    )
-    truth_df = spark.createDataFrame(
-        [
-            (
-                t["url"],
-                t["expected_text"],
-                None if t["expected_spans"] is None else [
-                    (s["start"], s["end"], s["kind"]) for s in t["expected_spans"]
-                ],
-                t["case"],
-            )
-            for t in truth
-        ],
-        truth_schema,
-    )
-    return pages_df, truth_df
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -140,6 +97,7 @@ FROM read_parquet('{_Q90_LAND}/extracted/*.parquet')
 GROUP BY 1, 2
 """
 
+@register("q90_extract_corpus", _Q90_ORACLE_SQL)
 def _q_extract_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Extraction corpus profile, oracle-checked by INVARIANT (the q91
     fixed-path trick): the extraction output is landed to parquet and both
@@ -212,6 +170,7 @@ FROM long GROUP BY metric_name
 """
 
 
+@register("q91_extract_eval_rollup", _Q91_ORACLE_SQL)
 def _q_extract_eval_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Extraction → evaluation rollup, oracle-checked (judge round-2 #6):
     the ok rows and the truth table are landed to parquet, read back, and
@@ -259,6 +218,7 @@ FROM read_parquet('{_Q94_ROOT}/extracted/run_id=driver-run/*/*.parquet',
 """
 
 
+@register("q94_resume_metrics", _Q94_ORACLE_SQL)
 def _q_resume_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Resumable runner end-to-end: run → metrics table (FIXTURES.md §4),
     oracle-checked: DuckDB re-derives the summary from the committed
@@ -293,6 +253,7 @@ GROUP BY status
 """
 
 
+@register("q93_stream_extract", _Q93_ORACLE_SQL)
 def _q_stream_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin: land corpus → availableNow stream → extracted counts,
     oracle-checked over the sink's committed parquet."""
@@ -333,6 +294,7 @@ FROM read_parquet('{_Q95_BASE}/out/*.parquet')
 """
 
 
+@register("q95_stream_dedup", _Q95_ORACLE_SQL)
 def _q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful streaming dedup (applyInPandasWithState): land the corpus in
     two batches with cross-batch duplicates; first content-fingerprint
@@ -398,6 +360,7 @@ def _media_blob_rows(n: int) -> list:
     return rows
 
 
+@register("q36_media_type_profile", _Q36_ORACLE_SQL)
 def _q_media_type_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal ingest profile, oracle-checked: the JVM magic-byte sniff
     (multimodal.probe_media — zero Python) classified per media type with
@@ -442,6 +405,7 @@ GROUP BY 1, 2
 """
 
 
+@register("q92_media_features", _Q92_ORACLE_SQL)
 def _q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal plumbing: deterministic fake blobs → probe + features,
     landed to parquet and oracle-checked by INVARIANT over the landed files
@@ -519,6 +483,7 @@ FROM norm
 """
 
 
+@register("q55_url_canonicalization", _Q55_ORACLE_SQL)
 def _q_url_canonicalization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL canonicalization (webextract.urlnorm.canonical_url) over landed
     corpus urls, messied identically in both engines — the crawl-identity
@@ -571,6 +536,7 @@ FROM read_parquet('{_Q57_LAND}/pages/*.parquet')
 """
 
 
+@register("q57_warc_roundtrip", _Q57_ORACLE_SQL)
 def _q_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WARC source (webextract.warc.read_warc) oracle-checked end-to-end:
     the digest of every record that came THROUGH the archive must equal the
@@ -629,6 +595,7 @@ FROM read_parquet('{src}/*.parquet')
 _Q59_ORACLE_SQL = _Q59_DIGEST_SQL.format(src=f"{_Q59_LAND}/pages")
 
 
+@register("q59_jsonl_compact_roundtrip", _Q59_ORACLE_SQL)
 def _q_jsonl_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSONL interchange + small-file compaction (webextract.jsonl,
     tableio.compact_parquet), oracle-checked: the post-compaction table's
@@ -814,6 +781,7 @@ FROM sess GROUP BY url, si
 """
 
 
+@register("q63_stream_sessions", _Q63_ORACLE_SQL)
 def _q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming session windows oracle-checked against a batch-SQL
     re-derivation of the same sessions (gap split, exclusive end)."""
@@ -926,6 +894,7 @@ FROM tot t LEFT JOIN agg a USING (url)
 """
 
 
+@register("q62_boilerplate_strip", _Q62_ORACLE_SQL)
 def _q_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Paragraph-level boilerplate removal over the extraction output,
     oracle-checked end-to-end (md5 of every rebuilt document)."""
@@ -977,6 +946,7 @@ FROM read_parquet('{_Q80_LAND}/vertices/*.parquet')
 """
 
 
+@register("q80_cc_star", _Q80_ORACLE_SQL)
 def _q_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver pin for the long-chain-safe CC path (VERDICT r4 missing #3):
     star contraction must converge on chains, stars centered off-minimum,
@@ -1005,6 +975,7 @@ def _q_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("cluster_id").cast("long").alias("cluster_id")))
 
 
+@register("q58_curate_pipeline", _q58_oracle_sql())
 def _q_curate_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composed curation recipe (pipeline.curate) with every stage count
     re-derived by the DuckDB oracle from the landed extraction output."""
@@ -1039,7 +1010,7 @@ def _q_curate_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _VERIFY_FIRST = [
     # (r5 rotation, VERDICT r4 next-round #1) — helpers `shingles`,
-    # stopword/token-count, `repetition_columns` changed in r4 AFTER these
+    # stopword/token-count and the repetition signals changed in r4 AFTER these
     # entries' last (r3) driver rows; verify the shipped bytes first
     "q10_token_counts", "q11_quality_scores", "q14_ngram_jaccard_pairs",
     "q17_minhash_near_pairs", "q18_simhash_fingerprints",
@@ -1105,42 +1076,8 @@ def _verify_order(d: dict) -> dict:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from webextract import queries as q
-
-    out = dict(q.queries())
-    out["q90_extract_corpus"] = _q_extract_corpus
-    out["q91_extract_eval_rollup"] = _q_extract_eval_rollup
-    out["q92_media_features"] = _q_media_features
-    out["q93_stream_extract"] = _q_stream_extract
-    out["q94_resume_metrics"] = _q_resume_metrics
-    out["q95_stream_dedup"] = _q_stream_dedup
-    out["q36_media_type_profile"] = _q_media_type_profile
-    out["q55_url_canonicalization"] = _q_url_canonicalization
-    out["q57_warc_roundtrip"] = _q_warc_roundtrip
-    out["q58_curate_pipeline"] = _q_curate_pipeline
-    out["q59_jsonl_compact_roundtrip"] = _q_jsonl_compact_roundtrip
-    out["q62_boilerplate_strip"] = _q_boilerplate_strip
-    out["q63_stream_sessions"] = _q_stream_sessions
-    out["q80_cc_star"] = _q_cc_star
-    return _verify_order(out)
+    return _verify_order(_registry.queries())
 
 
 def oracle_sql() -> dict[str, str]:
-    from webextract import queries as q
-
-    out = dict(q.oracle_sql())
-    out["q90_extract_corpus"] = _Q90_ORACLE_SQL
-    out["q91_extract_eval_rollup"] = _Q91_ORACLE_SQL
-    out["q36_media_type_profile"] = _Q36_ORACLE_SQL
-    out["q55_url_canonicalization"] = _Q55_ORACLE_SQL
-    out["q93_stream_extract"] = _Q93_ORACLE_SQL
-    out["q94_resume_metrics"] = _Q94_ORACLE_SQL
-    out["q95_stream_dedup"] = _Q95_ORACLE_SQL
-    out["q57_warc_roundtrip"] = _Q57_ORACLE_SQL
-    out["q58_curate_pipeline"] = _q58_oracle_sql()
-    out["q59_jsonl_compact_roundtrip"] = _Q59_ORACLE_SQL
-    out["q62_boilerplate_strip"] = _Q62_ORACLE_SQL
-    out["q63_stream_sessions"] = _Q63_ORACLE_SQL
-    out["q80_cc_star"] = _Q80_ORACLE_SQL
-    out["q92_media_features"] = _Q92_ORACLE_SQL
-    return _verify_order(out)
+    return _verify_order(_registry.oracle_sql())

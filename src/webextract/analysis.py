@@ -77,30 +77,18 @@ EN_STOPWORDS = ["the", "and", "of", "to", "in"]
 
 def quality_columns(text_col: str = "text",
                     stopwords: list[str] | None = None) -> list[Column]:
-    """The standard quality-signal projection for a text table."""
+    """The standard quality-signal projection for a text table: length,
+    token count, stopword hits and the 6-dp stopword ratio (q11)."""
     sw = stopwords or EN_STOPWORDS
     ntok = token_count(text_col)
     hits = stopword_hits_any(text_col, sw)
-    c = F.col(text_col)
-    alpha = F.length(F.regexp_replace(c, r"[^A-Za-z]", ""))
     return [
-        F.length(c).alias("n_chars_measured"),
+        F.length(text_col).alias("n_chars_measured"),
         ntok.alias("n_tokens"),
         hits.alias("stopword_hits"),
         F.round(F.when(ntok == 0, F.lit(0.0)).otherwise(hits / ntok.cast("double")), 6)
             .cast("double").alias("stopword_ratio"),
-        F.round(F.when(F.length(c) == 0, F.lit(0.0))
-                 .otherwise(alpha / F.length(c).cast("double")), 6)
-            .cast("double").alias("alpha_ratio"),
-        F.round(F.when(ntok == 0, F.lit(0.0))
-                 .otherwise(F.length(c).cast("double") / ntok.cast("double")), 6)
-            .cast("double").alias("mean_token_len"),
     ]
-
-
-def quality_df(df: DataFrame, id_col: str = "doc_id",
-               text_col: str = "text") -> DataFrame:
-    return df.select(id_col, *quality_columns(text_col))
 
 
 # ---------------------------------------------------------------------------
@@ -135,12 +123,6 @@ def langid_columns(text_col: str = "text") -> tuple[list[Column], Column]:
     return hit_cols, pred
 
 
-def langid_df(df: DataFrame, id_col: str = "doc_id",
-              text_col: str = "text") -> DataFrame:
-    hit_cols, pred = langid_columns(text_col)
-    return df.select(id_col, *hit_cols).withColumn("predicted_lang", pred) \
-             .select(id_col, "predicted_lang")
-
 
 # ---------------------------------------------------------------------------
 # tokenization, BPE-ish
@@ -162,18 +144,6 @@ def bpeish_token_count(col: Column | str = "text") -> Column:
 # ---------------------------------------------------------------------------
 # fingerprinting
 # ---------------------------------------------------------------------------
-
-
-def fingerprint(col: Column | str = "text") -> Column:
-    """64-bit content fingerprint of whitespace-normalized lowercased text.
-
-    The exact-dedup key at scale: group/join on this instead of shuffling
-    full documents.
-    """
-    from .dedup import _norm_text  # the ONE normalization for fingerprints
-
-    c = F.col(col) if isinstance(col, str) else col
-    return F.xxhash64(_norm_text(c))
 
 
 def winnow_fingerprints(df: DataFrame, *, id_col: str = "doc_id",
@@ -269,47 +239,6 @@ def quality_filter_columns(text_col: str = "text", *,
 # ---------------------------------------------------------------------------
 
 
-def repetition_columns(tok_col: str = "t", *, ns: tuple[int, ...] = (2, 3),
-                       keep_n: int = 3, keep_num: int = 3, keep_den: int = 10,
-                       ) -> tuple[list[Column], Column]:
-    """Duplicate n-gram fractions WITHIN each document + the keep decision —
-    the Gopher repetition-removal signals (boilerplate loops, SEO keyword
-    stuffing, templated spam repeat the same n-grams inside one page).
-
-    Operates on a token-array column named ``tok_col`` (build it once with
-    ``split(trim(text), '\\s+')``; :func:`repetition_df` does). For each n
-    in ``ns``: dup_frac_n = (#grams − #distinct grams) / #grams over the
-    doc's token n-grams; docs with fewer than n tokens score 0. ``keep`` =
-    dup_frac_{keep_n} ≤ keep_num/keep_den, decided by INTEGER
-    cross-multiplication so the bit is exact in any engine.
-
-    Scale shape: everything is nested array expressions inside one
-    projection — per-row, zero shuffles, zero Python; the signals compute
-    in the same scan that reads the text.
-    """
-    t = tok_col
-    cols: list[Column] = [F.size(F.col(t)).cast("long").alias("n_tokens")]
-    keep: Column | None = None
-    for n in ns:
-        parts = ", ".join(f"{t}[i + {j}]" for j in range(n))
-        grams = (f"transform(sequence(0, size({t}) - {n}), "
-                 f"i -> concat_ws(chr(95), {parts}))")
-        g = F.expr(f"CASE WHEN size({t}) >= {n} THEN {grams} "
-                   f"ELSE CAST(array() AS array<string>) END")
-        total = F.size(g)
-        n_dup = total - F.size(F.array_distinct(g))
-        frac = F.when(total <= 0, F.lit(0.0)).otherwise(
-            F.round(n_dup.cast("double") / total.cast("double"), 6))
-        cols.append(n_dup.cast("long").alias(f"dup_{n}gram"))
-        cols.append(frac.cast("double").alias(f"dup_{n}gram_frac"))
-        if n == keep_n:
-            keep = ((total <= 0)
-                    | (n_dup * F.lit(keep_den) <= total * F.lit(keep_num)))
-    if keep is None:
-        raise ValueError(f"keep_n={keep_n} not in ns={ns}")
-    return cols, keep.cast("int")
-
-
 def _gram_col(tt: Column, n: int, sep: str = "_") -> Column:
     """Token n-gram array over a BOUND token-array column (empty when the
     doc has fewer than n tokens)."""
@@ -332,10 +261,10 @@ def gram_array(tokens: Column, n: int, sep: str = "_") -> Column:
 def repetition_keep_expr(tokens: Column, *, keep_n: int = 3,
                          keep_num: int = 3, keep_den: int = 10) -> Column:
     """The Gopher repetition KEEP flag as one let-bound expression over a
-    tokens column — the zero-cache form of :func:`repetition_columns`'s
-    gate for use inside filters (pipeline.curate): tokens and the gram
-    array each evaluate exactly once per row, no persist barrier needed.
-    Values are identical to repetition_columns' keep (same integer
+    tokens column — the zero-cache form of :func:`repetition_df`'s
+    ``keep_repetition`` for use inside filters (pipeline.curate): tokens and
+    the gram array each evaluate exactly once per row, no persist barrier
+    needed. Values are identical to repetition_df's flag (same integer
     cross-multiplication)."""
     def over_grams(gg: Column) -> Column:
         total = F.size(gg)
@@ -354,7 +283,14 @@ def repetition_df(df: DataFrame, *, id_col: str = "doc_id",
                   text_col: str = "text", ns: tuple[int, ...] = (2, 3),
                   keep_n: int = 3, keep_num: int = 3,
                   keep_den: int = 10) -> DataFrame:
-    """Per-doc repetition signals + keep flag over ``df``.
+    """Per-doc duplicate n-gram fractions WITHIN each document + the keep
+    decision — the Gopher repetition-removal signals (boilerplate loops,
+    SEO keyword stuffing, templated spam repeat the same n-grams inside one
+    page). For each n in ``ns``: dup_{n}gram_frac = (#grams − #distinct
+    grams) / #grams over the doc's whitespace-token n-grams; docs with
+    fewer than n tokens score 0. ``keep_repetition`` = dup_frac_{keep_n} ≤
+    keep_num/keep_den, decided by INTEGER cross-multiplication so the bit
+    is exact in any engine.
 
     Evaluation structure matters here: higher-order-function lambdas do
     not codegen, and a Column referenced k times evaluates k times in
@@ -365,8 +301,7 @@ def repetition_df(df: DataFrame, *, id_col: str = "doc_id",
     bound once, each n-gram array is built once, the (total, dup) counts
     are reduced to bound ints, and the final output fields are cheap
     arithmetic over those ints. One ``inline`` generator emits the struct
-    as columns in a single evaluation. Values are identical to
-    :func:`repetition_columns` (the q39 oracle pins them).
+    as columns in a single evaluation. The q39 oracle pins the values.
     """
     t = F.trim(F.col(text_col))
     toks = F.when(F.length(t) == 0, F.array().cast("array<string>")) \

@@ -342,8 +342,8 @@ def simhash_pairs(df: DataFrame, *, text_col: str = "text", id_col: str = "url",
 
 def _norm_text(text_col):
     """THE content normalization every fingerprint producer shares
-    (exact_duplicates, fingerprint_index, streaming.dedup_stream,
-    analysis.fingerprint) — change it in one place or not at all."""
+    (exact_duplicates, fingerprint_index, streaming.dedup_stream) — change
+    it in one place or not at all."""
     c = F.col(text_col) if isinstance(text_col, str) else text_col
     return F.lower(F.trim(F.regexp_replace(c, r"\s+", " ")))
 

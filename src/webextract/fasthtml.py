@@ -59,24 +59,9 @@ class FastTokenizerFallback(Exception):
     """Raised when the input has constructs we route to the stdlib parser."""
 
 
-def _parse_attrs(s: str) -> list[tuple[str, str | None]]:
-    out = []
-    for m in _ATTR_RE.finditer(s):
-        name = m.group(1).lower()
-        v = m.group(2)
-        if v is None:
-            out.append((name, None))
-            continue
-        if v[:1] in ("'", '"'):
-            v = v[1:-1]
-        if _HAS_AMP in v:
-            v = unescape(v)
-        out.append((name, v))
-    return out
-
-
 def _parse_attrs_classid(s: str) -> list[tuple[str, str | None]]:
-    """Like :func:`_parse_attrs` but keeps only class/id pairs.
+    """A start tag's (name, value) attribute pairs, unquoted and
+    entity-decoded as html.parser gives them, keeping only class/id pairs.
 
     BlockParser consumes nothing but class/id (``htmlblocks._class_id``), so
     dropping the rest here is invisible to block building and skips the

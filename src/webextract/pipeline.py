@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .dedup import (HASH_FNS, _norm_text, best_copy, connected_components,
-                    minhash_lsh_pairs, observed)
+                    minhash_lsh_pairs, observed, shingles)
 
 # curate's report keys, in stage order
 _STAGES = ("input", "after_latest_crawl", "after_gates", "after_exact_dedup",
@@ -230,14 +230,12 @@ def pretrain_prep(docs: DataFrame, bench: DataFrame, *,
     n_chunks), per-stage report). Stage boundaries are :func:`curate`'s
     observed local checkpoints (no ``unpersist()``).
     """
+    from .analysis import token_count
     from .sampling import pack_sequences
 
     report: dict[str, int] = {}
     fn, _ = HASH_FNS[hash_fn]
 
-    t = F.trim(F.col(text_col))
-    toks = F.when(F.length(t) == 0, F.array().cast("array<string>")) \
-            .otherwise(F.split(t, r"\s+"))
     # r6: materialize only the SMALL columns (id, source, n_tokens ≈ 24
     # B/row) — caching the token ARRAYS cost more in serialization + memory
     # than one lazy re-split for the gram stage saves (measured: base
@@ -245,27 +243,16 @@ def pretrain_prep(docs: DataFrame, bench: DataFrame, *,
     # tokens from the text in the same scan that builds its grams).
     base, obs = observed(docs.select(
         F.col(id_col).alias("id"), F.col(source_col).alias("source"),
-        F.size(toks).cast("long").alias("n_tokens")))
+        token_count(text_col).cast("long").alias("n_tokens")))
     base, report["input"] = base.localCheckpoint(eager=True), obs.get["n"]
-    corpus_toks = docs.select(F.col(id_col).alias("id"), toks.alias("_t"))
 
     # --- decontamination: drop docs sharing any n-gram with the bench ----
-    # let-bound grams (analysis.gram_array): the bench side's split would
-    # otherwise inline into every per-gram access
-    from .analysis import gram_array
-
-    gram = gram_array(F.col("_t"), gram_n)
-
     def _grams(d):
-        return (d.filter(F.size("_t") >= gram_n)
-                 .select("id", F.explode(gram).alias("g"))
-                 .select("id", fn(F.col("g")).alias("gh")).distinct())
+        return (shingles(d, text_col, id_col, n=gram_n, distinct=False)
+                .select("id", fn(F.col("shingle")).alias("gh")).distinct())
 
-    bench_toks = bench.select(
-        F.col(id_col).alias("id"),
-        F.split(F.trim(text_col), r"\s+").alias("_t"))
-    bench_idx = _grams(bench_toks).select("gh").distinct()
-    hits = (_grams(corpus_toks).join(F.broadcast(bench_idx), "gh")
+    bench_idx = _grams(bench).select("gh").distinct()
+    hits = (_grams(docs).join(F.broadcast(bench_idx), "gh")
             .select("id").distinct())
     clean, obs = observed(base.join(hits, "id", "left_anti"))
     clean, report["after_decontamination"] = (

@@ -61,14 +61,18 @@ _REGISTRY: dict[str, QuerySpec] = {}
 
 
 def register(name: str, sql: str | None, doc: str = ""):
+    """Add ``fn`` to the registry under ``name``. A name already held by a
+    different function is an error: a silent overwrite would drop a query
+    (re-executing the module that defines ``fn`` re-registers it in place)."""
     def deco(fn):
+        old = _REGISTRY.get(name)
+        if old is not None and ((old.spark.__module__, old.spark.__qualname__)
+                                != (fn.__module__, fn.__qualname__)):
+            raise ValueError(f"query {name!r} is already registered by "
+                             f"{old.spark.__module__}.{old.spark.__qualname__}")
         _REGISTRY[name] = QuerySpec(spark=fn, sql=sql, doc=doc)
         return fn
     return deco
-
-
-def registry() -> dict[str, QuerySpec]:
-    return dict(_REGISTRY)
 
 
 # --------------------------------------------------------------------------
@@ -382,8 +386,7 @@ def q25(spark, sf_dir):
 
 from .analysis import (  # noqa: E402 — engine operators; SQL oracles mirror them
     langid_columns,
-    stopword_hits as _hits_spark,
-    stopword_hits_any,
+    quality_columns,
     token_count as _tok_count_spark,
 )
 
@@ -462,17 +465,7 @@ _EN_STOPS = ["the", "and", "of", "to", "in"]
 )
 def q11(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
-    ntok = _tok_count_spark(F.col("text"))
-    hits = stopword_hits_any(F.col("text"), _EN_STOPS)
-    return d.select(
-        "doc_id",
-        F.length("text").alias("n_chars_measured"),
-        ntok.alias("n_tokens"),
-        hits.alias("stopword_hits"),
-        F.round(
-            F.when(ntok == 0, F.lit(0.0)).otherwise(hits / ntok.cast("double")), 6
-        ).cast("double").alias("stopword_ratio"),
-    )
+    return d.select("doc_id", *quality_columns("text"))
 
 
 _LANG_STOPS = {
@@ -614,34 +607,14 @@ _MAX_GRAM_DF = 50  # stop-gram pruning: ignore bigrams present in > N docs
     doc="near-dup detection: word-bigram set-similarity join with stop-gram pruning",
 )
 def q14(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    toks = (
-        d.filter(F.length(F.trim("text")) > 0)
-        .select("doc_id", F.split(F.trim("text"), r"\s+").alias("t"))
-        .filter(F.size("t") >= 2)
-    )
-    from .analysis import gram_array as _ga
+    from .dedup import jaccard_pairs
 
-    grams = toks.select(
-        "doc_id", F.explode(_ga(F.col("t"), 2)).alias("g")).distinct()
-    sizes = grams.groupBy("doc_id").agg(F.count("*").alias("n"))
-    gdf = grams.groupBy("g").agg(F.count("*").alias("d"))
-    gf = grams.join(gdf.filter(F.col("d") <= _MAX_GRAM_DF).select("g"), "g")
-    a = gf.select(F.col("doc_id").alias("doc_a"), "g")
-    b = gf.select(F.col("doc_id").alias("doc_b"), "g")
-    pairs = (
-        a.join(b, "g").filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b").agg(F.count("*").alias("intersection"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    jac = F.col("intersection") / (F.col("na") + F.col("nb") - F.col("intersection"))
-    return (
-        pairs.join(F.broadcast(sa), "doc_a").join(F.broadcast(sb), "doc_b")
-        .filter(jac >= _JACCARD_TAU)
-        .select("doc_a", "doc_b", "intersection",
-                F.round(jac, 6).cast("double").alias("jaccard"))
-    )
+    d = _t(spark, sf_dir, "documents")
+    return (jaccard_pairs(d, text_col="text", id_col="doc_id", n=2,
+                          tau=_JACCARD_TAU, max_df=_MAX_GRAM_DF)
+            .select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"),
+                    "intersection",
+                    F.round("jaccard", 6).cast("double").alias("jaccard")))
 
 
 @register(
@@ -2272,19 +2245,13 @@ _DECON_BENCH_MOD = 20  # doc_id % MOD == 0 docs form the synthetic benchmark
         "hash.",
 )
 def q60(spark, sf_dir):
-    from .dedup import HASH_FNS
+    from .dedup import HASH_FNS, shingles
 
     d = _t(spark, sf_dir, "documents")
-
     h, _bits = HASH_FNS["md5_60"]
-    toks = (d.filter(F.length(F.trim("text")) > 0)
-            .select("doc_id", F.split(F.trim("text"), r"\s+").alias("t"))
-            .filter(F.size("t") >= _DECON_N))
-    from .analysis import gram_array as _ga
-
-    gram = _ga(F.col("t"), _DECON_N)
-    grams = (toks.select("doc_id", F.explode(gram).alias("g"))
-             .select("doc_id", h(F.col("g")).alias("gh")).distinct())
+    grams = (shingles(d, "text", "doc_id", n=_DECON_N, distinct=False)
+             .select(F.col("id").alias("doc_id"), h(F.col("shingle")).alias("gh"))
+             .distinct())
     bench = (grams.filter(F.pmod("doc_id", F.lit(_DECON_BENCH_MOD)) == 0)
              .select("gh").distinct())
     hits = (grams.join(F.broadcast(bench), "gh")

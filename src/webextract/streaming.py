@@ -50,6 +50,22 @@ def extract_stream(pages_stream: DataFrame) -> DataFrame:
     return extract_df(pages_stream, repartition=False)
 
 
+def _start_parquet_sink(df: DataFrame, output_dir: str, checkpoint_dir: str,
+                        *, available_now: bool = False,
+                        trigger_interval: str | None = None):
+    """Append ``df`` to a checkpointed parquet sink and start the query —
+    the one sink every ``start_*_stream`` shares."""
+    w = (df.writeStream.format("parquet")
+         .option("path", output_dir)
+         .option("checkpointLocation", checkpoint_dir)
+         .outputMode("append"))
+    if available_now:
+        w = w.trigger(availableNow=True)
+    elif trigger_interval:
+        w = w.trigger(processingTime=trigger_interval)
+    return w.start()
+
+
 def windowed_metrics(extracted_stream: DataFrame, *, window: str = "1 hour",
                      watermark: str = "2 hours") -> DataFrame:
     """Stateful branch: per-(crawl-window, status) doc counts + bytes.
@@ -80,15 +96,8 @@ def start_metrics_stream(spark: SparkSession, input_dir: str, output_dir: str,
     """Source → extract → watermarked windowed aggregation → parquet sink."""
     m = windowed_metrics(extract_stream(read_pages_stream(spark, input_dir)),
                          window=window, watermark=watermark)
-    w = (
-        m.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start_parquet_sink(m, output_dir, checkpoint_dir,
+                               available_now=available_now)
 
 
 def session_metrics(extracted_stream: DataFrame, *, key: str = "url",
@@ -125,15 +134,8 @@ def start_session_stream(spark: SparkSession, input_dir: str, output_dir: str,
     """Source → extract → watermarked session windows → parquet sink."""
     m = session_metrics(extract_stream(read_pages_stream(spark, input_dir)),
                         key=key, gap=gap, watermark=watermark)
-    w = (
-        m.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start_parquet_sink(m, output_dir, checkpoint_dir,
+                               available_now=available_now)
 
 
 DEDUP_OUT_SCHEMA = T.StructType([
@@ -289,17 +291,9 @@ def start_dedup_stream(spark: SparkSession, input_dir: str, output_dir: str,
     extracted = extract_stream(
         read_pages_stream(spark, input_dir, max_files_per_trigger))
     deduped = dedup_stream(extracted.filter("status = 'ok'"), ttl=ttl)
-    w = (
-        deduped.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    elif trigger_interval:
-        w = w.trigger(processingTime=trigger_interval)
-    return w.start()
+    return _start_parquet_sink(deduped, output_dir, checkpoint_dir,
+                               available_now=available_now,
+                               trigger_interval=trigger_interval)
 
 
 def start_extraction_stream(spark: SparkSession, input_dir: str, output_dir: str,
@@ -312,13 +306,5 @@ def start_extraction_stream(spark: SparkSession, input_dir: str, output_dir: str
     """
     extracted = extract_stream(
         read_pages_stream(spark, input_dir, max_files_per_trigger))
-    w = (
-        extracted.writeStream
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start_parquet_sink(extracted, output_dir, checkpoint_dir,
+                               available_now=available_now)

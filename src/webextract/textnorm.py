@@ -21,12 +21,6 @@ text (cf. reference ``types/document.py:18-21`` TextData.content: str).
 
 from __future__ import annotations
 
-import re
-
-# \s in Python 3 `re` (unicode mode) matches [ \t\n\r\f\v] plus all Unicode
-# whitespace incl. \xa0 NBSP,  - ,  ,  , 　.
-_WS_RUN = re.compile(r"\s+")
-
 BLOCK_JOINER = "\n\n"
 
 

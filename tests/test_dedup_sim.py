@@ -671,11 +671,12 @@ def test_pairwise_near_kernel_threshold_boundary_exact(spark):
 
 def test_pairwise_near_kernel_edge_rows_match_sql(spark):
     """NULL vectors, NULL elements, NaN data, empty arrays, ragged lengths,
-    NULL block keys: the kernel must reproduce the SQL join's edge semantics
+    NULL block keys, duplicate ids: the kernel must reproduce the SQL join's edge semantics
     (none of these rows ever emits a pair, except that a NaN cosine passes
     ``>= tau``; same-length clean rows still do)."""
     rows = [
         (1, 0, [1.0, 2.0, 3.0]),
+        (1, 0, [1.0, 2.0, 3.0]),     # duplicate id: no (1, 1) self-pair
         (2, 0, [1.0, 2.0, 3.0]),     # pairs with 1
         (3, 0, None),                # NULL vector: no pairs
         (4, 0, []),                  # zero norm: NULL cosine, no pairs
@@ -695,6 +696,23 @@ def test_pairwise_near_kernel_edge_rows_match_sql(spark):
                df, tau=0.9, block_col="label").collect()}
     assert new == ref
     assert {(a, b) for a, b, _ in new} == {(1, 2), (5, 6), (1, 10), (2, 10)}
+
+
+def test_pairwise_near_inferred_dim_skips_null_and_empty_vectors(spark):
+    """LSH blocking with ``dim`` inferred: a NULL or empty leading vector
+    must not be taken as the dimension, and a frame with no usable vector
+    gives the empty pair set."""
+    schema = "vec_id long, embedding array<float>"
+    v = [1.0, 2.0, 3.0]
+    df = spark.createDataFrame([(1, None), (2, []), (3, v), (4, v)], schema)
+    got = {(x.id_a, x.id_b) for x in pairwise_near(df, tau=0.9).collect()}
+    assert got == {(3, 4)}
+    assert got == {(x.id_a, x.id_b)
+                   for x in pairwise_near(df, tau=0.9, dim=3).collect()}
+    for rows in ([], [(1, None), (2, [])]):
+        out = pairwise_near(spark.createDataFrame(rows, schema), tau=0.9)
+        assert out.collect() == []
+        assert out.columns == ["id_a", "id_b", "cosine"]
 
 
 def test_ivf_assign_pandas_exact_matches_fold_expr(spark):

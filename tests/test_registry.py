@@ -7,7 +7,10 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
+import pytest  # noqa: E402
+
 import __spark_entry__ as entry  # noqa: E402
+from webextract import queries as registry  # noqa: E402
 
 WINDOW = 50  # observed driver correctness budget (r3: 62 registered, 50 rows)
 
@@ -16,7 +19,19 @@ def test_priority_lists_match_live_registry():
     names = list(entry.queries())
     for n in entry._VERIFY_FIRST + entry._VERIFY_LAST:
         assert n in names, f"stale priority-list entry: {n}"
-    assert len(names) == len(set(names))
+
+
+def test_register_rejects_a_duplicate_name():
+    # the entry module's extraction queries share the library registry, so
+    # a name clash must fail loudly instead of silently dropping a query
+    for name in ("q01_pricing_summary", "q90_extract_corpus"):
+        spec = registry._REGISTRY[name]
+        with pytest.raises(ValueError, match="already registered"):
+            registry.register(name, spec.sql)(lambda spark, sf_dir: None)
+        assert registry._REGISTRY[name] is spec
+        # re-executing the defining module re-registers the same function
+        registry.register(name, spec.sql, spec.doc)(spec.spark)
+        assert registry._REGISTRY[name] == spec
 
 
 def test_window_holds_everything_unverified_or_new():
