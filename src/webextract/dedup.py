@@ -145,12 +145,12 @@ HASH_FNS = {"xxhash64": (_xx64, 64), "md5_60": (_md5_60, 60)}
 MD5_60_SQL = "(('0x' || substr(md5({x}), 1, 15))::UBIGINT::BIGINT)"
 
 
-def _band_bucket(hash_fn: str, bidx: int, cols: list):
+def _band_bucket(hash_fn: str, bidx: Column, cols: list):
     """Bucket key for one LSH band: hash of (band index, band's hash slice)."""
     if hash_fn == "xxhash64":
-        return F.xxhash64(F.lit(bidx), *cols)  # multi-arg: no string build
+        return F.xxhash64(bidx, *cols)  # multi-arg: no string build
     fn, _ = HASH_FNS[hash_fn]
-    return fn(F.concat_ws("|", F.lit(bidx), *cols))
+    return fn(F.concat_ws("|", bidx, *cols))
 
 
 # ---------------------------------------------------------------------------
@@ -197,20 +197,16 @@ def minhash_signatures(df: DataFrame, *, text_col: str = "text",
     """
     fn, _ = HASH_FNS[hash_fn]
     g = shingles(df, text_col, id_col, n, distinct=False)
+    # the num_perm minima are ONE parsed SQL expression: built as Column
+    # objects they cost ~27 py4j round trips each (~1.7k per signature
+    # table, a third of a second of driver time per call); same plan
     if hash_fn == "md5_60":
-        base = (fn(F.col("shingle")) % F.lit(_BASE_MOD)).alias("b")
-        consts = minhash_perm_consts(num_perm)
-        hb = g.select("id", base)
-        mins = [
-            F.min((F.lit(a) * F.col("b") + F.lit(c)) % F.lit(MINHASH_P)).alias(f"h{i}")
-            for i, (a, c) in enumerate(consts)
-        ]
-        agg = hb.groupBy("id").agg(*mins)
+        g = g.select("id", (fn(F.col("shingle")) % F.lit(_BASE_MOD)).alias("b"))
+        mins = [f"min(({a} * b + {c}) % {MINHASH_P})"
+                for a, c in minhash_perm_consts(num_perm)]
     else:
-        mins = [F.min(fn(F.col("shingle"), i)).alias(f"h{i}")
-                for i in range(num_perm)]
-        agg = g.groupBy("id").agg(*mins)
-    return agg.select("id", F.array(*[f"h{i}" for i in range(num_perm)]).alias("sig"))
+        mins = [f"min(xxhash64(shingle, {i}))" for i in range(num_perm)]
+    return g.groupBy("id").agg(F.expr(f"array({', '.join(mins)})").alias("sig"))
 
 
 def minhash_lsh_pairs(df: DataFrame, *, text_col: str = "text",
@@ -233,14 +229,15 @@ def minhash_lsh_pairs(df: DataFrame, *, text_col: str = "text",
     rows_per_band = num_perm // bands
     sig = minhash_signatures(df, text_col=text_col, id_col=id_col, n=n,
                              num_perm=num_perm, hash_fn=hash_fn)
-    band_cols = [
-        _band_bucket(
+    # one lambda over the band index builds every band key (bands x
+    # rows_per_band Column element accesses cost ~1.9k py4j round trips);
+    # the keys are the same values
+    band_keys = F.transform(
+        F.sequence(F.lit(0), F.lit(bands - 1)),
+        lambda bidx: _band_bucket(
             hash_fn, bidx,
-            [F.col("sig")[bidx * rows_per_band + r] for r in range(rows_per_band)],
-        ).alias(f"b{bidx}")
-        for bidx in range(bands)
-    ]
-    banded = sig.select("id", F.explode(F.array(*band_cols)).alias("bucket"))
+            [F.col("sig")[bidx * rows_per_band + r] for r in range(rows_per_band)]))
+    banded = sig.select("id", F.explode(band_keys).alias("bucket"))
     a = banded.select(F.col("id").alias("id_a"), "bucket")
     b = banded.select(F.col("id").alias("id_b"), "bucket")
     cand = (

@@ -62,6 +62,12 @@ def get_spark(app: str = "webextract", master: str | None = None,
         .config("spark.task.maxFailures",
                 os.environ.get("WEBEXTRACT_TASK_MAX_FAILURES", "4"))
         .config("spark.ui.enabled", "false")
+        # Spark's codegen cache holds 100 compiled classes by default; one
+        # curate run generates ~120, so every rerun in the session evicted
+        # and recompiled all of them (a warm curate pass compiled ~90
+        # classes: 2.15 s vs 1.69 s with this, 4 vCPU). Retained classes
+        # cost metaspace only.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("WEBEXTRACT_DRIVER_MEM", "8g"))
     )
     n_shuffle = shuffle_partitions or int(os.environ.get("WEBEXTRACT_SHUFFLE", cpus))
