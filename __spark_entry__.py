@@ -16,6 +16,8 @@ import os
 import re
 import sys
 from collections.abc import Callable
+from contextlib import contextmanager
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -36,6 +38,23 @@ def _ship_package(spark: SparkSession) -> None:
         spark.sparkContext.addPyFile(package_zip())
     except Exception:  # noqa: BLE001 — already added in this context
         pass
+
+
+@contextmanager
+def _one_split_per_core(spark: SparkSession, df: DataFrame):
+    """Pin spark.sql.files.maxPartitionBytes to one scan split per core while
+    ``df`` is scanned. extract_df(repartition=False) takes its parallelism
+    from the scan splits; under the session's 128 MiB default the corpus
+    file is one split and the extraction runs as a single task. Rows do not
+    depend on the split size."""
+    key = "spark.sql.files.maxPartitionBytes"
+    size = sum(os.path.getsize(urlparse(f).path) for f in df.inputFiles())
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(size // spark.sparkContext.defaultParallelism + 1))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
 
 
 def _sf_of(sf_dir: str) -> float:
@@ -114,8 +133,9 @@ def _q_extract_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Python workers busy from t=0); the skew path stays exercised by
     # entry() and the q94 runner. Rows are identical either way.
     ex = extract_df(pages, repartition=False)
-    (ex.select("url", "status", "content_type", "n_blocks", "text")
-     .write.mode("overwrite").parquet(os.path.join(_Q90_LAND, "extracted")))
+    with _one_split_per_core(spark, pages):
+        (ex.select("url", "status", "content_type", "n_blocks", "text")
+         .write.mode("overwrite").parquet(os.path.join(_Q90_LAND, "extracted")))
     landed = spark.read.parquet(os.path.join(_Q90_LAND, "extracted"))
     return (
         landed.groupBy("status", "content_type")
@@ -183,8 +203,9 @@ def _q_extract_eval_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages, truth = _corpus_df(spark, max(60, int(_CORPUS_BASE_DOCS * _sf_of(sf_dir))))
     # r6: splittable source → repartition=False (see q90)
     extracted = extract_df(pages, repartition=False).filter(F.col("status") == "ok")
-    (extracted.select("url", "text", "spans", "status")
-     .write.mode("overwrite").parquet(os.path.join(_Q91_LAND, "extracted")))
+    with _one_split_per_core(spark, pages):
+        (extracted.select("url", "text", "spans", "status")
+         .write.mode("overwrite").parquet(os.path.join(_Q91_LAND, "extracted")))
     (truth.select("url", "expected_text", "expected_spans")
      .write.mode("overwrite").parquet(os.path.join(_Q91_LAND, "truth")))
     ex2 = spark.read.parquet(os.path.join(_Q91_LAND, "extracted"))

@@ -11,9 +11,10 @@ Layout
 ------
 - :mod:`webextract.textnorm`   — canonical whitespace/entity normalization (the spec
   both generator and extractor share, so byte-identity is well-defined).
-- :mod:`webextract.htmlblocks` — stdlib ``html.parser`` tokenizer producing scored
-  text blocks (the reference's Converter stage,
-  cf. reference ``base/converter/base_converter.py:53-70``).
+- :mod:`webextract.fasthtml`   — single-scan HTML → text blocks (the reference's
+  Converter stage, cf. reference ``base/converter/base_converter.py:53-70``).
+- :mod:`webextract.htmlblocks` — stdlib ``html.parser`` block builder: the
+  fast path's per-document fallback and byte-identity oracle.
 - :mod:`webextract.heuristics` — trafilatura/readability-style boilerplate scoring
   (text density, link density, tag/class blocklists) — the Extractor stage,
   cf. reference ``base/extractor/base_extractor.py:56-75``.

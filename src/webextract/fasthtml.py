@@ -1,20 +1,22 @@
-"""Fast HTML tokenizer: regex-driven, feeding the SAME BlockParser callbacks.
+"""Fast HTML block builder: one regex token scan, block state inlined.
 
-The stdlib ``html.parser`` costs ~1 ms per 13 KiB page before our callbacks
-run; at 10^12 documents tokenization is the single hottest loop in the
-engine. This module re-implements only the *tokenizer* — start/end tags,
-comments, declarations, raw-text elements, entity-decoded text — and drives
-the unchanged :class:`webextract.htmlblocks.BlockParser` callback methods, so
-block-building semantics (candidate stack, merging, boilerplate evidence)
-have exactly one implementation.
+The stdlib ``html.parser`` costs ~1 ms per 13 KiB page before any block
+callback runs, and tokenizing plus dispatching each token to a
+``BlockParser.handle_*`` method was 84% of ``extract_document``. Here one
+compiled token grammar (``_TOKEN_RE``) splits a document with a single
+``re.findall``, and ``parse_blocks_fast`` builds the blocks in one loop over
+the resulting tuples, holding the block state (element stack, suppress,
+boilerplate and ``<a>`` context, the open candidate) in local variables.
 
 Equivalence contract: for the document classes the engine is specified on
-(the fixture grammar + benign real-world HTML), ``parse_blocks_fast`` must
-produce byte-identical blocks to the stdlib path — enforced by
-tests/test_fasthtml.py over the full corpus and a hypothesis HTML grammar.
-Inputs with constructs the fast tokenizer cannot prove it handles
-identically (unterminated tags/comments) fall back to the stdlib parser for
-that document — correctness never depends on the fast path.
+(the fixture grammar + benign real-world HTML), ``parse_blocks_fast``
+produces byte-identical blocks to :func:`webextract.htmlblocks.parse_blocks`,
+the stdlib path — enforced by tests/test_fasthtml.py over the full corpus
+and a hypothesis HTML grammar. A construct the grammar cannot prove it
+handles identically (a '<' no token matches, an unterminated comment, a
+marked section, a script/style element with no close) becomes a BAD token,
+and that document falls back to the stdlib parser — correctness never
+depends on the fast path.
 """
 
 from __future__ import annotations
@@ -22,176 +24,167 @@ from __future__ import annotations
 import re
 from html import unescape
 
-from .htmlblocks import Block, BlockParser
+from .htmlblocks import (BLOCK_KIND, BOILER_CONTAINER_TAGS, SUPPRESS_TAGS,
+                         VOID_TAGS, Block, BlockParser, parse_blocks)
 
-# tag name + attributes; quoted attr values may contain '>'
-_TAG_RE = re.compile(
-    r"""<(?:
-        (?P<end>/(?P<endtag>[a-zA-Z][a-zA-Z0-9:._-]*)\s*>)
-      | (?P<comment>!--.*?--\s*>)
-      | (?P<decl>![^>]*>)
-      | (?P<pi>\?[^>]*>)
-      | (?P<start>(?P<starttag>[a-zA-Z][a-zA-Z0-9:._-]*)
-           (?P<attrs>(?:\s+[^\s/>=]+(?:\s*=\s*(?:"[^"]*"|'[^']*'|[^\s>]*))?)*)
-           \s*(?P<selfclose>/?)\s*>)
-    )""",
+_NAME = r"[a-zA-Z][a-zA-Z0-9:._-]*"
+# an attribute value; quoted values may contain '>'. As in html.parser, an
+# unquoted value never starts with a quote, so `<script src='a'/>` parses
+# one way only: self-closing, not a raw-text open.
+_VALUE = r"""(?:"[^"]*"|'[^']*'|(?!['"])[^\s>]*)"""
+_ATTRS = rf"(?:\s+[^\s/>=]+(?:\s*=\s*{_VALUE})?)*"
+# html.parser's raw-text (CDATA) elements. title and textarea are parsed as
+# normal markup by the stdlib, so here too.
+_RAW_NAME = r"(?i:script|style)(?![a-zA-Z0-9:._-])"
+
+# Every input position belongs to exactly one alternative, so findall walks
+# the document contiguously; each match is a tuple of the seven groups.
+# A raw-text element is one token up to the stdlib's own close
+# (set_cdata_mode's `</\s*tag\s*>`, case-insensitive): the FIRST one ends
+# the element, near-misses like `</script/>` do not, `</ script>` does. A
+# raw-text start tag with no close may not match as a start tag, so it
+# reaches BAD, as do an unterminated comment, a marked section (`<![`) and
+# any other '<'. BAD swallows the rest of the document: that document falls
+# back anyway, and no later token is scanned.
+_TOKEN_RE = re.compile(
+    rf"""([^<]+)                                        # 1 text
+      | </({_NAME})\s*>                                 # 2 end tag
+      | <({_RAW_NAME}){_ATTRS}\s*>.*?</\s*(?i:\3)\s*>   # 3 raw-text element
+      | <(?!{_RAW_NAME}{_ATTRS}\s*>)                    #   start tag: 4 name,
+          ({_NAME})({_ATTRS})\s*(/?)\s*>                #   5 attrs, 6 self-close
+      | <!--.*?--\s*>                                   #   comment
+      | <!(?!--|\[)[^>]*> | <\?[^>]*>                   #   declaration, PI
+      | (<.*)                                           # 7 BAD
+    """,
     re.S | re.X,
 )
 
-_ATTR_RE = re.compile(
-    r"""([^\s/>=]+)(?:\s*=\s*("[^"]*"|'[^']*'|[^\s>]*))?""", re.S)
-
-# raw-text (CDATA) elements: content runs to the matching close tag, no
-# markup inside. Exactly html.parser's CDATA_CONTENT_ELEMENTS — title and
-# textarea are parsed as normal markup by the stdlib, so here too.
-# The close pattern is the stdlib's own (set_cdata_mode's `interesting`):
-# the FIRST `</\s*tag\s*>` ends the element; near-misses like `</script/>`
-# or `</script foo>` are NOT closes (stdlib scans past them as data, which
-# BlockParser suppresses) while `</ script>` IS one. Using the identical
-# regex keeps the fast path byte-faithful without a fallback.
-_RAWTEXT = {"script", "style"}
-_RAW_CLOSE = {t: re.compile(rf"</\s*{t}\s*>", re.I) for t in _RAWTEXT}
-
-_HAS_AMP = "&"
+_ATTR_RE = re.compile(rf"([^\s/>=]+)(?:\s*=\s*({_VALUE}))?", re.S)
+_NO_ATTRS: list[tuple[str, str | None]] = []
+_class_id = BlockParser._class_id
 
 
 class FastTokenizerFallback(Exception):
     """Raised when the input has constructs we route to the stdlib parser."""
 
 
-def _parse_attrs_classid(s: str) -> list[tuple[str, str | None]]:
-    """A start tag's (name, value) attribute pairs, unquoted and
-    entity-decoded as html.parser gives them, keeping only class/id pairs.
+def _tokens(html: str) -> list[tuple[str, ...]]:
+    """The document's token tuples; raises on a BAD token (the one
+    fallback rule). BAD consumes the rest of the input, so it is last."""
+    toks = _TOKEN_RE.findall(html)
+    if toks and toks[-1][6]:
+        raise FastTokenizerFallback(
+            f"unparseable markup at {len(html) - len(toks[-1][6])}")
+    return toks
 
-    BlockParser consumes nothing but class/id (``htmlblocks._class_id``), so
-    dropping the rest here is invisible to block building and skips the
-    unescape/strip work for href/src/etc. Relative order of the kept pairs is
-    preserved (``_class_id`` joins values in attribute order).
+
+def _attrs_classid(a: str) -> list[tuple[str, str | None]]:
+    """A start tag's class/id (name, value) pairs, unquoted and
+    entity-decoded as html.parser gives them, in attribute order.
+
+    Block building consumes nothing but class/id, so the other attributes
+    are never unquoted or decoded.
     """
+    # a class/id attribute name always contains one of these; a false
+    # positive (e.g. "width") only costs the full attribute parse
+    la = a.lower()
+    if "class" not in la and "id" not in la:
+        return _NO_ATTRS
     out = []
-    for m in _ATTR_RE.finditer(s):
+    for m in _ATTR_RE.finditer(a):
         name = m.group(1).lower()
         if name != "class" and name != "id":
             continue
         v = m.group(2)
-        if v is None:
-            out.append((name, None))
-            continue
-        if v[:1] in ("'", '"'):
-            v = v[1:-1]
-        if _HAS_AMP in v:
-            v = unescape(v)
+        if v is not None:
+            if v[:1] in ("'", '"'):
+                v = v[1:-1]
+            if "&" in v:
+                v = unescape(v)
         out.append((name, v))
     return out
 
 
-_NO_ATTRS: list[tuple[str, str | None]] = []
+def tokenize_into(sink, html: str) -> None:
+    """Drive ``sink``'s BlockParser-style ``handle_*`` callbacks over ``html``.
 
-# numeric group ids: m.group(int) skips the name->index dict lookup in the
-# hottest loop of the engine (measured ~3% of tokenize time)
-_GI = _TAG_RE.groupindex
-_G_START, _G_ATTRS, _G_SELF = _GI["starttag"], _GI["attrs"], _GI["selfclose"]
-_G_END, _G_DECL = _GI["endtag"], _GI["decl"]
-
-
-def tokenize_into(p: BlockParser, html: str) -> None:
-    """Drive BlockParser's handle_* callbacks over ``html``.
-
-    The scan is ``finditer``-driven (one C-level pass) rather than
-    find('<') + match-at-position per tag — interleaved best-of-9 A/B on
-    the corpus measured it ~10% faster end-to-end. Matches that start
-    inside an already-consumed region (raw-text bodies) are skipped by the
-    ``s < i`` guard; any '<' that finditer did NOT match surfaces in an
-    inter-match text segment and falls back, same contract as the
-    positional loop. One deliberate widening of the fallback set: a
-    comment that OPENS inside a raw-text body and closes after the
-    close tag (``<script>x <!-- </script><p>y -->``) is consumed by the
-    comment match, so the tags it hides trigger the text-segment fallback
-    — the stdlib path then parses that document (byte-identical by
-    construction; raw text runs to the first close tag in both parsers).
+    Walks the same token tuples as :func:`parse_blocks_fast`, so it raises
+    :class:`FastTokenizerFallback` on exactly the documents that function
+    sends to the stdlib parser. Text is entity-decoded; comments,
+    declarations and processing instructions are not reported; a raw-text
+    element reports its start and end tag (without attributes) and no body.
     """
-    i = 0
-    n = len(html)
-    find = html.find
-    handle_data = p.handle_data
-    handle_starttag = p.handle_starttag
-    handle_endtag = p.handle_endtag
-    for m in _TAG_RE.finditer(html):
-        s = m.start()
-        if s < i:
-            continue  # inside a consumed raw-text body
-        if s > i:
-            text = html[i:s]
-            if "<" in text:
-                # stray '<' the tag grammar could not match — the stdlib
-                # parser's recovery here is intricate (partial tags,
-                # EOF-in-tag). Don't guess: fall back.
-                raise FastTokenizerFallback(
-                    f"unparseable markup at {find('<', i)}")
-            handle_data(unescape(text) if _HAS_AMP in text else text)
-        g = m.group
-        starttag = g(_G_START)
-        i = m.end()
-        if starttag is not None:
-            tag = starttag.lower()
-            a = g(_G_ATTRS)
-            # Only class/id reach BlockParser; a real class/id attribute
-            # always contains these substrings, so this gate has no false
-            # negatives (false positives — e.g. "width" contains "id" — just
-            # take the slow parse and stay correct).
-            if a and ("class" in a or "id" in a):
-                attrs = _parse_attrs_classid(a)
-            else:
-                attrs = _NO_ATTRS
-            if g(_G_SELF):
-                p.handle_startendtag(tag, attrs)
-                continue
-            handle_starttag(tag, attrs)
-            if tag in _RAWTEXT:
-                c = _RAW_CLOSE[tag].search(html, i)
-                if c is None:
-                    raise FastTokenizerFallback(f"unterminated <{tag}>")
-                # raw text is NOT entity-decoded by the stdlib parser either,
-                # but BlockParser suppresses it entirely; skip past the
-                # stdlib-exact close match
-                handle_endtag(tag)
-                i = c.end()
-        else:
-            endtag = g(_G_END)
-            if endtag is not None:
-                handle_endtag(endtag.lower())
-            elif g(_G_DECL) is not None:
-                if html[s + 1:s + 4] == "!--":
-                    # `<!--` fell through to the decl branch only because
-                    # the comment never closes with `--\s*>` (stdlib
-                    # _commentclose semantics); the stdlib's unterminated-
-                    # comment EOF recovery is intricate — don't guess,
-                    # fall back.
-                    raise FastTokenizerFallback(f"unterminated comment at {s}")
-                if html[s + 1:s + 3] == "![":
-                    # marked section (<![CDATA[..]]>, <![if..]> …): the
-                    # stdlib scans to `]]>`/`]>` by section keyword (so the
-                    # body may contain '>', which our decl regex would stop
-                    # at) and even raises on unknown keywords — don't
-                    # replicate, fall back.
-                    raise FastTokenizerFallback(f"marked section at {s}")
-            # else: comment / declaration / processing instruction — invisible
-    if i < n:
-        text = html[i:]
-        if "<" in text:
-            raise FastTokenizerFallback(
-                f"unparseable markup at {find('<', i)}")
-        handle_data(unescape(text) if _HAS_AMP in text else text)
+    handle_data = sink.handle_data
+    for text, end, raw, tag, attrs, selfclose, _bad in _tokens(html):
+        if text:
+            handle_data(unescape(text) if "&" in text else text)
+        elif tag:
+            handle = sink.handle_startendtag if selfclose else sink.handle_starttag
+            handle(tag.lower(), _attrs_classid(attrs))
+        elif end:
+            sink.handle_endtag(end.lower())
+        elif raw:
+            raw = raw.lower()
+            sink.handle_starttag(raw, _NO_ATTRS)
+            sink.handle_endtag(raw)
 
 
 def parse_blocks_fast(html: str, class_blocklist) -> list[Block]:
-    """parse_blocks with the fast tokenizer; stdlib fallback per document."""
-    p = BlockParser(class_blocklist)
-    try:
-        tokenize_into(p, html)
-        p.close()
-    except FastTokenizerFallback:
-        from .htmlblocks import parse_blocks
+    """parse_blocks in one token scan; stdlib fallback per document.
 
+    A candidate opened inside another candidate always closes first and
+    merges into it (``BlockParser._merge_if_nested``), so all candidate
+    text lands, in document order, in the OUTERMOST open candidate ``cur``:
+    nested candidates never become blocks here. Each stack frame holds the
+    state from before its element opened; closing an element restores it,
+    which is what popping every frame above it one by one amounts to.
+    Raw-text, void and self-closing elements never touch the stack.
+    """
+    try:
+        toks = _tokens(html)
+    except FastTokenizerFallback:
         return parse_blocks(html, class_blocklist)
-    return [b for b in p.blocks if b.kind != "merged"]
+    search = class_blocklist.search
+    blocks: list[Block] = []
+    stack: list[tuple] = []   # (tag, suppressed, in_boiler, in_a, cur)
+    suppressed = in_boiler = in_a = False
+    cur: Block | None = None
+    for text, end, _raw, tag, attrs, selfclose, _bad in toks:
+        if text:
+            if cur is not None and not suppressed:
+                if "&" in text:
+                    text = unescape(text)
+                cur.text_parts.append(text)
+                # non-whitespace char count (str.split = Unicode whitespace)
+                n = sum(map(len, text.split()))
+                cur.total_chars += n
+                if in_a:
+                    cur.link_chars += n
+        elif tag:
+            if selfclose:
+                continue
+            tag = tag.lower()
+            if tag in VOID_TAGS:
+                continue
+            stack.append((tag, suppressed, in_boiler, in_a, cur))
+            if tag in SUPPRESS_TAGS:
+                suppressed = True
+                continue
+            cls = _class_id(_attrs_classid(attrs)) if attrs else ""
+            if tag in BOILER_CONTAINER_TAGS or (cls and search(cls)):
+                in_boiler = True
+            if tag == "a":
+                in_a = True
+            elif cur is None and not suppressed and tag in BLOCK_KIND:
+                cur = Block(BLOCK_KIND[tag], tag, [], 0, 0, cls, in_boiler)
+                blocks.append(cur)
+        elif end:
+            end = end.lower()
+            # pop up to the matching open tag; a stray end tag is ignored
+            k = len(stack) - 1
+            while k >= 0 and stack[k][0] != end:
+                k -= 1
+            if k >= 0:
+                _, suppressed, in_boiler, in_a, cur = stack[k]
+                del stack[k:]
+    return blocks

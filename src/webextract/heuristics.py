@@ -40,27 +40,30 @@ LINK_DENSITY_MAX = 0.5   # B4: >= 0.5 is boilerplate
 MIN_CHARS_LINKED = 25    # B5: shorter than this AND containing a link → drop
 
 
+def _content_text(block: Block, link_density_max: float,
+                  min_chars_linked: int) -> str | None:
+    """Rules B1–B5 in one pass: the block's normalized text if it is
+    CONTENT, None if it is BOILERPLATE. The structural rules run first, so
+    a boilerplate block's text is never normalized."""
+    if block.boiler_ancestor or (block.own_class
+                                 and CLASS_BLOCKLIST.search(block.own_class)):
+        return None
+    text = normalize_ws(block.raw_text)
+    total, link = block.total_chars, block.link_chars
+    if (not text or (total > 0 and link / total >= link_density_max)
+            or (total < min_chars_linked and link > 0)):
+        return None
+    return text
+
+
 def is_boilerplate(block: Block, *, link_density_max: float = LINK_DENSITY_MAX,
-                   min_chars_linked: int = MIN_CHARS_LINKED,
-                   _norm_text: str | None = None) -> bool:
+                   min_chars_linked: int = MIN_CHARS_LINKED) -> bool:
     """Apply rules B1–B5. Deterministic; no randomness, no global state.
 
     Thresholds are overridable per run via ExtractorConfig (config.py) but
-    default to the byte-identity spec values. ``_norm_text`` lets callers
-    that already normalized the block text avoid doing it twice.
+    default to the byte-identity spec values.
     """
-    if block.boiler_ancestor:
-        return True
-    if block.own_class and CLASS_BLOCKLIST.search(block.own_class):
-        return True
-    text = normalize_ws(block.raw_text) if _norm_text is None else _norm_text
-    if not text:
-        return True
-    if block.total_chars > 0 and block.link_chars / block.total_chars >= link_density_max:
-        return True
-    if block.total_chars < min_chars_linked and block.link_chars > 0:
-        return True
-    return False
+    return _content_text(block, link_density_max, min_chars_linked) is None
 
 
 def select_content(blocks: list[Block], *,
@@ -72,12 +75,7 @@ def select_content(blocks: list[Block], *,
     """
     out: list[tuple[str, str]] = []
     for b in blocks:
-        # cheap structural rules first; normalize once, reuse for the rest
-        if b.boiler_ancestor or (b.own_class and CLASS_BLOCKLIST.search(b.own_class)):
-            continue
-        text = normalize_ws(b.raw_text)
-        if is_boilerplate(b, link_density_max=link_density_max,
-                          min_chars_linked=min_chars_linked, _norm_text=text):
-            continue
-        out.append((b.kind, text))
+        text = _content_text(b, link_density_max, min_chars_linked)
+        if text is not None:
+            out.append((b.kind, text))
     return out

@@ -6,6 +6,11 @@ Instead of a Pydantic ``Document`` per file, it produces a list of
 :class:`Block` records — the flat, columnar-friendly unit the boilerplate
 heuristics score (:mod:`webextract.heuristics`).
 
+Production parsing runs through :func:`webextract.fasthtml.parse_blocks_fast`,
+a single-scan builder. :class:`BlockParser` here is its per-document
+fallback and its byte-identity oracle: the stdlib tokenizer drives these
+callbacks, and tests/test_fasthtml.py holds the fast path to their output.
+
 Design notes
 ------------
 - ``html.parser.HTMLParser`` with ``convert_charrefs=True`` decodes entities
@@ -62,7 +67,7 @@ class Block:
 
     ``slots=True``: ~40k Blocks per Arrow batch make this one of the
     hottest allocations after stack frames; slots cut the per-instance
-    dict and speed the attribute traffic in handle_data/_merge_if_nested.
+    dict and speed the attribute traffic in both block builders.
     """
 
     kind: str                      # title | paragraph | quote
@@ -72,7 +77,6 @@ class Block:
     total_chars: int = 0           # non-ws chars total
     own_class: str = ""            # class + id of the block element, lowercased
     boiler_ancestor: bool = False  # under nav/header/footer/aside or blocklisted class
-    depth: int = 0                 # element nesting depth at open (diagnostics)
 
     @property
     def raw_text(self) -> str:
@@ -85,7 +89,7 @@ class Block:
 
 
 class BlockParser(HTMLParser):
-    """Single-pass tokenizer building the block list.
+    """Stdlib-tokenized block builder: the fast path's fallback and oracle.
 
     ``class_blocklist`` is a compiled regex applied to the lowercased
     ``class``+``id`` attribute text of every element; a match marks the whole
@@ -131,7 +135,6 @@ class BlockParser(HTMLParser):
                 tag=tag,
                 own_class=cls,
                 boiler_ancestor=self._boiler_depth > 0,
-                depth=len(self._stack),
             )
             self.blocks.append(blk)
             block_idx = len(self.blocks) - 1
