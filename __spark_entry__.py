@@ -16,8 +16,6 @@ import os
 import re
 import sys
 from collections.abc import Callable
-from contextlib import contextmanager
-from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -38,23 +36,6 @@ def _ship_package(spark: SparkSession) -> None:
         spark.sparkContext.addPyFile(package_zip())
     except Exception:  # noqa: BLE001 — already added in this context
         pass
-
-
-@contextmanager
-def _one_split_per_core(spark: SparkSession, df: DataFrame):
-    """Pin spark.sql.files.maxPartitionBytes to one scan split per core while
-    ``df`` is scanned. extract_df(repartition=False) takes its parallelism
-    from the scan splits; under the session's 128 MiB default the corpus
-    file is one split and the extraction runs as a single task. Rows do not
-    depend on the split size."""
-    key = "spark.sql.files.maxPartitionBytes"
-    size = sum(os.path.getsize(urlparse(f).path) for f in df.inputFiles())
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(size // spark.sparkContext.defaultParallelism + 1))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
 
 
 def _sf_of(sf_dir: str) -> float:
@@ -132,10 +113,13 @@ def _q_extract_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # production path: scan splits bound per-task bytes, ONE fused stage,
     # Python workers busy from t=0); the skew path stays exercised by
     # entry() and the q94 runner. Rows are identical either way.
+    # Extraction parallelism is the scan's: a parquet row group goes whole
+    # to one split, and the corpus writes 1000-row groups. Under the
+    # session's 128 MiB maxPartitionBytes sf0.01 (one row group) runs as one
+    # task and sf0.1 as two; more tasks need smaller splits AND row groups.
     ex = extract_df(pages, repartition=False)
-    with _one_split_per_core(spark, pages):
-        (ex.select("url", "status", "content_type", "n_blocks", "text")
-         .write.mode("overwrite").parquet(os.path.join(_Q90_LAND, "extracted")))
+    (ex.select("url", "status", "content_type", "n_blocks", "text")
+     .write.mode("overwrite").parquet(os.path.join(_Q90_LAND, "extracted")))
     landed = spark.read.parquet(os.path.join(_Q90_LAND, "extracted"))
     return (
         landed.groupBy("status", "content_type")
@@ -201,11 +185,11 @@ def _q_extract_eval_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _ship_package(spark)
     pages, truth = _corpus_df(spark, max(60, int(_CORPUS_BASE_DOCS * _sf_of(sf_dir))))
-    # r6: splittable source → repartition=False (see q90)
+    # r6: splittable source → repartition=False; task count follows the
+    # corpus's scan splits and row groups (see q90)
     extracted = extract_df(pages, repartition=False).filter(F.col("status") == "ok")
-    with _one_split_per_core(spark, pages):
-        (extracted.select("url", "text", "spans", "status")
-         .write.mode("overwrite").parquet(os.path.join(_Q91_LAND, "extracted")))
+    (extracted.select("url", "text", "spans", "status")
+     .write.mode("overwrite").parquet(os.path.join(_Q91_LAND, "extracted")))
     (truth.select("url", "expected_text", "expected_spans")
      .write.mode("overwrite").parquet(os.path.join(_Q91_LAND, "truth")))
     ex2 = spark.read.parquet(os.path.join(_Q91_LAND, "extracted"))
