@@ -1021,9 +1021,9 @@ _VERIFY_FIRST = [
     "q17_minhash_near_pairs", "q18_simhash_fingerprints",
     "q35_gopher_quality_filter", "q39_repetition_signals",
     # new or code-changed THIS round (q90 and q92 gained invariant oracles;
-    # q80/q81 are new; bpe.py changed for q77/q78)
+    # q80 is new; bpe.py changed for q77/q78)
     "q90_extract_corpus", "q92_media_features", "q80_cc_star",
-    "q81_bpe_encode_batch", "q77_bpe_train", "q78_bpe_encode",
+    "q77_bpe_train", "q78_bpe_encode",
     # r3-green entries rotated out of the r4 window — refresh
     "q19_ann_topk", "q26_ivf_topk", "q30_source_profile",
     "q32_lsh_blocked_near_pairs", "q34_incremental_dedup",

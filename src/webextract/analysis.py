@@ -47,13 +47,9 @@ def _hits_on_padded(pad: Column, word: str) -> Column:
             / F.lit(len(pat))).cast("long")
 
 
-def stopword_hits(col: Column | str, word: str) -> Column:
-    """Occurrences of ``word`` as a whitespace-delimited token (lowercased)."""
-    return _hits_on_padded(_norm_padded(col), word)
-
-
 def stopword_hits_any(col: Column | str, words: list[str]) -> Column:
-    """Total hits over ``words``, normalizing the text ONCE.
+    """Total occurrences of ``words`` as whitespace-delimited tokens
+    (lowercased), normalizing the text ONCE.
 
     Every term references the SAME padded-normalization expression tree, so
     whole-stage codegen's subexpression elimination evaluates the regexp

@@ -223,52 +223,24 @@ def _doc_rep(text_col: str):
 def bpe_apply(docs: DataFrame, merges: list[str], *,
               text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Tokenize with a trained merge list (ordered pair strings 'a<SEP>b',
-    e.g. from :func:`bpe_train`'s left/right columns): apply every merge in
-    training order as the anchored double replace, then count symbols.
-
-    The entire application is ONE codegen'd projection per document —
-    2 x len(merges) nested ``replace`` calls, zero shuffles, zero Python.
+    e.g. from :func:`bpe_train`'s left/right columns) and count symbols.
     Returns (id, n_words, n_tokens) where n_tokens counts post-merge BPE
     symbols (END_WORD markers included, matching what a dataloader feeds).
 
-    TIER: right up to a few hundred merges; past that the nested
-    expression tree exceeds codegen limits. For production vocab sizes
-    (30k-100k merges) use :func:`bpe_apply_batch` — byte-identical,
-    differential-tested, cost independent of merge-list length.
-    """
-    rep_sql = "rep"
-    for pair in merges:
-        rep_sql = merge_expr(pair, rep_sql)
-    return (
-        docs.filter(F.length(F.trim(text_col)) > 0)
-        .select(F.col(id_col), _doc_rep(text_col).alias("rep"),
-                F.size(F.split(F.trim(text_col), r"\s+")).alias("n_words"))
-        .select(id_col, "n_words",
-                (F.size(F.split(F.expr(rep_sql), SEP)) - 2)
-                .cast("long").alias("n_tokens"))
-        .select(id_col, F.col("n_words").cast("long").alias("n_words"),
-                "n_tokens")
-    )
+    One mapInPandas stage, no shuffle: the merge list ships once per
+    executor (broadcast), each UNIQUE word is tokenized with the standard
+    min-rank merge loop (HuggingFace-style encode) and memoized per task.
+    Cost per word is O(applied_merges x len), independent of merge-list
+    length, so production vocab sizes (30k-100k merges) hold; the Zipfian
+    word cache makes the common case a dict hit. (Applying the merges as
+    2 x n_merges nested ``replace`` calls in one projection — the form the
+    q78 oracle replays in DuckDB — cannot even build past ~1k merges.)
 
-
-def bpe_apply_batch(docs: DataFrame, merges: list[str], *,
-                    text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
-    """Production-vocab BPE tokenization: the mapInPandas escape hatch
-    :func:`bpe_apply`'s docstring names. The nested-replace plan is
-    unbeatable up to a few hundred merges but is 2 x n_merges nested
-    ``replace`` calls in one expression — at real tokenizer sizes
-    (30k-100k merges) that expression tree exceeds codegen limits and
-    falls back interpreted, or fails to build at all. This path ships the
-    merge list once per executor (broadcast), tokenizes each UNIQUE word
-    with the standard min-rank merge loop (HuggingFace-style encode), and
-    memoizes per task — cost per word is O(applied_merges x len),
-    independent of vocabulary size, and the Zipfian word cache makes the
-    common case a dict hit.
-
-    BYTE-IDENTICAL to :func:`bpe_apply` (differential-tested, and q81
-    shares q78's oracle): the per-word min-rank loop with a monotone rank
-    floor replays the in-order nested-replace sequence exactly —
+    BYTE-IDENTICAL to applying every merge in training order as
+    :func:`merge_expr`'s anchored double replace over :func:`_doc_rep`
+    (differential-tested against that nested-replace form in
+    tests/test_bpe.py, and q78's oracle replays it): the per-word min-rank
+    loop with a monotone rank floor replays the in-order sequence exactly —
 
     - merges never match across word boundaries (:func:`_doc_rep`), so
       per-word application == whole-document application;
@@ -281,8 +253,7 @@ def bpe_apply_batch(docs: DataFrame, merges: list[str], *,
       (the floor guards the string-collision corner where two distinct
       merges fuse to equal strings).
 
-    Same pre-filter, same output schema/columns as :func:`bpe_apply`:
-    (id, n_words, n_tokens), END_WORD markers counted.
+    Rows whose trimmed text is empty are dropped.
     """
     from pyspark.sql import types as T
 

@@ -4,7 +4,8 @@ Four tiers, all pure DataFrame/SQL-function pipelines (JVM-side, no Python
 UDFs — the hashing is ``xxhash64``/bit arithmetic inside whole-stage
 codegen):
 
-- :func:`exact_duplicates`      — hash-groupBy canonicalization.
+- :func:`best_copy`             — exact dedup: hash-groupBy
+                                  canonicalization, keeping the best copy.
 - :func:`jaccard_pairs`         — exact n-gram set-similarity join
                                   (quadratic per shared gram; small/medium).
 - :func:`minhash_lsh_pairs`     — MinHash signatures + banded LSH: candidate
@@ -24,39 +25,6 @@ near-dup operating point.
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Observation, Window as W, functions as F
-
-# ---------------------------------------------------------------------------
-# exact
-# ---------------------------------------------------------------------------
-
-
-def exact_duplicates(df: DataFrame, text_col: str = "text",
-                     id_col: str = "url",
-                     hash_fn: str = "xxhash64") -> DataFrame:
-    """Canonical id per normalized-text group; is_duplicate flag per row.
-
-    One shuffle on the normalized text hash: grouping on the 8-byte
-    ``hash(norm_text)`` instead of the full string is what makes the
-    exchange key bounded at 100 TB. ``hash_fn`` picks "xxhash64" (the
-    production path) or "md5_60" (the portable hash DuckDB reproduces —
-    q31's oracle checks this exact plan end-to-end).
-    """
-    fn, _ = HASH_FNS[hash_fn]
-    key = fn(_norm_text(text_col)).alias("text_hash")
-    with_key = df.select(F.col(id_col).alias("id"), key)
-    canon = with_key.groupBy("text_hash").agg(
-        F.min("id").alias("canonical_id"), F.count("*").alias("group_size")
-    )
-    return (
-        with_key.join(canon, "text_hash")
-        .select(
-            F.col("id").alias(id_col),
-            "canonical_id",
-            (F.col("id") != F.col("canonical_id")).cast("int").alias("is_duplicate"),
-            "group_size",
-        )
-    )
-
 
 # ---------------------------------------------------------------------------
 # shingling (shared by jaccard + minhash + simhash)
@@ -339,8 +307,8 @@ def simhash_pairs(df: DataFrame, *, text_col: str = "text", id_col: str = "url",
 
 def _norm_text(text_col):
     """THE content normalization every fingerprint producer shares
-    (exact_duplicates, fingerprint_index, streaming.dedup_stream) — change
-    it in one place or not at all."""
+    (best_copy, fingerprint_index, streaming.dedup_stream) — change it in
+    one place or not at all."""
     c = F.col(text_col) if isinstance(text_col, str) else text_col
     return F.lower(F.trim(F.regexp_replace(c, r"\s+", " ")))
 
@@ -633,15 +601,21 @@ def strip_common_paragraphs(paras: DataFrame, *, id_col: str = "url",
 def best_copy(df: DataFrame, *, text_col: str = "text",
               id_col: str = "url", quality_col: str | None = None,
               hash_fn: str = "xxhash64") -> DataFrame:
-    """Curation-aware exact dedup: one canonical row per normalized-content
-    group, chosen by QUALITY (highest ``quality_col``, smallest id as the
-    tie-break) instead of plain min-id — "keep the best copy" when the same
-    document arrives from multiple crawls/sources at different fidelity.
+    """Exact dedup: one canonical row per normalized-content group, chosen
+    by QUALITY (highest ``quality_col``, smallest id as the tie-break) —
+    "keep the best copy" when the same document arrives from multiple
+    crawls/sources at different fidelity. Without ``quality_col`` the rank
+    is the normalized length, which is equal inside a group, so the
+    smallest id is kept (plain min-id canonicalization, q31).
 
-    Same scale shape as :func:`exact_duplicates` (one shuffle on the 8-byte
-    content hash), but the canonical choice is a ``min_by`` over the
-    (-quality, id) struct — an AGGREGATE with map-side partial combine, not
-    a per-group sort: each map task forwards one candidate per (hash) key.
+    One shuffle on the content hash: grouping on the 8-byte
+    ``hash(norm_text)`` instead of the full string is what makes the
+    exchange key bounded at 100 TB. ``hash_fn`` picks "xxhash64" (the
+    production path) or "md5_60" (the portable hash DuckDB reproduces —
+    q31's oracle checks this exact plan end-to-end). The canonical choice
+    is a ``min_by`` over the (-quality, id) struct — an AGGREGATE with
+    map-side partial combine, not a per-group sort: each map task forwards
+    one candidate per (hash) key.
     ``quality_col`` must be numeric (it is negated for the ordering); the
     id may be ANY orderable type — string urls included (negating the id
     instead would ANSI-crash on strings).

@@ -395,7 +395,7 @@ _TOK_COUNT_SQL = ("CASE WHEN length(trim({c})) = 0 THEN 0 "
 
 
 def _hits_sql(c: str, word: str) -> str:
-    # whitespace-normalized first — twin of analysis.stopword_hits (block
+    # whitespace-normalized first — twin of analysis.stopword_hits_any (block
     # boundaries are '\n\n'; without this, boundary-adjacent stopwords score 0)
     pat = f" {word} "
     norm = f"regexp_replace(lower({c}), '\\s+', ' ', 'g')"
@@ -560,14 +560,18 @@ FROM keyed k JOIN canon c USING (text_hash)
         "form is the demonstration twin; this is the plan you'd run at "
         "scale — plan-asserted in tests/test_dedup_sim.py). Oracle-checked "
         "end-to-end via the portable md5_60 hash; xxhash64 is the default "
-        "production hash of webextract.dedup.exact_duplicates.",
+        "production hash of webextract.dedup.best_copy, which runs here "
+        "without a quality column: every copy in a content group has the "
+        "same normalized length, so the min id is kept.",
 )
 def q31(spark, sf_dir):
-    from .dedup import exact_duplicates
+    from .dedup import best_copy
 
     d = _t(spark, sf_dir, "documents")
-    return exact_duplicates(d, text_col="text", id_col="doc_id",
-                            hash_fn="md5_60")
+    return (best_copy(d, text_col="text", id_col="doc_id", hash_fn="md5_60")
+            .select("doc_id", "canonical_id",
+                    (1 - F.col("is_kept")).alias("is_duplicate"),
+                    "group_size"))
 
 
 _JACCARD_TAU = 0.5
@@ -697,18 +701,6 @@ def q16(spark, sf_dir):
 # (tests/test_dedup_sim.py).
 # --------------------------------------------------------------------------
 
-from .dedup import MD5_60_SQL as _MD5_60_SQL  # noqa: E402
-
-
-def _md5h_sql(x: str) -> str:
-    """DuckDB twin of dedup._md5_60 (no seed: seed is concat'd by caller).
-
-    Single source of truth: dedup.MD5_60_SQL — the whole md5_60 oracle
-    contract depends on this string matching dedup._md5_60 exactly.
-    """
-    return _MD5_60_SQL.format(x=x)
-
-
 _MH_PERM, _MH_BANDS, _MH_TAU = 64, 16, 0.7
 _MH_RPB = _MH_PERM // _MH_BANDS
 
@@ -732,7 +724,7 @@ def _mh_pair_ctes(src: str, id_sql: str) -> str:
          unnest(list_transform(range(1, len(t)), i -> t[i] || '_' || t[i+1])) AS g
   FROM toks WHERE len(t) >= 2
 ), based AS (
-  SELECT mh_id, ({_md5h_sql('g')} % {1 << 30}) AS b FROM grams
+  SELECT mh_id, ({_MD5_60_SQL.format(x='g')} % {1 << 30}) AS b FROM grams
 ), sig AS (
   SELECT mh_id,
          {', '.join(f"MIN(({a} * b + {c}) % {_MH_P}) AS h{i}"
@@ -740,8 +732,9 @@ def _mh_pair_ctes(src: str, id_sql: str) -> str:
   FROM based GROUP BY mh_id
 ), bucketed AS (
   SELECT mh_id, unnest([{', '.join(
-      _md5h_sql('concat_ws(' + "'|', " + str(k) + ', ' + ', '.join(
-          f'h{k * _MH_RPB + r}' for r in range(_MH_RPB)) + ')')
+      _MD5_60_SQL.format(x='concat_ws(' + "'|', " + str(k) + ', ' + ', '.join(
+                               f'h{k * _MH_RPB + r}' for r in range(_MH_RPB))
+                           + ')')
       for k in range(_MH_BANDS))}]) AS bucket
   FROM sig
 ), cand AS (
@@ -836,7 +829,7 @@ _SAMPLE_DEFAULT = 600
 _Q38_SQL = f"""
 WITH keyed AS (
   SELECT doc_id, lang,
-         ({_md5h_sql('CAST(doc_id AS VARCHAR)')}) % 1000 AS bucket
+         ({_MD5_60_SQL.format(x='CAST(doc_id AS VARCHAR)')}) % 1000 AS bucket
   FROM documents
 )
 SELECT doc_id, lang, bucket FROM keyed
@@ -956,7 +949,7 @@ _Q45_SQL = f"""
 WITH ranked AS (
   SELECT doc_id, source,
          ROW_NUMBER() OVER (PARTITION BY source
-                            ORDER BY {_md5h_sql('CAST(doc_id AS VARCHAR)')},
+                            ORDER BY {_MD5_60_SQL.format(x='CAST(doc_id AS VARCHAR)')},
                                      doc_id) AS rk
   FROM documents
 )
@@ -1173,12 +1166,12 @@ WITH toks AS (
 ), rows_ AS (
   SELECT unnest([{', '.join(str(i) for i in range(_CMS_D))}]) AS i
 ), cells AS (
-  SELECT i, {_md5h_sql("term || '|' || i")} % {_CMS_W} AS col,
+  SELECT i, {_MD5_60_SQL.format(x="term || '|' || i")} % {_CMS_W} AS col,
          COUNT(*) AS cnt
   FROM toks2 CROSS JOIN rows_ GROUP BY i, col
 ), pc AS (
   SELECT p.term, p.exact_n, r.i,
-         {_md5h_sql("p.term || '|' || r.i")} % {_CMS_W} AS col
+         {_MD5_60_SQL.format(x="p.term || '|' || r.i")} % {_CMS_W} AS col
   FROM probe p CROSS JOIN rows_ r
 )
 SELECT pc.term, pc.exact_n, CAST(MIN(c.cnt) AS BIGINT) AS est
@@ -1399,7 +1392,7 @@ _KMV_K = 16
 
 _Q48_SQL = f"""
 WITH pairs AS (
-  SELECT DISTINCT source, {_md5h_sql('text')} AS h FROM documents
+  SELECT DISTINCT source, {_MD5_60_SQL.format(x='text')} AS h FROM documents
 ), kept AS (
   SELECT source, h,
          ROW_NUMBER() OVER (PARTITION BY source ORDER BY h) AS rn
@@ -1686,7 +1679,7 @@ WITH toks AS (
          unnest(list_transform(range(1, len(t)), i -> t[i] || '_' || t[i+1])) AS g
   FROM toks WHERE len(t) >= 2
 ), hashed AS (
-  SELECT doc_id, {_md5h_sql('g')} AS h FROM grams
+  SELECT doc_id, {_MD5_60_SQL.format(x='g')} AS h FROM grams
 ), sums AS (
   SELECT doc_id, COUNT(*) AS n_sh,
          {', '.join(
@@ -1788,7 +1781,7 @@ def _centroid_case_sql(C: list[list[float]]):
     wins).
     q26 (IVF probe) and q68 (SemDeDup clustering) both depend on this
     staying bit-identical to the engine fold; keep it in one place for the
-    same reason _md5h_sql exists."""
+    same reason dedup.MD5_60_SQL is the one md5_60 twin."""
     n = len(C)
 
     def lits(c):
@@ -2123,7 +2116,7 @@ WITH toks AS (
 ), hashed AS (
   SELECT doc_id,
          list_transform(range(1, len(t) - {_WIN_K - 2}),
-           i -> {_md5h_sql(_WIN_GRAM_SQL)}) AS h
+           i -> {_MD5_60_SQL.format(x=_WIN_GRAM_SQL)}) AS h
   FROM ok
 ), fps AS (
   SELECT doc_id,
@@ -2218,9 +2211,10 @@ _DECON_BENCH_MOD = 20  # doc_id % MOD == 0 docs form the synthetic benchmark
       FROM documents WHERE length(trim(text)) > 0
     ), grams AS (
       SELECT DISTINCT doc_id,
-             {_md5h_sql("unnest(list_transform(range(1, len(t) - 3), i -> "
-                        "concat_ws(chr(95), t[i], t[i+1], t[i+2], t[i+3], "
-                        "t[i+4])))")} AS gh
+             {_MD5_60_SQL.format(
+                 x="unnest(list_transform(range(1, len(t) - 3), i -> "
+                   "concat_ws(chr(95), t[i], t[i+1], t[i+2], t[i+3], "
+                   "t[i+4])))")} AS gh
       FROM toks WHERE len(t) >= {_DECON_N}
     ), bench AS (
       SELECT DISTINCT gh FROM grams WHERE doc_id % {_DECON_BENCH_MOD} = 0
@@ -2316,7 +2310,7 @@ _BKQ_PERMILLES = (500, 900, 990)
     f"""
     WITH h AS (
       SELECT event_type, event_id, value,
-             {_md5h_sql('CAST(event_id AS VARCHAR)')} AS hh
+             {_MD5_60_SQL.format(x='CAST(event_id AS VARCHAR)')} AS hh
       FROM events
     ), sampled AS (
       SELECT event_type, event_id, value FROM (
@@ -2368,7 +2362,7 @@ _PACK_CAP, _PACK_SHARDS = 8192, 8
     f"""
     WITH h AS (
       SELECT doc_id, CAST(n_chars AS BIGINT) AS tokens,
-             {_md5h_sql('CAST(doc_id AS VARCHAR)')} AS hh
+             {_MD5_60_SQL.format(x='CAST(doc_id AS VARCHAR)')} AS hh
       FROM documents
     ), ordered AS (
       SELECT doc_id, tokens, hh % {_PACK_SHARDS} AS shard,
@@ -2415,10 +2409,10 @@ _BLOOM_M, _BLOOM_D = 4096, 5
     ), idx AS (
       SELECT text AS k FROM documents WHERE doc_id % 4 = 0
     ), bits AS (
-      SELECT DISTINCT {_md5h_sql("k || '|' || i")} % {_BLOOM_M} AS pos
+      SELECT DISTINCT {_MD5_60_SQL.format(x="k || '|' || i")} % {_BLOOM_M} AS pos
       FROM idx CROSS JOIN seeds
     ), pc AS (
-      SELECT d.doc_id, {_md5h_sql("d.text || '|' || s.i")} % {_BLOOM_M} AS pos
+      SELECT d.doc_id, {_MD5_60_SQL.format(x="d.text || '|' || s.i")} % {_BLOOM_M} AS pos
       FROM documents d CROSS JOIN seeds s
     ), hits AS (
       SELECT pc.doc_id,
@@ -2876,10 +2870,10 @@ _PREP_BENCH_MOD = 20
 
 
 def _q73_sql() -> str:
-    g = _md5h_sql(
-        "concat_ws(chr(95), " +
-        ", ".join(f"t[i+{j}]" for j in range(_PREP_GRAM_N)) + ")")
-    idh = _md5h_sql("CAST(id AS VARCHAR)")
+    g = _MD5_60_SQL.format(
+        x="concat_ws(chr(95), " +
+          ", ".join(f"t[i+{j}]" for j in range(_PREP_GRAM_N)) + ")")
+    idh = _MD5_60_SQL.format(x="CAST(id AS VARCHAR)")
     return f"""
     WITH base AS (
       SELECT doc_id AS id, source,
@@ -3270,18 +3264,18 @@ def _q78_sql() -> str:
     "q78_bpe_encode",
     _q78_sql(),
     doc="BPE tokenization with the trained merges (bpe.bpe_apply — the "
-        "inference half of q77): the ordered merge list applies as "
-        "2 x n_merges NESTED replace calls in ONE codegen'd projection "
-        "per document — zero shuffles, zero Python; true subword token "
-        "counts replace q10/q28's whitespace/regex surrogates. The "
-        "document-level symbol string is safe for word-level merges "
-        "because a learned pair's left component can never end with the "
-        "end-of-word marker (bpe._doc_rep docstring). Oracle: the q77 "
-        "training CTEs plus the same nested-replace application, so every "
-        "document's token count matches bit-for-bit. At 10^12 docs the "
-        "merge list ships as a literal expression (a few hundred learned "
-        "merges = a few hundred nested replaces, still one projection) or "
-        "the application moves into the extraction mapInPandas stage.",
+        "inference half of q77): one mapInPandas stage, zero shuffles — "
+        "the merge list rides a broadcast, each unique word runs the "
+        "min-rank merge loop with a monotone rank floor, memoized per "
+        "task, so cost per word is independent of merge-list length (the "
+        "path that holds at 100k merges). True subword token counts "
+        "replace q10/q28's whitespace/regex surrogates. Oracle: the q77 "
+        "training CTEs plus the in-order nested-replace application over "
+        "the document-level symbol string, which the encoder matches "
+        "byte for byte (differential-tested in tests/test_bpe.py; the "
+        "document-level string is safe for word-level merges because a "
+        "learned pair's left component can never end with the "
+        "end-of-word marker, bpe._doc_rep docstring).",
 )
 def q78(spark, sf_dir):
     from .bpe import SEP, bpe_apply, bpe_train
@@ -3290,30 +3284,6 @@ def q78(spark, sf_dir):
     trained = bpe_train(d, n_merges=_BPE_MERGES).orderBy("step").collect()
     merges = [r.left + SEP + r.right for r in trained]
     return bpe_apply(d, merges)
-
-
-@register(
-    "q81_bpe_encode_batch",
-    _q78_sql(),
-    doc="production-vocab BPE tokenization (bpe.bpe_apply_batch): the "
-        "mapInPandas escape hatch q78's plan needs past a few hundred "
-        "merges — broadcast merge ranks, per-unique-word min-rank merge "
-        "loop with a monotone rank floor, Zipfian word memoization per "
-        "task. BYTE-IDENTICAL to bpe_apply (same pre-filter, same "
-        "two-pass merge semantics, differential-tested at every tier in "
-        "tests/test_bpe.py), so it shares q78's oracle verbatim: the "
-        "driver proves the Python batch path against DuckDB's replay of "
-        "the nested-replace plan. Cost per word is O(applied_merges x "
-        "len) independent of vocab size — the path that holds at 100k "
-        "merges where a 200k-deep replace tree cannot codegen.",
-)
-def q81(spark, sf_dir):
-    from .bpe import SEP, bpe_apply_batch, bpe_train
-
-    d = _t(spark, sf_dir, "documents")
-    trained = bpe_train(d, n_merges=_BPE_MERGES).orderBy("step").collect()
-    merges = [r.left + SEP + r.right for r in trained]
-    return bpe_apply_batch(d, merges)
 
 
 _CHUNK_W, _CHUNK_S = 48, 32

@@ -119,9 +119,9 @@ class SchemaRegistry:
 # ---------------------------------------------------------------------------
 
 def _word_count(word: str) -> Callable[[Column], Column]:
-    from .analysis import stopword_hits
+    from .analysis import stopword_hits_any
 
-    return lambda text: stopword_hits(text, word)
+    return lambda text: stopword_hits_any(text, [word])
 
 
 def _contains_word(word: str) -> Callable[[Column], Column]:

@@ -2,7 +2,10 @@
 
 Local mode here is a proxy for a multi-executor cluster (the driver benches
 local[8] vs local[32] as the N vs 4N cluster-size stand-in). Settings chosen
-for the 100 TB target and annotated with why.
+for the 100 TB target and annotated with why. Spark's own defaults (AQE
+on, 128 MiB file splits, 4 task attempts) are left unset here: a conf set
+here overrides ``spark-submit --conf``, so pinning them would only block a
+cluster operator's overrides.
 """
 
 from __future__ import annotations
@@ -40,27 +43,9 @@ def get_spark(app: str = "webextract", master: str | None = None,
     master = master or f"local[{cpus}]"
     b = (
         SparkSession.builder.master(master).appName(app)
-        # AQE: post-shuffle coalesce + skew-join splitting — the runtime half
-        # of our explicit-partitioning story (north rule).
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", ARROW_BATCH_ROWS)
-        # parquet scans: 128 MiB splits is the right default for big files;
-        # tiny local fixtures are coalesced by AQE anyway.
-        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        # Transient-failure retry surface (reference production-patterns
-        # retries/backoff, docs/guides/production-patterns.md:267-410): Spark
-        # retries a failed task this many times on other executors before
-        # failing the stage. Per-row *permanent* parse failures never throw —
-        # they land in the DLQ (sparkjob.split_errors) and can be re-driven
-        # with runner.reprocess_errors; this conf covers infra blips
-        # (executor loss, OOM, shuffle fetch). local[*] keeps the default
-        # behavior of failing fast only when retries are exhausted.
-        .config("spark.task.maxFailures",
-                os.environ.get("WEBEXTRACT_TASK_MAX_FAILURES", "4"))
         .config("spark.ui.enabled", "false")
         # Spark's codegen cache holds 100 compiled classes by default; one
         # curate run generates ~120, so every rerun in the session evicted
@@ -70,7 +55,7 @@ def get_spark(app: str = "webextract", master: str | None = None,
         .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("WEBEXTRACT_DRIVER_MEM", "8g"))
     )
-    n_shuffle = shuffle_partitions or int(os.environ.get("WEBEXTRACT_SHUFFLE", cpus))
+    n_shuffle = shuffle_partitions or int(cpus)
     b = b.config("spark.sql.shuffle.partitions", str(n_shuffle))
     for k, v in (extra or {}).items():
         b = b.config(k, v)

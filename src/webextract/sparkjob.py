@@ -5,7 +5,7 @@ Plan shape (SURVEY.md §3.1 translation of the reference's
 
     scan(web_pages)                       # parquet/Iceberg; pruned columns
       → [salted repartition on url hash]  # defuse domain skew (north rule)
-      → mapInPandas(extract_batch)        # fused parse→clean→segment,
+      → mapInPandas(extract_batches)      # fused parse→clean→segment,
                                           #   per-row failure capture
       → write (ok rows / error rows)
 
@@ -27,6 +27,7 @@ Scale notes
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Iterator
 
 import pandas as pd
@@ -57,31 +58,17 @@ EXTRACTED_SCHEMA = T.StructType([
     T.StructField("partition_id", T.IntegerType()),
 ])
 
-# Default salt for the url-hash repartition; a fixed literal keeps runs
-# deterministic while still decorrelating from any upstream url-hash layout.
+# Salt for the url-hash repartition (and runner.bucket_col's default); a
+# fixed literal keeps runs deterministic while still decorrelating from any
+# upstream url-hash layout.
 DEFAULT_SALT = 0x5EED
 
 
-def make_extract_batches(link_density_max: float = 0.5,
-                         min_chars_linked: int = 25):
-    """Build the mapInPandas body with extractor thresholds closed over
-    (shipped to executors in the serialized closure — the Spark analog of the
-    reference's PipelineContext passed to every stage)."""
-
-    def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return _extract_batches(batches, link_density_max, min_chars_linked)
-
-    return extract_batches
-
-
-def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Default-threshold mapInPandas body (see make_extract_batches)."""
-    return _extract_batches(batches, 0.5, 25)
-
-
-def _extract_batches(batches: Iterator[pd.DataFrame], link_density_max: float,
-                     min_chars_linked: int) -> Iterator[pd.DataFrame]:
-    """Vectorized over Arrow batches, per-document loop inside the batch.
+def extract_batches(batches: Iterator[pd.DataFrame],
+                    link_density_max: float = 0.5,
+                    min_chars_linked: int = 25) -> Iterator[pd.DataFrame]:
+    """The mapInPandas body: vectorized over Arrow batches, per-document
+    loop inside the batch, extractor thresholds passed to every document.
 
     Runs on executors; must import nothing driver-local. TaskContext gives the
     physical partition id for the metrics/lineage tables.
@@ -160,25 +147,14 @@ def pick_partitions(df: DataFrame, target_bytes: int = 96 * 1024 * 1024,
     """Partition count from input size, not a constant.
 
     At 100 TB this is what keeps per-task work bounded (~96 MiB of html per
-    task); locally it collapses to the core count. Resolution order:
+    task); locally it collapses to the core count. ``extract_df``'s
+    ``num_partitions`` is the explicit override. Resolution order:
 
-    1. ``spark.webextract.extract.partitions`` session conf — the explicit
-       cluster-operator override;
-    2. public ``df.inputFiles()`` byte-summing (local/file scans);
-    3. the optimizer's byte statistics via the private ``_jdf`` handle —
+    1. public ``df.inputFiles()`` byte-summing (local/file scans);
+    2. the optimizer's byte statistics via the private ``_jdf`` handle —
        works for remote stores, but may break on Spark upgrades, hence last;
-    4. ``default``.
+    3. ``default``.
     """
-    try:
-        conf = df.sparkSession.conf.get("spark.webextract.extract.partitions", None)
-    except Exception:  # noqa: BLE001 — conf surface unavailable: keep resolving
-        conf = None
-    if conf is not None and conf != "":
-        n = int(conf)  # an explicit operator override must apply or FAIL loudly
-        if n <= 0:
-            raise ValueError(
-                f"spark.webextract.extract.partitions must be positive, got {conf!r}")
-        return n
     nbytes = 0
     try:
         nbytes = _input_bytes(df)
@@ -196,8 +172,7 @@ def pick_partitions(df: DataFrame, target_bytes: int = 96 * 1024 * 1024,
     return max(default, min(1_000_000, nbytes // target_bytes + 1))
 
 
-def extract_df(pages: DataFrame, *, salt: int = DEFAULT_SALT,
-               num_partitions: int | None = None,
+def extract_df(pages: DataFrame, *, num_partitions: int | None = None,
                repartition: bool = True,
                link_density_max: float = 0.5,
                min_chars_linked: int = 25) -> DataFrame:
@@ -220,8 +195,14 @@ def extract_df(pages: DataFrame, *, salt: int = DEFAULT_SALT,
     df = pages.select(*cols)
     if repartition:
         n = num_partitions or pick_partitions(df)
-        df = df.repartition(n, F.xxhash64(F.col("url"), F.lit(salt)))
-    fn = make_extract_batches(link_density_max, min_chars_linked)
+        df = df.repartition(n, F.xxhash64(F.col("url"), F.lit(DEFAULT_SALT)))
+    # the thresholds ride the pickled partial to executors (the Spark analog
+    # of the reference's PipelineContext passed to every stage); the copied
+    # __name__ keeps "extract_batches" as the UDF's name in physical plans
+    fn = functools.update_wrapper(
+        functools.partial(extract_batches, link_density_max=link_density_max,
+                          min_chars_linked=min_chars_linked),
+        extract_batches)
     return df.mapInPandas(fn, schema=EXTRACTED_SCHEMA)
 
 

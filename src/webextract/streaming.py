@@ -178,7 +178,7 @@ def dedup_stream(extracted_stream: DataFrame, *, text_col: str = "text",
     """Custom stateful operator: streaming exact-dedup across micro-batches
     (``applyInPandasWithState``).
 
-    The streaming twin of :func:`webextract.dedup.exact_duplicates`: the
+    The streaming twin of :func:`webextract.dedup.best_copy`: the
     FIRST document carrying a given normalized-content fingerprint passes,
     every later duplicate (same batch or any later micro-batch — recrawls,
     mirrors) is dropped. Grouping key is ``xxhash64(normalized text)``, so

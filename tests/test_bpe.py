@@ -1,11 +1,31 @@
 """Distributed BPE training (webextract.bpe): merge semantics vs the
-classic greedy array merge, determinism, and end-to-end merge learning."""
+classic greedy array merge, determinism, and end-to-end merge learning;
+bpe_apply differential-tested against the nested-replace reference."""
 
 import random
 
 from pyspark.sql import functions as F
 
-from webextract.bpe import SEP, bpe_train, merge_expr
+from webextract.bpe import SEP, _doc_rep, bpe_apply, bpe_train, merge_expr
+
+
+def _bpe_apply_nested(docs, merges, *, text_col="text", id_col="doc_id"):
+    """Reference encoder: every merge in training order as merge_expr's
+    anchored double replace over the whole-document symbol string
+    (bpe._doc_rep) — 2 x len(merges) nested ``replace`` calls in one
+    projection, the form q78's oracle replays in DuckDB. It cannot build
+    past ~1k merges; bpe.bpe_apply must match it byte for byte."""
+    rep_sql = "rep"
+    for pair in merges:
+        rep_sql = merge_expr(pair, rep_sql)
+    return (
+        docs.filter(F.length(F.trim(text_col)) > 0)
+        .select(F.col(id_col), _doc_rep(text_col).alias("rep"),
+                F.size(F.split(F.trim(text_col), r"\s+")).alias("n_words"))
+        .select(id_col, F.col("n_words").cast("long").alias("n_words"),
+                (F.size(F.split(F.expr(rep_sql), SEP)) - 2)
+                .cast("long").alias("n_tokens"))
+    )
 
 
 def _greedy(syms, a, b):
@@ -162,8 +182,6 @@ def test_bpe_train_stops_when_fully_merged(spark):
 
 
 def test_bpe_apply_matches_reference_tokenization(spark):
-    from webextract.bpe import bpe_apply
-
     docs = [(1, "low lower low"), (2, "newest new"), (3, "ab abab")]
     wc: dict[str, int] = {}
     for _, t in docs:
@@ -187,24 +205,23 @@ def test_bpe_apply_matches_reference_tokenization(spark):
            for r in bpe_apply(df, pairs).collect()}
     for i, t in docs:
         assert got[i] == (len(t.split()), ref_count(t)), (i, t, got[i])
+    nested = {r.doc_id: (r.n_words, r.n_tokens)
+              for r in _bpe_apply_nested(df, pairs).collect()}
+    assert got == nested
 
 
 def test_bpe_apply_zero_merges_counts_chars_plus_markers(spark):
-    from webextract.bpe import bpe_apply
-
     df = spark.createDataFrame([(1, "ab c")], "doc_id long, text string")
     r = bpe_apply(df, []).first()
     assert (r.n_words, r.n_tokens) == (2, 2 + 1 + 1 + 1)  # a,b,</w>,c,</w>
 
 
 def test_bpe_apply_batch_matches_nested_replace(spark):
-    """bpe_apply_batch is byte-identical to bpe_apply on a corpus that
-    hits every documented edge: multi-space/tab runs (Java-\\s split
+    """bpe_apply is byte-identical to the nested-replace reference on a
+    corpus that hits every documented edge: multi-space/tab runs (Java-\\s split
     parity), self-pair odd runs (two-pass pairing), backslashes/quotes
     (literal escaping), repeated words (the memo cache), and words where
     later merges create new adjacencies (the rank floor)."""
-    from webextract.bpe import bpe_apply, bpe_apply_batch
-
     docs = [
         (1, "low lower low lowest"),
         (2, "aaaaa aaaa aaa haha hahaha"),
@@ -218,15 +235,13 @@ def test_bpe_apply_batch_matches_nested_replace(spark):
     merges = [r.left + SEP + r.right
               for r in bpe_train(df, n_merges=12).orderBy("step").collect()]
     a = {r.doc_id: (r.n_words, r.n_tokens)
-         for r in bpe_apply(df, merges).collect()}
+         for r in _bpe_apply_nested(df, merges).collect()}
     b = {r.doc_id: (r.n_words, r.n_tokens)
-         for r in bpe_apply_batch(df, merges).collect()}
+         for r in bpe_apply(df, merges).collect()}
     assert a == b and len(a) == len(docs)
 
 
 def test_bpe_apply_batch_random_differential(spark):
-    from webextract.bpe import bpe_apply, bpe_apply_batch
-
     rnd = random.Random(29)
     docs = []
     for i in range(40):
@@ -237,18 +252,16 @@ def test_bpe_apply_batch_random_differential(spark):
     df = spark.createDataFrame(docs, "doc_id long, text string")
     merges = [r.left + SEP + r.right
               for r in bpe_train(df, n_merges=10).orderBy("step").collect()]
-    a = sorted(tuple(r) for r in bpe_apply(df, merges).collect())
-    b = sorted(tuple(r) for r in bpe_apply_batch(df, merges).collect())
+    a = sorted(tuple(r) for r in _bpe_apply_nested(df, merges).collect())
+    b = sorted(tuple(r) for r in bpe_apply(df, merges).collect())
     assert a == b
 
 
 def test_bpe_apply_batch_holds_at_production_merge_count(spark):
-    """The scale claim: 30k merges through the batch path. Absent pairs
-    cost O(1) (rank-dict miss), so padding the trained list with 30k
+    """The scale claim: 30k merges through bpe_apply. Absent pairs cost
+    O(1) (rank-dict miss), so padding the trained list with 30k
     never-occurring merges must not change output — and the nested-replace
-    path could not even BUILD a 60k-deep replace expression."""
-    from webextract.bpe import bpe_apply, bpe_apply_batch
-
+    reference could not even BUILD a 60k-deep replace expression."""
     df = spark.createDataFrame(
         [(1, "low lower lowest low"), (2, "newest new")],
         "doc_id long, text string")
@@ -257,8 +270,8 @@ def test_bpe_apply_batch_holds_at_production_merge_count(spark):
     # symbols like 'pad17x' are never formed from single chars without a
     # chain of merges creating them, so these pairs never match
     padded = real + [f"pad{i}x{SEP}pad{i}y" for i in range(30_000)]
-    want = sorted(tuple(r) for r in bpe_apply(df, real).collect())
-    got = sorted(tuple(r) for r in bpe_apply_batch(df, padded).collect())
+    want = sorted(tuple(r) for r in _bpe_apply_nested(df, real).collect())
+    got = sorted(tuple(r) for r in bpe_apply(df, padded).collect())
     assert got == want
 
 
@@ -279,18 +292,16 @@ def test_bpe_train_batched_semantics_pinned(spark):
 
 
 def test_bpe_apply_batch_plan_is_single_arrow_stage(spark):
-    """Plan guard for the production path (q81): parquet-free here, but the
-    shape must be scan -> projection -> ONE MapInPandas with ZERO
-    exchanges (the whole point of the batch path is per-partition
-    tokenization with a broadcast merge list), and the merge list itself
-    must ride the broadcast — never appear inlined in the plan."""
-    from webextract.bpe import bpe_apply_batch
-
+    """Plan guard for bpe_apply (q78): parquet-free here, but the shape
+    must be scan -> projection -> ONE MapInPandas with ZERO exchanges (the
+    whole point of the batch encoder is per-partition tokenization with a
+    broadcast merge list), and the merge list itself must ride the
+    broadcast — never appear inlined in the plan."""
     df = spark.createDataFrame(
         [(i, "low lower lowest") for i in range(10)],
         "doc_id long, text string")
     merges = ["l" + SEP + "o", "lo" + SEP + "w"]
-    out = bpe_apply_batch(df, merges)
+    out = bpe_apply(df, merges)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInPandas") == 1, plan
     assert "Exchange" not in plan, plan

@@ -62,6 +62,31 @@ def test_thresholds_change_extraction():
     assert extract_document(html, link_density_max=0.05).text == ""
 
 
+def test_thresholds_reach_executors(spark):
+    """extract_df ships its thresholds into the mapInPandas body: under a
+    strict link-density cap the executors drop the planted link-bearing
+    paragraph and keep the plain one, exactly as extract_document does."""
+    import datetime
+
+    from webextract.sparkjob import extract_df
+
+    plain = "A plain paragraph that carries enough ordinary words to be kept."
+    html = (f"<html><body><p>{plain}</p><p>Plain long paragraph with one "
+            '<a href="/x">link word</a> inside and lots of other text.</p>'
+            "</body></html>").encode()
+    pages = spark.createDataFrame(
+        [("u1", datetime.datetime(2024, 1, 1), "en", html)],
+        "url string, warc_ts timestamp, lang string, html binary")
+    loose = extract_df(pages, repartition=False).first()
+    strict_df = extract_df(pages, repartition=False, link_density_max=0.05)
+    # the bound thresholds keep the body's name in the physical plan
+    assert "extract_batches(" in strict_df._jdf.queryExecution().executedPlan().toString()
+    strict = strict_df.first()
+    assert "link word" in loose.text
+    assert strict.status == "ok" and strict.text == plain
+    assert strict.text == extract_document(html, link_density_max=0.05).text
+
+
 def test_cli_curate_end_to_end(spark, tmp_path, capsys):
     import json
 

@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from webextract.dedup import (
-    exact_duplicates,
+    best_copy,
     jaccard_pairs,
     minhash_lsh_pairs,
     simhash_pairs,
@@ -135,12 +135,14 @@ def docs(spark):
 
 
 def test_exact_duplicates(docs):
-    out = exact_duplicates(docs).cache()
-    dups = {r.url: r.canonical_id for r in out.filter("is_duplicate = 1").collect()}
+    """best_copy without a quality column is plain exact dedup: each
+    planted copy points at its min-id original."""
+    out = best_copy(docs).cache()
+    dups = {r.url: r.canonical_id for r in out.filter("is_kept = 0").collect()}
     assert set(dups) == {f"dup{i:03d}" for i in range(5)}
     for i in range(5):
         assert dups[f"dup{i:03d}"] == f"doc{i:03d}"
-    assert out.filter("is_duplicate = 0").count() == 70
+    assert out.filter("is_kept = 1").count() == 70
 
 
 def test_jaccard_pairs_finds_planted(docs):
@@ -316,11 +318,11 @@ def test_md5_minhash_mode_finds_planted_pairs(spark):
 def test_exact_duplicates_md5_mode_matches_xxhash(docs):
     """The portable (oracle) hash and the production hash induce the same
     duplicate groups — same normalization, different fingerprint."""
-    cols = ("url", "canonical_id", "is_duplicate", "group_size")
+    cols = ("url", "canonical_id", "is_kept", "group_size")
     xx = {tuple(getattr(r, c) for c in cols)
-          for r in exact_duplicates(docs, hash_fn="xxhash64").collect()}
+          for r in best_copy(docs, hash_fn="xxhash64").collect()}
     md = {tuple(getattr(r, c) for c in cols)
-          for r in exact_duplicates(docs, hash_fn="md5_60").collect()}
+          for r in best_copy(docs, hash_fn="md5_60").collect()}
     assert xx == md
 
 
@@ -329,8 +331,7 @@ def test_exact_dedup_hashed_plan_exchanges_hash_key(spark):
     on the 8-byte text_hash — the raw text column never appears as an
     exchange key (q13's window-over-full-text form is the anti-scale twin)."""
     d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    out = exact_duplicates(d, text_col="text", id_col="doc_id",
-                           hash_fn="md5_60")
+    out = best_copy(d, text_col="text", id_col="doc_id", hash_fn="md5_60")
     plan = out._jdf.queryExecution().executedPlan().toString()
     ex_lines = [ln for ln in plan.splitlines() if "Exchange hashpartitioning" in ln]
     assert ex_lines, "expected at least one hash exchange (groupBy + join)"
@@ -433,8 +434,6 @@ def test_minhash_signatures_have_single_id_exchange(spark):
 
 
 def test_best_copy_keeps_highest_quality(spark):
-    from webextract.dedup import best_copy
-
     d = spark.createDataFrame(
         [(1, "same content here", 10), (2, "same  content\nhere", 30),
          (3, "same content here", 30), (4, "unique", 5)],
@@ -451,8 +450,6 @@ def test_best_copy_keeps_highest_quality(spark):
 
 def test_best_copy_string_ids(spark):
     # string ids must work (no numeric negation of the id in the tie-break)
-    from webextract.dedup import best_copy
-
     d = spark.createDataFrame(
         [("http://a/x", "same thing", 5), ("http://a/y", "same thing", 9),
          ("http://a/z", "same thing", 9)],

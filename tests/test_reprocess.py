@@ -224,12 +224,6 @@ def test_pick_partitions_paths(spark, corpus_dir, pages):
     # non-file DataFrame: falls back (stats or default), never raises
     inline = spark.createDataFrame([(1,)], "a int")
     assert pick_partitions(inline, default=7) >= 1
-    # conf override wins
-    spark.conf.set("spark.webextract.extract.partitions", "13")
-    try:
-        assert pick_partitions(pages) == 13
-    finally:
-        spark.conf.unset("spark.webextract.extract.partitions")
 
 
 def test_empty_waves_commit_cleanly(spark, tmp_path):
