@@ -414,13 +414,6 @@ def pii_redact_columns(text_col: str = "text",
     return counts, red
 
 
-def pii_redact_df(df: DataFrame, *, id_col: str = "doc_id",
-                  text_col: str = "text",
-                  rules: list[tuple[str, str, str]] | None = None) -> DataFrame:
-    counts, red = pii_redact_columns(text_col, rules)
-    return df.select(F.col(id_col), *counts, red.alias("text_redacted"))
-
-
 # ---------------------------------------------------------------------------
 # KMV distinct-count sketch
 # ---------------------------------------------------------------------------

@@ -56,16 +56,6 @@ def _content_text(block: Block, link_density_max: float,
     return text
 
 
-def is_boilerplate(block: Block, *, link_density_max: float = LINK_DENSITY_MAX,
-                   min_chars_linked: int = MIN_CHARS_LINKED) -> bool:
-    """Apply rules B1–B5. Deterministic; no randomness, no global state.
-
-    Thresholds are overridable per run via ExtractorConfig (config.py) but
-    default to the byte-identity spec values.
-    """
-    return _content_text(block, link_density_max, min_chars_linked) is None
-
-
 def select_content(blocks: list[Block], *,
                    link_density_max: float = LINK_DENSITY_MAX,
                    min_chars_linked: int = MIN_CHARS_LINKED) -> list[tuple[str, str]]:

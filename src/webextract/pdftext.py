@@ -110,8 +110,3 @@ def extract_pdf_pages(raw: bytes) -> list[list[str]]:
         if paragraphs:
             pages.append(paragraphs)
     return pages
-
-
-def extract_pdf_text(raw: bytes) -> list[str]:
-    """All paragraphs across pages, document order (flattened view)."""
-    return [p for page in extract_pdf_pages(raw) for p in page]

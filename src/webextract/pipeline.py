@@ -69,8 +69,8 @@ def curate(pages: DataFrame, *, lang_rates: dict[str, int] | None = None,
 
     # --- recrawl resolution: latest successful crawl per url -------------
     # recrawls REPEAT the id (same url, new warc_ts) — every downstream
-    # id-keyed step assumes id uniqueness, so resolve first (q04's shape:
-    # row_number over (id ORDER BY ts desc)). Tie-break equal timestamps by
+    # id-keyed step assumes id uniqueness, so resolve first
+    # (row_number over (id ORDER BY ts desc)). Tie-break equal timestamps by
     # md5(text) DESC: deterministic across runs/engines (a bare ts order
     # would let Spark pick an arbitrary copy, making downstream dedup
     # membership non-reproducible)
@@ -206,8 +206,9 @@ def pretrain_prep(docs: DataFrame, bench: DataFrame, *,
 
         docs ──decontaminate──► clean      (q60's gram-overlap drop vs
                                             ``bench``'s hashed n-gram index)
-             ──rebalance──► mixed          (q72's alpha=0.5 temperature
-                                            quotas → per-source hash gate)
+             ──rebalance──► mixed          (:func:`_rebalance`'s alpha=0.5
+                                            temperature quotas → per-source
+                                            hash gate)
              ──pack──► chunk assignment    (sampling.pack_sequences)
 
     Rebalancing: per-source token mass m_i gets weight w_i = isqrt(m_i);

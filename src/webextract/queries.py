@@ -1,14 +1,13 @@
 """Driver-checkable query registry: Spark DataFrame impl + DuckDB oracle SQL.
 
-Each entry exercises one operator family from SURVEY.md §2.2 (the relational
-surface of the engine) or one training-data-pipeline operation (dedup,
-similarity, text analytics) over the driver's testdata tables. The Spark side
-is written DataFrame-first; the oracle is independent ANSI SQL for DuckDB.
+Each entry runs one webextract operator (dedup, similarity, text analytics,
+sampling, relational helpers, composed pipelines) over the testdata
+tables, and every entry carries an oracle: independent ANSI SQL for DuckDB.
 
 Portability rules that make value-hash comparison exact:
-- money aggregates are computed in DECIMAL (exact) and only cast to double
-  at the end, so Spark's partial aggregation order can't produce float drift
-  vs DuckDB's sequential sum;
+- money aggregates (q53's value sum) are computed in DECIMAL (exact) and
+  only cast to double at the end, so Spark's partial aggregation order can't
+  produce float drift vs DuckDB's sequential sum;
 - float outputs that cannot be exact (similarity ratios, averages) are
   rounded to a fixed scale on BOTH sides;
 - every computed column is aliased identically on both sides (driver compares
@@ -34,10 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 # §2.5, input skew: "one huge unsplittable file — repartition immediately
 # after the read"). Keyed by the table's unique id → deterministic under
 # retries (never rand), uniform, no pre-shuffle sort; partition count
-# follows the session's parallelism, not a constant. The wide fact tables
-# (lineitem/orders/events) keep their plain scans: their consumers
-# aggregate/project cheaply per row, where a forced shuffle of the raw
-# rows would cost more than the scan-stage work it parallelizes.
+# follows the session's parallelism, not a constant.
 _SPREAD_TABLES = {"documents": "doc_id", "embeddings": "vec_id",
                   "events": "event_id"}
 
@@ -53,14 +49,14 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 @dataclass
 class QuerySpec:
     spark: Callable[[SparkSession, str], DataFrame]
-    sql: str | None  # None → rows-only check (non-SQL-expressible)
+    sql: str  # DuckDB oracle: every entry is value-checked
     doc: str = ""
 
 
 _REGISTRY: dict[str, QuerySpec] = {}
 
 
-def register(name: str, sql: str | None, doc: str = ""):
+def register(name: str, sql: str, doc: str = ""):
     """Add ``fn`` to the registry under ``name``. A name already held by a
     different function is an error: a silent overwrite would drop a query
     (re-executing the module that defines ``fn`` re-registers it in place)."""
@@ -73,308 +69,6 @@ def register(name: str, sql: str | None, doc: str = ""):
         _REGISTRY[name] = QuerySpec(spark=fn, sql=sql, doc=doc)
         return fn
     return deco
-
-
-# --------------------------------------------------------------------------
-# Relational surface (SURVEY.md §2.2): scan/filter/project, agg, join,
-# window, sort/top-k, set ops, anti-join, rollup
-# --------------------------------------------------------------------------
-
-_DEC = "decimal(18,2)"
-
-
-@register(
-    "q01_pricing_summary",
-    """
-    SELECT l_returnflag, l_linestatus,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                    * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
-           COUNT(*) AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-    GROUP BY l_returnflag, l_linestatus
-    """,
-    doc="hash aggregate with map-side combine; filter pushed to scan (TPC-H Q1 shape)",
-)
-def q01(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(F.col("l_quantity").cast(_DEC)).cast("double").alias("sum_qty"),
-            F.sum(F.col("l_extendedprice").cast(_DEC)).cast("double").alias("sum_base_price"),
-            F.sum(F.col("l_extendedprice").cast(_DEC)
-                  * (F.lit(1) - F.col("l_discount").cast(_DEC)))
-             .cast("double").alias("sum_disc_price"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-@register(
-    "q02_revenue_by_segment",
-    """
-    SELECT c.c_mktsegment,
-           CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-           COUNT(*) AS n_orders
-    FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-    GROUP BY c.c_mktsegment
-    """,
-    doc="broadcast equi-join (small dim) + aggregation",
-)
-def q02(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    return (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .groupBy("c_mktsegment")
-        .agg(
-            F.sum(F.col("o_totalprice").cast(_DEC)).cast("double").alias("revenue"),
-            F.count("*").alias("n_orders"),
-        )
-    )
-
-
-@register(
-    "q03_top_customers",
-    """
-    SELECT c.c_custkey, c.c_name,
-           CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-    FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-    GROUP BY c.c_custkey, c.c_name
-    ORDER BY SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) DESC, c.c_custkey
-    LIMIT 10
-    """,
-    doc="join + agg + total-order top-k (ties broken by key: LIMIT cuts identically)",
-)
-def q03(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    rev = (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .groupBy("c_custkey", "c_name")
-        .agg(F.sum(F.col("o_totalprice").cast(_DEC)).alias("rev_dec"))
-    )
-    return (
-        rev.orderBy(F.col("rev_dec").desc(), F.col("c_custkey"))
-        .limit(10)
-        .select("c_custkey", "c_name", F.col("rev_dec").cast("double").alias("revenue"))
-    )
-
-
-@register(
-    "q04_latest_event_per_user",
-    """
-    SELECT user_id, event_id, ts, event_type
-    FROM (
-      SELECT user_id, event_id, ts, event_type,
-             ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-      FROM events
-    ) WHERE rn = 1
-    """,
-    doc="window dedupe — the recrawl 'latest per url' pattern on the events table",
-)
-def q04(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").desc())
-    return (
-        e.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "event_id", "ts", "event_type")
-    )
-
-
-@register(
-    "q05_customers_without_big_orders",
-    """
-    SELECT c_custkey, c_name FROM customer c
-    WHERE NOT EXISTS (SELECT 1 FROM orders o
-                      WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 400000.0)
-    """,
-    doc="left-anti join — the lineage resume pattern (pending = all minus completed)",
-)
-def q05(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    o = (_t(spark, sf_dir, "orders")
-         .filter(F.col("o_totalprice") > 400000.0)
-         .select(F.col("o_custkey").alias("c_custkey")))
-    return c.join(o, "c_custkey", "left_anti").select("c_custkey", "c_name")
-
-
-@register(
-    "q06_filtered_events",
-    """
-    SELECT event_id, user_id, CAST(ROUND(value, 2) AS DOUBLE) AS value
-    FROM events WHERE event_type = 'purchase' AND value > 150.0
-    """,
-    doc="projection + predicate pushdown to the parquet scan",
-)
-def q06(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
-    return (
-        e.filter((F.col("event_type") == "purchase") & (F.col("value") > 150.0))
-        .select("event_id", "user_id", F.round("value", 2).cast("double").alias("value"))
-    )
-
-
-@register(
-    "q07_event_type_setops",
-    """
-    SELECT event_type FROM events WHERE value > 150.0
-    EXCEPT
-    SELECT event_type FROM events WHERE value > 360.0
-    """,
-    doc="set operations (EXCEPT/distinct)",
-)
-def q07(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
-    hi = e.filter(F.col("value") > 150.0).select("event_type")
-    vhi = e.filter(F.col("value") > 360.0).select("event_type")
-    return hi.distinct().exceptAll(vhi.distinct())
-
-
-@register(
-    "q08_event_rollup",
-    """
-    SELECT event_type, COUNT(*) AS n,
-           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-    FROM events GROUP BY ROLLUP (event_type)
-    """,
-    doc="rollup / grouping sets (super-aggregate row included)",
-)
-def q08(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
-    return e.rollup("event_type").agg(
-        F.count("*").alias("n"),
-        F.sum(F.col("value").cast(_DEC)).cast("double").alias("total_value"),
-    )
-
-
-_EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-
-
-@register(
-    "q20_user_event_pivot",
-    f"""
-    SELECT user_id,
-           {', '.join(f"COUNT(CASE WHEN event_type = '{t}' THEN 1 END) AS {t}"
-                      for t in _EVENT_TYPES)}
-    FROM events GROUP BY user_id
-    """,
-    doc="pivot (wide conditional aggregation) of event counts per user",
-)
-def q20(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
-    return (
-        e.groupBy("user_id")
-        .pivot("event_type", _EVENT_TYPES)
-        .agg(F.count(F.lit(1)))
-        .na.fill(0, _EVENT_TYPES)
-    )
-
-
-@register(
-    "q21_customers_with_recent_orders",
-    """
-    SELECT c_custkey, c_mktsegment FROM customer c
-    WHERE EXISTS (SELECT 1 FROM orders o
-                  WHERE o.o_custkey = c.c_custkey
-                    AND o.o_orderdate >= TIMESTAMP '1997-01-01 00:00:00')
-    """,
-    doc="left-semi join (EXISTS) — complement of the q05 anti-join",
-)
-def q21(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    o = (_t(spark, sf_dir, "orders")
-         .filter(F.col("o_orderdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
-         .select(F.col("o_custkey").alias("c_custkey")))
-    return c.join(o, "c_custkey", "left_semi").select("c_custkey", "c_mktsegment")
-
-
-@register(
-    "q22_lineitem_cube",
-    """
-    SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS total_qty
-    FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-    """,
-    doc="cube / grouping sets over two dimensions (all 4 grouping combos)",
-)
-def q22(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    return li.cube("l_returnflag", "l_linestatus").agg(
-        F.count("*").alias("n"),
-        F.sum(F.col("l_quantity").cast(_DEC)).cast("double").alias("total_qty"),
-    )
-
-
-@register(
-    "q23_orders_by_month",
-    """
-    SELECT CAST(EXTRACT(year FROM o_orderdate) AS INT) AS order_year,
-           CAST(EXTRACT(month FROM o_orderdate) AS INT) AS order_month,
-           COUNT(*) AS n_orders,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-    FROM orders GROUP BY 1, 2
-    """,
-    doc="scalar date functions (year/month extraction) + time-bucketed agg",
-)
-def q23(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    return (
-        o.groupBy(
-            F.year("o_orderdate").cast("int").alias("order_year"),
-            F.month("o_orderdate").cast("int").alias("order_month"),
-        )
-        .agg(F.count("*").alias("n_orders"),
-             F.sum(F.col("o_totalprice").cast(_DEC)).cast("double").alias("revenue"))
-    )
-
-
-@register(
-    "q24_event_value_percentiles",
-    """
-    SELECT event_type,
-           CAST(ROUND(quantile_cont(value, 0.5), 6) AS DOUBLE) AS p50,
-           CAST(ROUND(quantile_cont(value, 0.95), 6) AS DOUBLE) AS p95
-    FROM events GROUP BY event_type
-    """,
-    doc="exact interpolated percentiles (Spark percentile == DuckDB quantile_cont)",
-)
-def q24(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
-    return e.groupBy("event_type").agg(
-        F.round(F.expr("percentile(value, 0.5)"), 6).cast("double").alias("p50"),
-        F.round(F.expr("percentile(value, 0.95)"), 6).cast("double").alias("p95"),
-    )
-
-
-@register(
-    "q25_json_props",
-    """
-    SELECT CAST(json_extract(props, '$.k') AS INT) AS k_bucket,
-           COUNT(*) AS n,
-           CAST(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2) AS DOUBLE) AS total_value
-    FROM events
-    WHERE CAST(json_extract(props, '$.k') AS INT) < 10
-    GROUP BY 1
-    """,
-    doc="semi-structured JSON column extraction (get_json_object) + agg",
-)
-def q25(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
-    k = F.get_json_object("props", "$.k").cast("int")
-    return (
-        e.withColumn("k_bucket", k)
-        .filter(F.col("k_bucket") < 10)
-        .groupBy("k_bucket")
-        .agg(F.count("*").alias("n"),
-             F.round(F.sum(F.col("value").cast(_DEC)), 2).cast("double")
-              .alias("total_value"))
-    )
 
 
 # --------------------------------------------------------------------------
@@ -402,33 +96,6 @@ def _hits_sql(c: str, word: str) -> str:
     padded = f"' ' || {norm} || ' '"
     return (f"CAST((length({padded}) - "
             f"length(replace({padded}, '{pat}', ''))) / {len(pat)} AS BIGINT)")
-
-
-@register(
-    "q09_doc_stats_by_lang",
-    """
-    SELECT lang, COUNT(*) AS n_docs,
-           CAST(((SUM(n_chars) * 20000 + COUNT(*)) // (2 * COUNT(*))) / 10000.0
-                AS DOUBLE) AS avg_chars,
-           CAST(SUM(n_chars) AS BIGINT) AS total_chars
-    FROM documents GROUP BY lang
-    """,
-    doc="corpus profiling aggregate (per-language doc stats); the 4-dp "
-        "rounded mean is computed with exact integer half-up arithmetic "
-        "((sum*2e4 + n) div (2n)) so partial-aggregation order can't drift "
-        "the last double ulp between engines; total_chars is cast BIGINT "
-        "because DuckDB types SUM(INTEGER) as HUGEINT, which pandas converts "
-        "to float64 ('19525.0') while Spark emits a long ('19525') — any "
-        "raw un-cast SUM reaching the output desyncs the driver's value hash",
-)
-def q09(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    return d.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        (F.expr("(sum(n_chars) * 20000 + count(*)) div (2 * count(*))")
-         / F.lit(10000.0)).cast("double").alias("avg_chars"),
-        F.sum("n_chars").alias("total_chars"),
-    )
 
 
 @register(
@@ -512,26 +179,6 @@ def q12(spark, sf_dir):
 # DataFrame forms over the driver's tables)
 # --------------------------------------------------------------------------
 
-@register(
-    "q13_exact_dedup",
-    """
-    SELECT doc_id,
-           MIN(doc_id) OVER (PARTITION BY lower(trim(text))) AS canonical_id,
-           CAST(doc_id != MIN(doc_id) OVER (PARTITION BY lower(trim(text))) AS INT)
-             AS is_duplicate
-    FROM documents
-    """,
-    doc="exact dedup via group-min canonicalization on normalized text",
-)
-def q13(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    w = W.partitionBy(F.lower(F.trim(F.col("text"))))
-    cid = F.min("doc_id").over(w)
-    return d.select(
-        "doc_id", cid.alias("canonical_id"),
-        (F.col("doc_id") != cid).cast("int").alias("is_duplicate"),
-    )
-
 
 from .dedup import MD5_60_SQL as _MD5_60_SQL  # noqa: E402
 
@@ -556,9 +203,8 @@ FROM keyed k JOIN canon c USING (text_hash)
     _Q31_SQL.format(hash=_MD5_60_SQL.format(x=_NORM_TEXT_SQL)),
     doc="exact dedup in the production (100-TB) shape: group on the 60-bit "
         "hash of the normalized text, NOT the text itself, so every shuffle "
-        "in the plan exchanges an 8-byte key (q13's window-over-full-text "
-        "form is the demonstration twin; this is the plan you'd run at "
-        "scale — plan-asserted in tests/test_dedup_sim.py). Oracle-checked "
+        "in the plan exchanges an 8-byte key (plan-asserted in "
+        "tests/test_dedup_sim.py). Oracle-checked "
         "end-to-end via the portable md5_60 hash; xxhash64 is the default "
         "production hash of webextract.dedup.best_copy, which runs here "
         "without a quality column: every copy in a content group has the "
@@ -913,36 +559,6 @@ def q42(spark, sf_dir):
                   F.max("ts").alias("session_end")))
 
 
-_Q44_SQL = f"""
-WITH {_sess_ctes('>=')}
-SELECT user_id,
-       MIN(ts) AS session_start,
-       MAX(ts) + INTERVAL 4 HOUR AS session_end,
-       COUNT(*) AS n_events
-FROM sess GROUP BY user_id, session_idx
-"""
-
-
-@register(
-    "q44_session_window_builtin",
-    _Q44_SQL,
-    doc="Spark's BUILT-IN session_window aggregation (the streaming-capable "
-        "gap-session primitive, exercised in batch): one hash aggregate "
-        "over (user_id, session_window(ts, gap)) — window end is exclusive "
-        "(last event + gap), so the oracle's split comparison is >= where "
-        "relops.sessionize (q42) uses >. Complements q42: same semantics "
-        "family, engine-native operator vs portable composition.",
-)
-def q44(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
-    return (e.groupBy("user_id", F.session_window("ts", "4 hours"))
-             .agg(F.count("*").alias("n_events"))
-             .select("user_id",
-                     F.col("session_window.start").alias("session_start"),
-                     F.col("session_window.end").alias("session_end"),
-                     "n_events"))
-
-
 _PER_SOURCE_CAP = 15
 
 _Q45_SQL = f"""
@@ -977,112 +593,6 @@ def q45(spark, sf_dir):
     kept = per_group_cap(d, group_col="source", key_col="doc_id",
                          cap=_PER_SOURCE_CAP, hash_fn="md5_60")
     return kept.select("doc_id", "source", "rk")
-
-
-_TFIDF_TOPK, _TFIDF_SCALE = 3, 1_000_000
-
-_Q46_SQL = f"""
-WITH toks AS (
-  SELECT doc_id,
-         unnest(string_split_regex(lower(trim(text)), '\\s+')) AS term
-  FROM documents WHERE length(trim(text)) > 0
-), tf AS (
-  SELECT doc_id, term, COUNT(*) AS tf FROM toks
-  WHERE length(term) > 0 GROUP BY doc_id, term
-), idf AS (
-  SELECT term, COUNT(*) AS df FROM tf GROUP BY term
-), scored AS (
-  SELECT tf.doc_id, tf.term,
-         CAST(tf.tf AS BIGINT) AS tf,
-         CAST(idf.df AS BIGINT) AS df,
-         CAST((tf.tf * {_TFIDF_SCALE}) // idf.df AS BIGINT) AS score
-  FROM tf JOIN idf USING (term)
-)
-SELECT doc_id, term, tf, df, score,
-       CAST(rk AS BIGINT) AS rk
-FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
-                                   ORDER BY score DESC, term ASC) AS rk
-      FROM scored)
-WHERE rk <= {_TFIDF_TOPK}
-"""
-
-
-@register(
-    "q46_tfidf_top_terms",
-    _Q46_SQL,
-    doc="per-doc top-3 characteristic terms by an INTEGER-EXACT tf-idf "
-        "surrogate: score = tf * 1e6 DIV df — monotone in tf/df (the "
-        "constant corpus-size factor is deliberately dropped: it cannot "
-        "change the ranking but tf*N*1e6 would overflow signed 64-bit at "
-        "10^10-doc corpora, where Spark wraps silently and DuckDB raises). "
-        "No float log, so both engines agree bit-for-bit. Plan: tf hash-agg "
-        "with map-side combine, vocabulary-sized idf agg joined back on "
-        "term, WindowGroupLimit top-k per doc — no token-stream shuffle "
-        "past the first aggregate.",
-)
-def q46(spark, sf_dir):
-    from pyspark.sql import Window
-
-    d = _t(spark, sf_dir, "documents")
-    t = F.trim(F.col("text"))
-    toks = (d.filter(F.length(t) > 0)
-             .select("doc_id", F.explode(F.split(F.lower(t), r"\s+"))
-                     .alias("term"))
-             .filter(F.length("term") > 0))
-    tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    idf = tf.groupBy("term").agg(F.count("*").alias("df"))
-    scored = (tf.join(idf, "term")
-                .select("doc_id", "term", "tf", "df",
-                        F.expr(f"tf * {_TFIDF_SCALE} div df")
-                         .cast("long").alias("score")))
-    w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("term"))
-    return (scored.withColumn("rk", F.row_number().over(w))
-                  .filter(F.col("rk") <= _TFIDF_TOPK)
-                  .select("doc_id", "term", "tf", "df", "score", "rk"))
-
-
-@register(
-    "q51_hourly_gapfill",
-    """
-    WITH counts AS (
-      SELECT user_id, date_trunc('hour', ts) AS hour, COUNT(*) AS n
-      FROM events GROUP BY user_id, date_trunc('hour', ts)
-    ), spans AS (
-      SELECT user_id, MIN(hour) AS h0, MAX(hour) AS h1
-      FROM counts GROUP BY user_id
-    ), grid AS (
-      SELECT user_id,
-             unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour
-      FROM spans
-    )
-    SELECT g.user_id, g.hour,
-           CAST(COALESCE(c.n, 0) AS BIGINT) AS n_events,
-           CAST(c.n IS NULL AS INT) AS is_gap
-    FROM grid g LEFT JOIN counts c USING (user_id, hour)
-    """,
-    doc="time-series RESAMPLE/gap-fill: dense per-user hourly grid between "
-        "each user's first and last event, missing hours zero-filled — the "
-        "densification step before any rolling/window computation on "
-        "activity series. Spark side generates the grid with sequence() + "
-        "explode (grid rows are born distributed, never collected); the "
-        "left join back to the sparse counts is key-partitioned. Exact "
-        "integer outputs keep the 105k-row result hash-stable.",
-)
-def q51(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
-    counts = (e.groupBy("user_id", F.date_trunc("hour", "ts").alias("hour"))
-               .agg(F.count("*").alias("n")))
-    spans = counts.groupBy("user_id").agg(F.min("hour").alias("h0"),
-                                          F.max("hour").alias("h1"))
-    grid = spans.select(
-        "user_id",
-        F.explode(F.sequence("h0", "h1", F.expr("interval 1 hour")))
-         .alias("hour"))
-    return (grid.join(counts, ["user_id", "hour"], "left")
-                .select("user_id", "hour",
-                        F.coalesce(F.col("n"), F.lit(0)).cast("long")
-                         .alias("n_events"),
-                        F.col("n").isNull().cast("int").alias("is_gap")))
 
 
 _Q56_HASH = _MD5_60_SQL.format(x=_NORM_TEXT_SQL)
@@ -1226,8 +736,8 @@ def q54(spark, sf_dir):
         "5-row type table — every type is a hot key, so the plain join "
         "pins 5 reducers. The salted plan spreads each hot key over 16 "
         "reducers by replicating the tiny right side 16x and joining on "
-        "(key, salt). The oracle is the PLAIN join + aggregate: like q33, "
-        "the query proves salting is result-invariant, not just faster. "
+        "(key, salt). The oracle is the PLAIN join + aggregate: the "
+        "query proves salting is result-invariant, not just faster. "
         "DECIMAL partials keep the sum exact under any partitioning.",
 )
 def q53(spark, sf_dir):
@@ -1240,111 +750,9 @@ def q53(spark, sf_dir):
     j = salted_join(e, t, key="event_type", salt=16)
     return (j.groupBy("event_type")
              .agg(F.count("*").alias("n"),
-                  F.sum(F.col("value").cast(_DEC)).cast("double")
+                  F.sum(F.col("value").cast("decimal(18,2)")).cast("double")
                    .alias("total_value"),
                   F.max("weight").alias("weight")))
-
-
-_ROLL_H = 24
-
-_Q52_SQL = f"""
-WITH counts AS (
-  SELECT user_id, date_trunc('hour', ts) AS hour, COUNT(*) AS n
-  FROM events GROUP BY user_id, date_trunc('hour', ts)
-), spans AS (
-  SELECT user_id, MIN(hour) AS h0, MAX(hour) AS h1
-  FROM counts GROUP BY user_id
-), grid AS (
-  SELECT user_id,
-         unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour
-  FROM spans
-), dense AS (
-  SELECT g.user_id, g.hour, COALESCE(c.n, 0) AS n
-  FROM grid g LEFT JOIN counts c USING (user_id, hour)
-)
-SELECT user_id, hour,
-       CAST(SUM(n) OVER w AS BIGINT) AS n_24h,
-       CAST(MAX(n) OVER w AS BIGINT) AS peak_hour_24h
-FROM dense
-WINDOW w AS (PARTITION BY user_id ORDER BY hour
-             ROWS BETWEEN {_ROLL_H - 1} PRECEDING AND CURRENT ROW)
-"""
-
-
-@register(
-    "q52_rolling_activity",
-    _Q52_SQL,
-    doc="bounded sliding frame over the gap-filled series: trailing-24h "
-        "event volume + peak hour per user (ROWS BETWEEN 23 PRECEDING AND "
-        "CURRENT ROW) — the rolling-aggregate shape gap-filling exists to "
-        "enable; a bounded frame is O(1) state per row in Spark's window "
-        "exec, and the grid means 'last 24 rows' IS 'last 24 hours'. "
-        "Integer sums keep the 105k-row result exact.",
-)
-def q52(spark, sf_dir):
-    from pyspark.sql import Window
-
-    dense = q51(spark, sf_dir).select(
-        "user_id", "hour", F.col("n_events").alias("n"))
-    w = (Window.partitionBy("user_id").orderBy("hour")
-         .rowsBetween(-(_ROLL_H - 1), Window.currentRow))
-    return dense.select(
-        "user_id", "hour",
-        F.sum("n").over(w).cast("long").alias("n_24h"),
-        F.max("n").over(w).cast("long").alias("peak_hour_24h"))
-
-
-@register(
-    "q50_regional_revenue",
-    """
-    SELECT n.n_name,
-           CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                    * (1 - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE)
-             AS revenue,
-           COUNT(*) AS n_items
-    FROM lineitem l
-    JOIN orders o   ON l.l_orderkey = o.o_orderkey
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN supplier s ON l.l_suppkey = s.s_suppkey
-                   AND c.c_nationkey = s.s_nationkey
-    JOIN nation n   ON s.s_nationkey = n.n_nationkey
-    JOIN region r   ON n.n_regionkey = r.r_regionkey
-    WHERE r.r_name = 'ASIA'
-      AND o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-      AND o.o_orderdate <  TIMESTAMP '1998-01-01 00:00:00'
-    GROUP BY n.n_name
-    """,
-    doc="TPC-H Q5 shape: the 6-table star join (local-supplier revenue by "
-        "nation for one region + date window). The scale plan: region -> "
-        "nation -> supplier/customer are BROADCAST dims (Catalyst chains "
-        "the broadcasts; the region filter prunes the chain before it "
-        "touches a fact), lineitem |><| orders is the one real shuffle "
-        "join with the date filter PUSHED to the orders scan, and the "
-        "final aggregate is nation-cardinality. DECIMAL money arithmetic "
-        "for exact parity.",
-)
-def q50(spark, sf_dir):
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01 00:00:00").cast("timestamp")))
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    dims = (F.broadcast(s)
-            .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-            .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey")))
-    rev = (F.col("l_extendedprice").cast(_DEC)
-           * (F.lit(1) - F.col("l_discount").cast(_DEC)))
-    return (l.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-             .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
-             .join(F.broadcast(dims),
-                   (F.col("l_suppkey") == F.col("s_suppkey"))
-                   & (F.col("c_nationkey") == F.col("s_nationkey")))
-             .groupBy("n_name")
-             .agg(F.sum(rev).cast("double").alias("revenue"),
-                  F.count("*").alias("n_items")))
 
 
 _Q49_SQL = f"""
@@ -1863,36 +1271,6 @@ def q26(spark, sf_dir):
                       F.round("cosine", 9).cast("double").alias("cosine"))
 
 
-@register(
-    "q30_source_profile",
-    """
-    SELECT source, COUNT(*) AS n_docs,
-           COUNT(DISTINCT lang) AS n_langs,
-           CAST(((SUM(n_chars) * 20000 + COUNT(*)) // (2 * COUNT(*))) / 10000.0
-                AS DOUBLE) AS avg_chars,
-           RANK() OVER (ORDER BY SUM(n_chars) DESC, source) AS size_rank
-    FROM documents GROUP BY source
-    """,
-    doc="per-source corpus profile: distinct-count + exact-integer rounded "
-        "mean + rank window over grouped aggregates (source-level curation "
-        "view a crawl pipeline reports per provider/dump); the global rank "
-        "window runs over the POST-aggregation rows — |sources|, not |docs| "
-        "— so the single-partition window is bounded at any corpus scale",
-)
-def q30(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    agg = d.groupBy("source").agg(
-        F.count("*").alias("n_docs"),
-        F.count_distinct("lang").alias("n_langs"),
-        (F.expr("(sum(n_chars) * 20000 + count(*)) div (2 * count(*))")
-         / F.lit(10000.0)).cast("double").alias("avg_chars"),
-        F.sum("n_chars").alias("_total"),
-    )
-    w = W.orderBy(F.col("_total").desc(), F.col("source"))
-    return (agg.withColumn("size_rank", F.rank().over(w))
-               .select("source", "n_docs", "n_langs", "avg_chars", "size_rank"))
-
-
 _LSH_PAIR_TAU = 0.30
 _LSH_PAIR_PLANES = 6
 
@@ -2023,41 +1401,6 @@ def q35(spark, sf_dir):
     ntok, nchar, hits, keep = quality_filter_columns("text", **_QF)
     return d.select("doc_id", ntok.alias("n_tokens"), nchar.alias("n_nonspace"),
                     hits.alias("stop_hits"), keep.alias("keep"))
-
-
-_SALT_BUCKETS = 16
-
-
-@register(
-    "q33_salted_heavy_hitter_agg",
-    """
-    SELECT event_type,
-           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value,
-           COUNT(*) AS n
-    FROM events GROUP BY event_type
-    """,
-    doc="two-stage SALTED aggregation (the explicit heavy-hitter/skew "
-        "defense of the north rule): pre-aggregate on (key, salt-of-row-id) "
-        "so one hot key's rows spread over 16 reducers, then re-aggregate "
-        "the 16 partials per key — the second shuffle moves |keys|x16 rows "
-        "regardless of skew. DECIMAL partials make the two-stage sum "
-        "EXACTLY equal to the direct GROUP BY, which is the oracle: the "
-        "query proves salting is result-invariant, not just faster. "
-        "(Production twin: the salted url-hash repartition in "
-        "sparkjob.extract_df / runner.bucket_col.)",
-)
-def q33(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
-    salted = e.withColumn(
-        "_salt", F.pmod(F.xxhash64("event_id"), F.lit(_SALT_BUCKETS)))
-    partial = salted.groupBy("event_type", "_salt").agg(
-        F.sum(F.col("value").cast(_DEC)).alias("pv"),
-        F.count("*").alias("pn"),
-    )
-    return partial.groupBy("event_type").agg(
-        F.sum("pv").cast("double").alias("total_value"),
-        F.sum("pn").alias("n"),
-    )
 
 
 # --------------------------------------------------------------------------
@@ -2196,7 +1539,7 @@ def q27(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# Benchmark decontamination + unigram-LM commonness (round 4)
+# Benchmark decontamination (round 4)
 # --------------------------------------------------------------------------
 
 _DECON_N = 5          # n-gram order of the contamination index
@@ -2254,51 +1597,6 @@ def q60(spark, sf_dir):
     return (d.select("doc_id").join(hits, "doc_id", "left")
             .select("doc_id", n.cast("long").alias("n_overlap"),
                     (n > 0).cast("int").alias("contaminated")))
-
-
-@register(
-    "q61_unigram_lm_score",
-    """
-    WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t
-      FROM documents WHERE length(trim(text)) > 0
-    ), words AS (
-      SELECT doc_id, unnest(t) AS w FROM toks
-    ), tf AS (
-      SELECT w, COUNT(*) AS tf_g FROM words GROUP BY w
-    )
-    SELECT words.doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_tokens,
-           CAST(SUM(tf.tf_g) AS BIGINT) AS sum_tf,
-           CAST(SUM(tf.tf_g) // COUNT(*) AS BIGINT) AS mean_tf
-    FROM words JOIN tf USING (w)
-    GROUP BY words.doc_id
-    """,
-    doc="unigram-LM commonness score (the CCNet-style language-model "
-        "filter's integer-exact surrogate): per document, the mean corpus "
-        "frequency of its tokens — low scores mark gibberish/rare-token "
-        "soup, implausibly high scores mark stopword/boilerplate soup; "
-        "both tails are what LM-perplexity filtering removes. Plan: one "
-        "shuffle to build the term-frequency table, one term-keyed join "
-        "back (the tf side is |vocab|, orders of magnitude smaller than "
-        "the corpus), one per-doc aggregate; integer `div` == DuckDB `//` "
-        "keeps the score bit-exact (at 10^12 docs switch sum_tf to "
-        "decimal(38,0) — the shape is unchanged).",
-)
-def q61(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    words = (d.filter(F.length(F.trim("text")) > 0)
-             .select("doc_id", F.explode(
-                 F.split(F.trim("text"), r"\s+")).alias("w")))
-    tf = words.groupBy("w").agg(F.count("*").alias("tf_g"))
-    per = (words.join(tf, "w")
-           .groupBy("doc_id")
-           .agg(F.count("*").alias("n_tokens"),
-                F.sum("tf_g").alias("sum_tf")))
-    return per.select(
-        "doc_id", F.col("n_tokens").cast("long").alias("n_tokens"),
-        F.col("sum_tf").cast("long").alias("sum_tf"),
-        F.expr("sum_tf div n_tokens").cast("long").alias("mean_tf"))
 
 
 _BKQ_K = 64
@@ -2450,7 +1748,7 @@ def q66(spark, sf_dir):
 
 # --------------------------------------------------------------------------
 # Round 4 (cont.): retrieval, semantic dedup, domain reputation, DSIR,
-# substring dedup, mixture weights
+# substring dedup
 # --------------------------------------------------------------------------
 
 _BM25_QUERIES = {1: ["hash", "join"], 2: ["window", "agg", "sort"],
@@ -2515,7 +1813,7 @@ def _q67_sql(k: int = _BM25_K) -> str:
         "only the query vocabulary (the filter precedes the shuffle), df + "
         "avgdl as broadcast-sized stats, and an INTEGER-EXACT BM25 "
         "surrogate (k1=1.2, b=0.75 pre-scaled; idf and tf-saturation both "
-        "div-based, q46's no-float-log rule) so scores are bit-reproducible "
+        "div-based, no float log) so scores are bit-reproducible "
         "across engines and shuffle orders — float BM25 is not. Top-k per "
         "query is a WindowGroupLimit, never a global sort. At 10^12 docs "
         "the postings table is written bucketed by term and the idf "
@@ -2811,58 +2109,6 @@ def q71(spark, sf_dir):
     return dup_substring_spans(d, k=_SUBSTR_K, hash_fn="md5_60")
 
 
-_MIX_QUOTA = 1_000_000  # true parts-per-million (the column says ppm)
-
-
-_Q72_SQL = f"""
-WITH s AS (
-  SELECT source, COUNT(*) AS n_docs, SUM(n_chars) AS total_chars
-  FROM documents GROUP BY source
-), w AS (
-  SELECT source, n_docs, total_chars,
-         CAST(FLOOR(SQRT(total_chars)) AS BIGINT) AS weight
-  FROM s
-), tot AS (
-  SELECT SUM(weight) AS wsum FROM w
-)
-SELECT w.source, CAST(w.n_docs AS BIGINT) AS n_docs,
-       CAST(w.total_chars AS BIGINT) AS total_chars,
-       CAST(w.weight AS BIGINT) AS weight,
-       CAST((w.weight * {_MIX_QUOTA}) // t.wsum AS BIGINT) AS quota_ppm
-FROM w, tot t
-"""
-
-
-@register(
-    "q72_mixture_weights",
-    _Q72_SQL,
-    doc="temperature-scaled source mixture weights (the multinomial "
-        "alpha=0.5 sampling rule of multilingual/multi-corpus pretraining, "
-        "Conneau & Lample 2019): per-source mass^alpha via floor(sqrt) — "
-        "exact across engines because IEEE sqrt is correctly rounded and "
-        "the integer gap exceeds one ulp below ~2^52 (above that, switch "
-        "to a decimal isqrt; shape unchanged) — normalized to an integer "
-        "ppm quota with div. Plan: one source-sized aggregate + one "
-        "scalar-broadcast normalization; downstream sampling consumes the "
-        "quota with sampling.hash_sample (q38's deterministic gate).",
-)
-def q72(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    s = d.groupBy("source").agg(F.count("*").alias("n_docs"),
-                                F.sum("n_chars").alias("total_chars"))
-    w = s.withColumn("weight",
-                     F.floor(F.sqrt(F.col("total_chars"))).cast("long"))
-    tot = w.agg(F.sum("weight").alias("wsum"))
-    return (
-        w.crossJoin(F.broadcast(tot))
-        .select("source", F.col("n_docs").cast("long").alias("n_docs"),
-                F.col("total_chars").cast("long").alias("total_chars"),
-                F.col("weight").cast("long").alias("weight"),
-                F.expr(f"(weight * {_MIX_QUOTA}) div wsum")
-                .cast("long").alias("quota_ppm"))
-    )
-
-
 _PREP_CAP = 2048
 _PREP_SHARDS = 32
 _PREP_GRAM_N = 5
@@ -2938,7 +2184,7 @@ def _q73_sql() -> str:
         "— the second end-to-end recipe after pipeline.curate): "
         "decontaminate vs a benchmark's hashed 5-gram index (q60's "
         "broadcast-overlap drop), rebalance sources to alpha=0.5 "
-        "temperature quotas (q72's isqrt weights -> integer permille keep "
+        "temperature quotas (isqrt weights -> integer permille keep "
         "rates -> q38's deterministic hash gate; downsample-only), then "
         "pack the survivors into 2048-token training chunks over 32 "
         "hash-sharded streams (q65's running-sum assignment, no global "
@@ -3048,62 +2294,6 @@ def q74(spark, sf_dir):
                  .alias("cosine_rank")))
     return (fused.orderBy(F.col("rrf_score").desc(), "doc_id")
             .limit(_RRF_OUT))
-
-
-_ADAPT_PERMILLE = 100  # drop the bottom 10% by the metric
-
-
-_Q75_SQL = f"""
-WITH hist AS (
-  SELECT n_chars AS v, COUNT(*) AS c FROM documents GROUP BY n_chars
-), n AS (
-  SELECT SUM(c) AS n_docs FROM hist
-), cum AS (
-  SELECT v, SUM(c) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_c
-  FROM hist
-), thr AS (
-  SELECT MIN(v) AS threshold FROM cum, n
-  WHERE cum_c * 1000 >= n.n_docs * {_ADAPT_PERMILLE}
-)
-SELECT d.doc_id, CAST(d.n_chars AS BIGINT) AS n_chars,
-       CAST(t.threshold AS BIGINT) AS threshold,
-       CAST(d.n_chars >= t.threshold AS INT) AS keep
-FROM documents d, thr t
-"""
-
-
-@register(
-    "q75_adaptive_quantile_gate",
-    _Q75_SQL,
-    doc="data-dependent quality gating: the filter threshold is the "
-        "corpus's own 10th percentile of the metric (here n_chars), "
-        "computed as an EXACT ordinal statistic — the smallest value whose "
-        "running count covers 10% of docs — then broadcast back as a gate. "
-        "The adaptive twin of q35's fixed Gopher thresholds: recalibrates "
-        "per corpus/dump instead of hard-coding. Plan: a value-histogram "
-        "aggregate (|distinct metric values| rows — metrics are bucketed "
-        "ints at scale, so this is bounded), ONE running-sum window over "
-        "that small relation (never over docs), a scalar threshold "
-        "broadcast to the gate — the per-doc path has zero exchanges. "
-        "Integer cross-multiplication (cum*1000 >= n*permille) keeps the "
-        "rank rule float-free and engine-exact.",
-)
-def q75(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    hist = d.groupBy(F.col("n_chars").alias("v")).agg(
-        F.count("*").alias("c"))
-    cum = hist.withColumn(
-        "cum_c", F.sum("c").over(
-            W.orderBy("v").rowsBetween(W.unboundedPreceding, 0)))
-    n = hist.agg(F.sum("c").alias("n_docs"))
-    thr = (cum.crossJoin(F.broadcast(n))
-           .filter(F.col("cum_c") * 1000 >= F.col("n_docs") * _ADAPT_PERMILLE)
-           .agg(F.min("v").alias("threshold")))
-    return (d.crossJoin(F.broadcast(thr))
-            .select("doc_id", F.col("n_chars").cast("long").alias("n_chars"),
-                    F.col("threshold").cast("long").alias("threshold"),
-                    (F.col("n_chars") >= F.col("threshold")).cast("int")
-                    .alias("keep")))
 
 
 _SPLIT_BUCKETS = 10  # hash(source) % 10 -> 0-7 train, 8 val, 9 test
@@ -3336,4 +2526,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {name: spec.sql for name, spec in _REGISTRY.items() if spec.sql is not None}
+    return {name: spec.sql for name, spec in _REGISTRY.items()}

@@ -13,8 +13,8 @@ classic IR structures as plain DataFrames:
 - :func:`doc_lengths` / :func:`avg_doc_length` — the length normalization
   statistics BM25 needs.
 - :func:`bm25_topk` — multi-query ranked retrieval with an INTEGER-EXACT
-  BM25 surrogate (same design rule as the q46 tf-idf surrogate: no float
-  log/division anywhere, so a DuckDB oracle agrees bit-for-bit).
+  BM25 surrogate: no float log/division anywhere, so a DuckDB oracle
+  agrees bit-for-bit.
 
 Integer BM25 surrogate
 ----------------------

@@ -105,7 +105,7 @@ def session_metrics(extracted_stream: DataFrame, *, key: str = "url",
                     watermark: str = "2 hours") -> DataFrame:
     """Streaming SESSION windows: per-key activity bursts separated by
     ``gap`` of event-time silence (recrawl bursts per url, user sessions on
-    an events stream) — the streaming twin of relops.sessionize/q44.
+    an events stream) — the streaming twin of relops.sessionize (q42).
 
     ``session_window`` keeps per-(key, open-session) state that MERGES when
     late rows bridge two open sessions; the watermark both bounds that state

@@ -17,7 +17,7 @@ on the wire), empty query dropped, path defaulting to "/".
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 #: query-param NAMES that never change the resource (tracking/attribution):
 #: utm_* by prefix, fbclid/gclid exactly — matched against the name (the part
@@ -67,7 +67,3 @@ def sum_or(conds: list[Column]) -> Column:
     for c in conds[1:]:
         out = out | c
     return out
-
-
-def canonical_url_df(df: DataFrame, *, url_col: str = "url") -> DataFrame:
-    return df.withColumn("canonical_url", canonical_url(url_col))

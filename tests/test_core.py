@@ -7,9 +7,9 @@ construction, failure isolation, determinism.
 
 from webextract.corpus import make_corpus, make_pdf, write_corpus_parquet
 from webextract.extract import extract_document
-from webextract.heuristics import CLASS_BLOCKLIST, is_boilerplate
+from webextract.heuristics import CLASS_BLOCKLIST, select_content
 from webextract.htmlblocks import parse_blocks
-from webextract.pdftext import extract_pdf_text
+from webextract.pdftext import extract_pdf_pages
 from webextract.textnorm import join_blocks, normalize_ws
 
 N = 1000
@@ -91,7 +91,7 @@ def test_pdf_roundtrip():
     paras = ["Hello world paragraph one.", "Second (with) \\ parens."]
     for compress in (True, False):
         raw = make_pdf(paras, compress=compress)
-        assert extract_pdf_text(raw) == paras
+        assert [p for page in extract_pdf_pages(raw) for p in page] == paras
         r = extract_document(raw)
         assert r.status == "ok" and r.content_type == "pdf"
         assert r.text == "\n\n".join(paras)
@@ -115,19 +115,19 @@ def test_heuristics_link_density():
     html = '<div><p><a href="/x">all of this paragraph text is one link</a></p></div>'
     blocks = parse_blocks(html, CLASS_BLOCKLIST)
     assert len(blocks) == 1
-    assert is_boilerplate(blocks[0])
+    assert select_content([blocks[0]]) == []
     html2 = "<p>A long enough ordinary paragraph with plain words and substance here.</p>"
     b2 = parse_blocks(html2, CLASS_BLOCKLIST)
-    assert not is_boilerplate(b2[0])
+    assert select_content([b2[0]]) != []
 
 
 def test_heuristics_class_blocklist():
     blocks = parse_blocks('<div class="sidebar"><p>Plenty of ordinary text here that is long.</p></div>',
                           CLASS_BLOCKLIST)
-    assert is_boilerplate(blocks[0])
+    assert select_content([blocks[0]]) == []
     blocks = parse_blocks('<div class="content-main"><p>Plenty of ordinary text here that is long.</p></div>',
                           CLASS_BLOCKLIST)
-    assert not is_boilerplate(blocks[0])
+    assert select_content([blocks[0]]) != []
 
 
 def test_nested_candidate_merges():

@@ -144,14 +144,18 @@ def test_top_terms_counts_and_tiebreak(spark):
 
 
 def test_pii_redaction_counts_and_scrub(spark):
-    from webextract.analysis import pii_redact_df
+    from pyspark.sql import functions as F
+
+    from webextract.analysis import pii_redact_columns
 
     d = spark.createDataFrame(
         [(1, "mail a.b+c@sub.example.org and x@y.io or call 212-555-0101"),
          (2, "no pii here"),
          (3, "half@match@nope 123-45-6789")],
         "doc_id long, text string")
-    got = {r["doc_id"]: r.asDict() for r in pii_redact_df(d).collect()}
+    counts, red = pii_redact_columns("text")
+    got = {r["doc_id"]: r.asDict() for r in
+           d.select(F.col("doc_id"), *counts, red.alias("text_redacted")).collect()}
     assert got[1]["n_email"] == 2 and got[1]["n_phone"] == 1
     assert got[1]["text_redacted"] == "mail <EMAIL> and <EMAIL> or call <PHONE>"
     assert got[2]["n_email"] == 0 and got[2]["text_redacted"] == "no pii here"

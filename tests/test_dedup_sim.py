@@ -329,7 +329,7 @@ def test_exact_duplicates_md5_mode_matches_xxhash(docs):
 def test_exact_dedup_hashed_plan_exchanges_hash_key(spark):
     """VERDICT round 2 #4: the production exact-dedup plan (q31) must shuffle
     on the 8-byte text_hash — the raw text column never appears as an
-    exchange key (q13's window-over-full-text form is the anti-scale twin)."""
+    exchange key."""
     d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     out = best_copy(d, text_col="text", id_col="doc_id", hash_fn="md5_60")
     plan = out._jdf.queryExecution().executedPlan().toString()

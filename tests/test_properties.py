@@ -9,7 +9,7 @@ grammar can't enumerate.
 from hypothesis import given, settings, strategies as st
 
 from webextract.extract import extract_document
-from webextract.pdftext import extract_pdf_text
+from webextract.pdftext import extract_pdf_pages
 from webextract.textnorm import join_blocks, normalize_ws
 
 
@@ -57,5 +57,5 @@ def test_join_blocks_spans_slice_back(texts):
 @given(st.binary(min_size=0, max_size=2048))
 def test_pdf_extractor_total_on_garbage(raw):
     # any bytes after the magic must not crash the PDF path
-    out = extract_pdf_text(b"%PDF-1.4\n" + raw)
+    out = [p for page in extract_pdf_pages(b"%PDF-1.4\n" + raw) for p in page]
     assert isinstance(out, list)

@@ -24,7 +24,7 @@ def test_priority_lists_match_live_registry():
 def test_register_rejects_a_duplicate_name():
     # the entry module's extraction queries share the library registry, so
     # a name clash must fail loudly instead of silently dropping a query
-    for name in ("q01_pricing_summary", "q90_extract_corpus"):
+    for name in ("q31_exact_dedup_hashed", "q90_extract_corpus"):
         spec = registry._REGISTRY[name]
         with pytest.raises(ValueError, match="already registered"):
             registry.register(name, spec.sql)(lambda spark, sf_dir: None)

@@ -1,5 +1,5 @@
 """Streaming session windows (session_window + watermark) over the
-extraction stream — the streaming twin of relops.sessionize / q44.
+extraction stream — the streaming twin of relops.sessionize / q42.
 
 Append-mode finalization is the same contract as the tumbling-window test:
 batch 1 emits nothing (watermark at epoch), batch 2's later event times

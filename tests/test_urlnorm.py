@@ -1,7 +1,7 @@
 """URL canonicalization unit cases (q55 oracle-checks the same op
 byte-for-byte against a DuckDB reimplementation over landed corpus urls)."""
 
-from webextract.urlnorm import canonical_url_df
+from webextract.urlnorm import canonical_url
 
 CASES = [
     # scheme+host lowercased, default port stripped, tracking params
@@ -18,16 +18,18 @@ CASES = [
 
 def test_canonical_url_cases(spark):
     df = spark.createDataFrame([(u,) for u, _ in CASES], "url string")
-    got = [r["canonical_url"] for r in canonical_url_df(df).collect()]
+    got = [r["canonical_url"] for r in
+           df.withColumn("canonical_url", canonical_url("url")).collect()]
     for (raw, want), g in zip(CASES, got):
         assert g == want, (raw, g, want)
 
 
 def test_canonical_is_idempotent(spark):
     df = spark.createDataFrame([(u,) for u, _ in CASES], "url string")
-    once = canonical_url_df(df).select(
+    once = df.withColumn("canonical_url", canonical_url("url")).select(
         "canonical_url").withColumnRenamed("canonical_url", "url")
-    twice = [r["canonical_url"] for r in canonical_url_df(once).collect()]
+    twice = [r["canonical_url"] for r in
+             once.withColumn("canonical_url", canonical_url("url")).collect()]
     assert twice == [w for _, w in CASES]
 
 
@@ -36,7 +38,7 @@ def test_fragment_query_not_promoted(spark):
     df = spark.createDataFrame([("http://ex.org/p#frag?x=1",),
                                 ("http://ex.org/p",)], "url string")
     got = {r["url"]: r["canonical_url"]
-           for r in canonical_url_df(df).collect()}
+           for r in df.withColumn("canonical_url", canonical_url("url")).collect()}
     assert got["http://ex.org/p#frag?x=1"] == "http://ex.org/p"
     assert got["http://ex.org/p"] == "http://ex.org/p"
 
@@ -48,7 +50,7 @@ def test_tracking_matched_by_param_name_not_prefix(spark):
         [("http://ex.org/p?gclid_custom=1&UTM_SOURCE=x&a=1&fbclid=2",),
          ("http://ex.org/p?b=utm_source",)], "url string")
     got = {r["url"]: r["canonical_url"]
-           for r in canonical_url_df(df).collect()}
+           for r in df.withColumn("canonical_url", canonical_url("url")).collect()}
     assert got["http://ex.org/p?gclid_custom=1&UTM_SOURCE=x&a=1&fbclid=2"] \
         == "http://ex.org/p?a=1&gclid_custom=1"
     assert got["http://ex.org/p?b=utm_source"] == "http://ex.org/p?b=utm_source"

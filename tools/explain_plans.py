@@ -54,17 +54,6 @@ def main():
         "BroadcastHashJoin with truth on the build side; predictions never "
         "shuffle.")
     qs = entry.queries()
-    add("q01 pricing summary (agg pushdown)",
-        qs["q01_pricing_summary"](spark, sf),
-        "PushedFilters on l_shipdate; partial_sum before the exchange "
-        "(map-side combine); decimal sums.")
-    add("q03 top customers (broadcast join + top-k)",
-        qs["q03_top_customers"](spark, sf),
-        "BroadcastHashJoin (customer small side) + TakeOrderedAndProject "
-        "instead of a global sort.")
-    add("q04 latest event per user (window dedupe)",
-        qs["q04_latest_event_per_user"](spark, sf),
-        "Single shuffle on user_id; rn filter evaluated in the window stage.")
     add("q17 MinHash LSH candidates",
         qs["q17_minhash_near_pairs"](spark, sf),
         "Shingle explode → hash-agg signatures → band explode → bucket "
@@ -72,18 +61,12 @@ def main():
     add("q31 exact dedup, production shape (hash-keyed)",
         qs["q31_exact_dedup_hashed"](spark, sf),
         "Every Exchange is keyed on the 8-byte text_hash — the full text "
-        "never shuffles (q13's window-over-text form is the anti-scale "
-        "demonstration twin).")
+        "never shuffles.")
     add("q26 IVF top-k, served index (fold assignment)",
         qs["q26_ivf_topk"](spark, sf),
         "All-JVM: centroid dots + CASE argmax inside WholeStageCodegen, "
         "probe filter on the cell column (partition pruning at scale), "
         "TakeOrderedAndProject — zero Python, zero Exchange before top-k.")
-    add("q33 salted heavy-hitter aggregation",
-        qs["q33_salted_heavy_hitter_agg"](spark, sf),
-        "Two HashAggregate pairs: the (key, salt) partial spreads a hot key "
-        "over 16 reducers; the second exchange moves |keys|x16 rows "
-        "regardless of skew.")
     add("q34 incremental dedup vs fingerprint index",
         qs["q34_incremental_dedup"](spark, sf),
         "Anti-join and min-id group both keyed on the 8-byte fingerprint; "
