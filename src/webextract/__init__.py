@@ -26,7 +26,7 @@ Layout
 - :mod:`webextract.corpus`     — deterministic synthetic web-pages corpus with
   ground truth known by construction (FIXTURES.md).
 - :mod:`webextract.sparkjob`   — the Spark job: salted repartition + one
-  ``mapInPandas`` over Arrow batches (no per-row Python UDFs).
+  ``mapInArrow`` over Arrow batches (no per-row Python UDFs).
 - :mod:`webextract.runner`     — run_id / lineage / metrics / resume
   (reference pattern ``docs/guides/production-patterns.md:135-608``).
 - :mod:`webextract.evaluate`   — truth join + metric columns + rollup

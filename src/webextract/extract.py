@@ -3,7 +3,7 @@
 Mirrors the reference's fused ``_ingest`` (read∘convert) plus extract
 (reference ``runners/extraction/extraction_orchestrator.py:130-149,172-209``)
 collapsed into one pure function, so the Spark layer can run it over Arrow
-batches inside a single ``mapInPandas`` with exactly one decode of the html
+batches inside a single ``mapInArrow`` with exactly one decode of the html
 bytes per document.
 
 Failure semantics (the reference's most important invariant — a failing

@@ -173,7 +173,7 @@ def run_extraction(
 
         scan → filter(bucket ∈ pending_wave)     # partition-pruning analog
              → repartition(bucket)                # co-locate bucket per task
-             → mapInPandas(extract)               # fused stage
+             → mapInArrow(extract)                # fused stage
              → dynamic-overwrite bucket dirs      # idempotent commit
                (all rows; DLQ + metrics derived)
              → append lineage

@@ -5,13 +5,13 @@ Plan shape (SURVEY.md §3.1 translation of the reference's
 
     scan(web_pages)                       # parquet/Iceberg; pruned columns
       → [salted repartition on url hash]  # defuse domain skew (north rule)
-      → mapInPandas(extract_batches)      # fused parse→clean→segment,
+      → mapInArrow(extract_batches)       # fused parse→clean→segment,
                                           #   per-row failure capture
       → write (ok rows / error rows)
 
 Scale notes
 -----------
-- ONE ``mapInPandas`` stage: html bytes cross the JVM↔Python Arrow boundary
+- ONE ``mapInArrow`` stage: html bytes cross the JVM↔Python Arrow boundary
   exactly once (the reference fuses read∘convert the same way in ``_ingest``,
   ``extraction_orchestrator.py:130-149``).
 - The repartition hashes ``xxhash64(url, salt)``: url is effectively unique,
@@ -19,7 +19,9 @@ Scale notes
   (domain skew). At 10^12 docs the partition count is a function of input
   bytes, not hardcoded — ``pick_partitions`` below.
 - No per-row Python UDFs anywhere; the per-document loop lives *inside* the
-  batch function over a pandas block (input hint's accepted reading).
+  batch function over an Arrow record batch (input hint's accepted reading).
+  No pandas frame on either side: the pass-through columns go back as the
+  input's Arrow arrays and the output batch is built in Arrow directly.
 - Per-row failure isolation: the batch fn never throws for a document;
   ``status``/``error`` columns carry the outcome
   (reference semantic ``extraction_orchestrator.py:232-242``).
@@ -30,8 +32,9 @@ from __future__ import annotations
 import functools
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .extract import extract_document
 
@@ -57,6 +60,7 @@ EXTRACTED_SCHEMA = T.StructType([
     T.StructField("html_bytes", T.LongType()),
     T.StructField("partition_id", T.IntegerType()),
 ])
+_EXTRACTED_ARROW = to_arrow_schema(EXTRACTED_SCHEMA)
 
 # Salt for the url-hash repartition (and runner.bucket_col's default); a
 # fixed literal keeps runs deterministic while still decorrelating from any
@@ -64,11 +68,15 @@ EXTRACTED_SCHEMA = T.StructType([
 DEFAULT_SALT = 0x5EED
 
 
-def extract_batches(batches: Iterator[pd.DataFrame],
+def extract_batches(batches: Iterator[pa.RecordBatch],
                     link_density_max: float = 0.5,
-                    min_chars_linked: int = 25) -> Iterator[pd.DataFrame]:
-    """The mapInPandas body: vectorized over Arrow batches, per-document
+                    min_chars_linked: int = 25) -> Iterator[pa.RecordBatch]:
+    """The mapInArrow body: vectorized over Arrow batches, per-document
     loop inside the batch, extractor thresholds passed to every document.
+
+    ``url``/``warc_ts``/``lang`` (and an input ``partition_id``) pass
+    through as the input's Arrow columns; the other columns are built from
+    Python lists straight into the output ``pa.RecordBatch``.
 
     Runs on executors; must import nothing driver-local. TaskContext gives the
     physical partition id for the metrics/lineage tables.
@@ -77,47 +85,31 @@ def extract_batches(batches: Iterator[pd.DataFrame],
 
     ctx = TaskContext.get()
     pid = ctx.partitionId() if ctx is not None else -1
-    for pdf in batches:
+    for batch in batches:
+        if not isinstance(batch, pa.RecordBatch):
+            # perfbench/kernel.py times this body on a pandas frame
+            batch = pa.RecordBatch.from_pandas(batch, preserve_index=False)
+        raws = [raw or b"" for raw in batch.column("html").to_pylist()]
+        res = [extract_document(raw, link_density_max=link_density_max,
+                                min_chars_linked=min_chars_linked)
+               for raw in raws]
         # lineage bucket passthrough: if the input already carries a
         # data-keyed partition_id (runner.bucket_col), keep it; else report
         # the physical partition id.
-        pid_col = pdf["partition_id"] if "partition_id" in pdf.columns else pid
-        n = len(pdf)
-        texts: list[str] = [""] * n
-        spans: list[list] = [[] for _ in range(n)]
-        status: list[str] = [""] * n
-        error: list[str | None] = [None] * n
-        ctype: list[str] = [""] * n
-        nblocks: list[int] = [0] * n
-        nbytes: list[int] = [0] * n
-        htmls = pdf["html"].to_numpy()
-        for i in range(n):
-            raw = htmls[i]
-            raw = bytes(raw) if raw is not None else b""
-            res = extract_document(raw, link_density_max=link_density_max,
-                                   min_chars_linked=min_chars_linked)
-            texts[i] = res.text
-            spans[i] = [
-                {"start": s, "end": e, "kind": k} for (s, e, k) in res.spans
-            ]
-            status[i] = res.status
-            error[i] = res.error
-            ctype[i] = res.content_type
-            nblocks[i] = res.n_blocks
-            nbytes[i] = len(raw)
-        yield pd.DataFrame({
-            "url": pdf["url"],
-            "warc_ts": pdf["warc_ts"],
-            "lang": pdf["lang"],
-            "text": texts,
-            "spans": spans,
-            "status": status,
-            "error": error,
-            "content_type": ctype,
-            "n_blocks": nblocks,
-            "html_bytes": nbytes,
-            "partition_id": pid_col,
-        })
+        pid_col = (batch.column("partition_id")
+                   if "partition_id" in batch.schema.names
+                   else [pid] * len(raws))
+        # from_arrays converts every column to the schema's Arrow type: each
+        # row's (start, end, kind) tuples become one list<struct> value, and
+        # a bigint partition_id is narrowed to int (the JVM reads only the
+        # declared types; a value out of int range raises)
+        yield pa.RecordBatch.from_arrays([
+            batch.column("url"), batch.column("warc_ts"), batch.column("lang"),
+            [r.text for r in res], [r.spans for r in res],
+            [r.status for r in res], [r.error for r in res],
+            [r.content_type for r in res], [r.n_blocks for r in res],
+            [len(raw) for raw in raws], pid_col,
+        ], schema=_EXTRACTED_ARROW)
 
 
 def _input_bytes(df: DataFrame) -> int:
@@ -203,7 +195,7 @@ def extract_df(pages: DataFrame, *, num_partitions: int | None = None,
         functools.partial(extract_batches, link_density_max=link_density_max,
                           min_chars_linked=min_chars_linked),
         extract_batches)
-    return df.mapInPandas(fn, schema=EXTRACTED_SCHEMA)
+    return df.mapInArrow(fn, schema=EXTRACTED_SCHEMA)
 
 
 def split_errors(extracted: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -3,7 +3,7 @@
 The reference is strictly batch (both orchestrators consume finite lists —
 ``runners/extraction/extraction_orchestrator.py:211-232``), so streaming is
 an *extension point*, not parity (SURVEY.md §1.4). It exists because the
-engine's one-stage design makes it free: ``mapInPandas`` works identically
+engine's one-stage design makes it free: ``mapInArrow`` works identically
 under ``readStream``, so the same fused parse→clean→segment UDF serves both
 modes — micro-batches of newly landed WARC-derived parquet become extracted
 rows with exactly-once sink semantics via checkpointing.

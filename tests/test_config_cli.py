@@ -63,7 +63,7 @@ def test_thresholds_change_extraction():
 
 
 def test_thresholds_reach_executors(spark):
-    """extract_df ships its thresholds into the mapInPandas body: under a
+    """extract_df ships its thresholds into the mapInArrow body: under a
     strict link-density cap the executors drop the planted link-bearing
     paragraph and keep the plain one, exactly as extract_document does."""
     import datetime
@@ -79,8 +79,11 @@ def test_thresholds_reach_executors(spark):
         "url string, warc_ts timestamp, lang string, html binary")
     loose = extract_df(pages, repartition=False).first()
     strict_df = extract_df(pages, repartition=False, link_density_max=0.05)
-    # the bound thresholds keep the body's name in the physical plan
-    assert "extract_batches(" in strict_df._jdf.queryExecution().executedPlan().toString()
+    # one Arrow-native stage, and the bound thresholds keep the body's name
+    # in the physical plan
+    plan = strict_df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan
+    assert "extract_batches(" in plan
     strict = strict_df.first()
     assert "link word" in loose.text
     assert strict.status == "ok" and strict.text == plain

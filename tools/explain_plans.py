@@ -1,6 +1,10 @@
 #!/usr/bin/env python
 """Capture .explain("formatted") for the engine's key plans → docs/PLANS.md.
 
+Each captured plan replaces the ``## <title>`` section of the same title in
+place (a title not yet in the file is appended); every other section of
+docs/PLANS.md, the hand-written round notes included, is kept as it is.
+
 The review loop behind SURVEY §4: after correctness, verify each plan is the
 one we'd want at 100 TB — filters/columns pushed to the scan, broadcast where
 a side is small, no stray exchanges, wide WholeStageCodegen spans.
@@ -8,6 +12,7 @@ a side is small, no stray exchanges, wide WholeStageCodegen spans.
 import contextlib
 import io
 import os
+import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -26,6 +31,20 @@ def fmt(df):
     return "\n".join(head)
 
 
+def splice(doc, sections):
+    """doc with each ``(title, text)`` section swapped in at its ``## title``
+    heading; unknown titles are appended, all other text is unchanged."""
+    parts = re.split(r"(?m)^(?=## )", doc)
+    by_title = {p.split("\n", 1)[0][3:]: i for i, p in enumerate(parts)
+                if p.startswith("## ")}
+    for title, text in sections:
+        if title in by_title:
+            parts[by_title[title]] = text
+        else:
+            parts.append(text)
+    return "".join(parts)
+
+
 def main():
     import __spark_entry__ as entry
     from webextract.session import get_spark
@@ -41,7 +60,7 @@ def main():
     def add(title, df, notes):
         sections.append((title, fmt(df), notes))
 
-    add("extraction (no-skew path: scan → mapInPandas, zero shuffle)",
+    add("extraction (no-skew path: scan → mapInArrow, zero shuffle)",
         extract_df(pages, repartition=False),
         "ReadSchema must include html but NOT the full-page text column; "
         "no Exchange anywhere.")
@@ -87,19 +106,15 @@ def main():
         "BroadcastHashJoin LeftSemi BuildRight: the 100-TB pages side never "
         "shuffles for the (tiny) DLQ key set.")
 
-    out = ["# PLANS — physical plan review (round 3)",
-           "",
-           "Captured via `python tools/explain_plans.py` (sf0.01, local[8]).",
-           "Each plan carries the property it is asserted to have; the "
-           "spot-checkable assertions also live in tests "
-           "(`test_no_repartition_path`, `test_column_pruning_reaches_scan`, "
-           "`test_eval_broadcast_plan`).",
-           ""]
-    for title, plan, notes in sections:
-        out += [f"## {title}", "", notes, "", "```", plan, "```", ""]
-    with open(os.path.join(REPO, "docs", "PLANS.md"), "w") as f:
-        f.write("\n".join(out))
-    print("wrote docs/PLANS.md")
+    path = os.path.join(REPO, "docs", "PLANS.md")
+    with open(path) as f:
+        doc = f.read()
+    doc = splice(doc, [
+        (title, f"## {title}\n\n{notes}\n\n```\n{plan}\n```\n\n")
+        for title, plan, notes in sections])
+    with open(path, "w") as f:
+        f.write(doc)
+    print(f"updated {len(sections)} sections of docs/PLANS.md")
     spark.stop()
 
 
