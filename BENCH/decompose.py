@@ -146,7 +146,8 @@ def main():
             })
 
     def reparted(df):
-        return df.repartition(cores * 2, F.xxhash64(F.col("url"), F.lit(0x5EED)))
+        return df.repartition(spark.sparkContext.defaultParallelism,
+                              F.xxhash64(F.col("url"), F.lit(0x5EED)))
 
     phases = {}
 
@@ -171,14 +172,14 @@ def main():
         .write.format("noop").mode("overwrite").save())
 
     # extract phase with CPU sampling
-    extract_df(pages.limit(cores * 128), num_partitions=cores).write \
+    extract_df(pages.limit(cores * 128)).write \
         .format("noop").mode("overwrite").save()
     ctx = equalize_load(cores) if args.equalize else None
     if ctx:
         ctx.__enter__()
     with CpuSampler() as cs:
         t0 = time.perf_counter()
-        extract_df(pages, num_partitions=cores * 2).write.format("noop") \
+        extract_df(pages).write.format("noop") \
             .mode("overwrite").save()
         wall = time.perf_counter() - t0
     if ctx:

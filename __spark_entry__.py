@@ -70,7 +70,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
     _ship_package(spark)
     pages, truth = _corpus_df(spark, max(60, int(_CORPUS_BASE_DOCS * 0.001)))
-    extracted = extract_df(pages, num_partitions=8)
+    extracted = extract_df(pages)
     metrics = per_doc_metrics(extracted, truth)
     return metrics.select(
         "url", "status", "exact_match", "len_ratio_ok", "similarity",

@@ -12,8 +12,9 @@ Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      BENCH_DOCS         (override corpus size for the extraction bench).
 
 The extraction bench reads a pre-materialized parquet corpus (generation is
-excluded from timing), runs scan → salted repartition → mapInPandas → noop
-sink, and reports docs/sec.
+excluded from timing), runs scan → mapInArrow → noop sink (scan →
+salted repartition → mapInArrow with BENCH_REPARTITION=1), and reports
+docs/sec.
 """
 
 from __future__ import annotations
@@ -97,7 +98,7 @@ def main() -> None:
     # north rule's input table): NO repartition. Scan splits
     # (maxPartitionBytes) already bound per-task bytes, extraction cost is
     # row-wise, so domain clustering cannot skew task cost — the job is ONE
-    # stage (scan -> mapInPandas -> sink) with Python workers busy from t=0.
+    # stage (scan -> mapInArrow -> sink) with Python workers busy from t=0.
     # The salted url-hash shuffle is for UNSPLITTABLE / pathological sources
     # (gzip WARC dumps, giant single files); it is benched separately
     # (BENCH/SKEW.md: 5.07x on a domain-clustered layout) and can be forced
@@ -105,7 +106,7 @@ def main() -> None:
     # local[32] because its map stage is JVM-only — a pure stage-barrier
     # stall for the Python workers (BENCH/DECOMPOSE.md).
     reparte = os.environ.get("BENCH_REPARTITION", "0") == "1"
-    kw = dict(num_partitions=cpus * 2) if reparte else dict(repartition=False)
+    kw = dict(repartition=reparte)
     # warm-up: spin up every Python worker and exercise the full path, so the
     # timed run measures steady-state throughput (worker pool is reused)
     extract_df(pages.limit(cpus * 128), **kw).write \

@@ -21,10 +21,12 @@ import json
 import sys
 
 
-def _spark(args, max_partition_mb: int | None = None):
+def _spark(args):
     from .session import get_spark
 
-    mb = args.max_partition_mb or max_partition_mb
+    # pinned only when --max-partition-mb is given: a conf set while building
+    # the session would override the operator's spark-submit --conf
+    mb = args.scan_split_mb
     return get_spark(app=f"webextract-{args.cmd}",
                      master=args.master,
                      extra={"spark.sql.files.maxPartitionBytes":
@@ -48,7 +50,7 @@ def cmd_extract(args) -> int:
     cfg = load_pipeline_config(args.config_dir) if args.config_dir else None
     orch = cfg.orchestrator if cfg else None
     ext = cfg.extractor if cfg else ExtractorConfig()
-    spark = _spark(args, orch.max_partition_mb if orch else None)
+    spark = _spark(args)
     if args.input_format == "warc":
         from .warc import read_warc
 
@@ -61,7 +63,6 @@ def cmd_extract(args) -> int:
         n_buckets=args.n_buckets or (orch.n_buckets if orch else None),
         waves=args.waves or (orch.waves if orch else 1),
         salt=orch.salt if orch else None,
-        shuffle_partitions=orch.shuffle_partitions if orch else None,
         link_density_max=ext.link_density_max,
         min_chars_linked=ext.min_chars_linked,
     )
@@ -76,9 +77,7 @@ def cmd_reprocess(args) -> int:
 
     cfg = load_pipeline_config(args.config_dir) if args.config_dir else None
     ext = cfg.extractor if cfg else ExtractorConfig()
-    orch = cfg.orchestrator if cfg else None
-    # same scan-split settings as the run being repaired
-    spark = _spark(args, orch.max_partition_mb if orch else None)
+    spark = _spark(args)
     pages = spark.read.parquet(args.input)
     stats = reprocess_errors(spark, pages, args.output_root, args.run_id,
                              link_density_max=ext.link_density_max,
@@ -148,7 +147,8 @@ def cmd_prep(args) -> int:
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="webextract")
     ap.add_argument("--master", default=None)
-    ap.add_argument("--max-partition-mb", type=int, default=None)
+    ap.add_argument("--max-partition-mb", type=int, default=None,
+                    dest="scan_split_mb")
     sub = ap.add_subparsers(dest="cmd", required=True)
 
     s = sub.add_parser("synth", help="materialize the synthetic corpus")

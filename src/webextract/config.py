@@ -6,12 +6,10 @@ YAML file in the config directory, missing file raises, empty file → defaults)
 re-targeted at Spark job parameters instead of thread-pool knobs:
 
 - ``extractor.yaml``     — heuristic thresholds (link density, min chars)
-- ``orchestrator.yaml``  — partitioning: n_buckets, waves, salt,
-                           max_partition_mb, shuffle partitions
+- ``orchestrator.yaml``  — partitioning: n_buckets, waves, salt
                            (replaces the reference's max_workers=4 /
                            max_concurrency=10, which tuned its thread pool —
                            ``config/extraction_orchestrator_config.py:13-21``)
-- ``exporter.yaml``      — output root, table format (parquet | iceberg)
 - ``evaluation.yaml``    — metric list, length tolerance
 
 Unknown keys raise (Pydantic strict), matching the reference's eager
@@ -41,18 +39,8 @@ class OrchestratorConfig(BaseModel):
     n_buckets: int = Field(default=64, ge=1)
     waves: int = Field(default=1, ge=1)
     salt: int = 0x5EED
-    shuffle_partitions: int | None = None
-    max_partition_mb: int = Field(default=128, ge=1)
 
     FILENAME: ClassVar[str] = "orchestrator.yaml"
-
-
-class ExporterConfig(BaseModel):
-    model_config = ConfigDict(extra="forbid")
-    output_root: str = "./webextract_out"
-    table_format: str = Field(default="parquet", pattern="^(parquet|iceberg)$")
-
-    FILENAME: ClassVar[str] = "exporter.yaml"
 
 
 class EvaluationConfig(BaseModel):
@@ -68,7 +56,6 @@ class PipelineConfig(BaseModel):
     model_config = ConfigDict(extra="forbid")
     extractor: ExtractorConfig = Field(default_factory=ExtractorConfig)
     orchestrator: OrchestratorConfig = Field(default_factory=OrchestratorConfig)
-    exporter: ExporterConfig = Field(default_factory=ExporterConfig)
     evaluation: EvaluationConfig = Field(default_factory=EvaluationConfig)
 
 
@@ -91,7 +78,6 @@ def load_pipeline_config(config_dir: str, *, require_all: bool = False) -> Pipel
     sections = {}
     for name, cls in (("extractor", ExtractorConfig),
                       ("orchestrator", OrchestratorConfig),
-                      ("exporter", ExporterConfig),
                       ("evaluation", EvaluationConfig)):
         path = os.path.join(config_dir, cls.FILENAME)
         if os.path.exists(path) or require_all:

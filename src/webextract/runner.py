@@ -163,7 +163,6 @@ def run_extraction(
     n_buckets: int | None = None,
     waves: int = 1,
     salt: int | None = None,
-    shuffle_partitions: int | None = None,
     link_density_max: float = 0.5,
     min_chars_linked: int = 25,
 ) -> dict:
@@ -172,7 +171,7 @@ def run_extraction(
     Plan per wave::
 
         scan → filter(bucket ∈ pending_wave)     # partition-pruning analog
-             → repartition(bucket)                # co-locate bucket per task
+             → repartition(xxhash64(url, DEFAULT_SALT))  # extract_df's spread
              → mapInArrow(extract)                # fused stage
              → dynamic-overwrite bucket dirs      # idempotent commit
                (all rows; DLQ + metrics derived)
@@ -218,24 +217,17 @@ def run_extraction(
 
     for buckets in wave_buckets:
         subset = pages_b.filter(F.col("partition_id").isin(buckets))
-        # r6: extraction parallelism must not be bound to the wave's bucket
-        # count (a 2-wave 8-bucket run used to extract on 4 tasks whatever
-        # the core count — guide §2.5 stragglers). Spread WITHIN buckets by
-        # a deterministic secondary url hash; the write's
-        # partitionBy(partition_id) still lands one dir per bucket, so the
-        # bucket stays the commit unit and re-runs stay idempotent.
-        n_part = shuffle_partitions or max(
-            len(buckets), spark.sparkContext.defaultParallelism)
-        subset = subset.repartition(n_part, F.col("partition_id"),
-                                    F.xxhash64(F.col("url"), F.lit(salt + 1)))
         # the bucket flows through the UDF (no back-join): extract_batches
         # passes an input partition_id column straight to the output.
+        # extract_df's salted url-hash repartition spreads the wave over
+        # every core whatever its bucket count; the write's
+        # partitionBy(partition_id) still lands one dir per bucket, so the
+        # bucket stays the commit unit and re-runs stay idempotent.
         # Extraction executes exactly ONCE per wave: all rows (ok + failed)
         # are committed in one write; the DLQ view and metrics are derived
         # from the committed files (cheap column-pruned scans), never by
         # recomputing the UDF.
-        extracted = extract_df(subset, repartition=False,
-                               link_density_max=link_density_max,
+        extracted = extract_df(subset, link_density_max=link_density_max,
                                min_chars_linked=min_chars_linked)
         _write_by_bucket(extracted, paths.extracted(run_id))
 

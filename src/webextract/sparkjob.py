@@ -16,8 +16,7 @@ Scale notes
   ``extraction_orchestrator.py:130-149``).
 - The repartition hashes ``xxhash64(url, salt)``: url is effectively unique,
   so partitions are uniform even when one domain dominates the crawl
-  (domain skew). At 10^12 docs the partition count is a function of input
-  bytes, not hardcoded — ``pick_partitions`` below.
+  (domain skew).
 - No per-row Python UDFs anywhere; the per-document loop lives *inside* the
   batch function over an Arrow record batch (input hint's accepted reading).
   No pandas frame on either side: the pass-through columns go back as the
@@ -112,63 +111,14 @@ def extract_batches(batches: Iterator[pa.RecordBatch],
         ], schema=_EXTRACTED_ARROW)
 
 
-def _input_bytes(df: DataFrame) -> int:
-    """Total bytes behind the DataFrame's file scan (0 if not file-backed).
-
-    Uses the public ``inputFiles()`` API + filesystem stat — no data read,
-    no private py4j surface.
-    """
-    import os
-    from urllib.parse import urlparse
-
-    total = 0
-    for uri in df.inputFiles():
-        parsed = urlparse(uri)
-        if parsed.scheme not in ("", "file"):
-            return 0  # remote store: sizes not statable from the driver
-        path = parsed.path or uri
-        try:
-            total += os.path.getsize(path)
-        except OSError:
-            return 0
-    return total
-
-
-def pick_partitions(df: DataFrame, target_bytes: int = 96 * 1024 * 1024,
-                    default: int = 32) -> int:
-    """Partition count from input size, not a constant.
-
-    At 100 TB this is what keeps per-task work bounded (~96 MiB of html per
-    task); locally it collapses to the core count. ``extract_df``'s
-    ``num_partitions`` is the explicit override. Resolution order:
-
-    1. public ``df.inputFiles()`` byte-summing (local/file scans);
-    2. the optimizer's byte statistics via the private ``_jdf`` handle —
-       works for remote stores, but may break on Spark upgrades, hence last;
-    3. ``default``.
-    """
-    nbytes = 0
-    try:
-        nbytes = _input_bytes(df)
-    except Exception:  # noqa: BLE001 — non-file source
-        nbytes = 0
-    if nbytes <= 0:
-        try:
-            nbytes = int(min(
-                df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes(),
-                1 << 60))
-        except Exception:  # noqa: BLE001 — stats unavailable → fall back
-            return default
-    if nbytes <= 0:
-        return default
-    return max(default, min(1_000_000, nbytes // target_bytes + 1))
-
-
-def extract_df(pages: DataFrame, *, num_partitions: int | None = None,
-               repartition: bool = True,
+def extract_df(pages: DataFrame, *, repartition: bool = True,
                link_density_max: float = 0.5,
                min_chars_linked: int = 25) -> DataFrame:
     """web_pages DataFrame → extracted DataFrame (lazy; no action here).
+
+    ``repartition=True`` spreads the rows over the session's
+    ``defaultParallelism`` tasks by ``xxhash64(url, DEFAULT_SALT)``, whatever
+    the input's file layout; the resumable runner's waves use the same rule.
 
     Repartition guidance (measured — BENCH/DECOMPOSE.md): for SPLITTABLE
     columnar sources (parquet/Iceberg) prefer ``repartition=False`` — scan
@@ -186,8 +136,8 @@ def extract_df(pages: DataFrame, *, num_partitions: int | None = None,
         cols.append("partition_id")  # lineage bucket passthrough
     df = pages.select(*cols)
     if repartition:
-        n = num_partitions or pick_partitions(df)
-        df = df.repartition(n, F.xxhash64(F.col("url"), F.lit(DEFAULT_SALT)))
+        df = df.repartition(df.sparkSession.sparkContext.defaultParallelism,
+                            F.xxhash64(F.col("url"), F.lit(DEFAULT_SALT)))
     # the thresholds ride the pickled partial to executors (the Spark analog
     # of the reference's PipelineContext passed to every stage); the copied
     # __name__ keeps "extract_batches" as the UDF's name in physical plans

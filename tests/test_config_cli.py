@@ -15,7 +15,6 @@ def test_defaults():
     cfg = PipelineConfig()
     assert cfg.extractor.link_density_max == 0.5
     assert cfg.orchestrator.n_buckets == 64
-    assert cfg.exporter.table_format == "parquet"
 
 
 def test_yaml_roundtrip(tmp_path):
@@ -50,6 +49,38 @@ def test_validation_bounds():
         ExtractorConfig(link_density_max=1.5)
     with pytest.raises(Exception):
         OrchestratorConfig(n_buckets=0)
+
+
+def test_cli_config_dir_leaves_max_partition_bytes_unset(tmp_path, monkeypatch):
+    """An orchestrator.yaml sets no scan-split size: without
+    --max-partition-mb the CLI's session leaves maxPartitionBytes to
+    spark-submit --conf (a conf set at session build overrides it)."""
+    import webextract.session
+    from webextract.cli import main
+
+    class Sentinel(Exception):
+        pass
+
+    seen = {}
+
+    def fake_get_spark(*args, extra=None, **kw):
+        seen["extra"] = extra
+        raise Sentinel
+
+    monkeypatch.setattr(webextract.session, "get_spark", fake_get_spark)
+    (tmp_path / "orchestrator.yaml").write_text("")
+    argv = ["extract", "--config-dir", str(tmp_path),
+            "--input", str(tmp_path / "pages.parquet"),
+            "--output-root", str(tmp_path / "out"), "--run-id", "r1"]
+    with pytest.raises(Sentinel):
+        main(argv)
+    assert "extra" in seen
+    assert not any("maxPartitionBytes" in k for k in (seen["extra"] or {}))
+    # the flag still pins it
+    with pytest.raises(Sentinel):
+        main(["--max-partition-mb", "64"] + argv)
+    assert seen["extra"] == {"spark.sql.files.maxPartitionBytes":
+                             str(64 * 1024 * 1024)}
 
 
 def test_thresholds_change_extraction():

@@ -215,17 +215,6 @@ def test_null_expected_text_scores_null_on_every_metric(spark):
     assert rows["u2"].exact_match == 1.0 and rows["u2"].similarity == 1.0
 
 
-def test_pick_partitions_paths(spark, corpus_dir, pages):
-    from webextract.sparkjob import pick_partitions
-
-    # file-backed scan: sizes come from public inputFiles() stat
-    n = pick_partitions(pages, target_bytes=64 * 1024, default=2)
-    assert n >= 2
-    # non-file DataFrame: falls back (stats or default), never raises
-    inline = spark.createDataFrame([(1,)], "a int")
-    assert pick_partitions(inline, default=7) >= 1
-
-
 def test_empty_waves_commit_cleanly(spark, tmp_path):
     """A wave whose buckets hold zero input rows must still commit (lineage
     marks the empty buckets done; reads of the run stay valid)."""

@@ -89,6 +89,42 @@ def test_waves_equal_single_shot(spark, pages, tmp_path):
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
+def test_wave_plan_spreads_skewed_buckets(spark, tmp_path, monkeypatch):
+    """Each wave is one salted url-hash Exchange feeding one MapInArrow, and
+    on an 80%-one-domain corpus every task of a wave holds under 2x the mean
+    row count. The wave's buckets share pmod(xxhash64(url, salt), 4), so this
+    also shows the Exchange's own hash does not fold them onto one task."""
+    import webextract.runner as runner
+    from webextract.corpus import write_corpus_parquet
+    from webextract.sparkjob import extract_df
+
+    d = str(tmp_path / "skewcorpus")
+    write_corpus_parquet(d, 800, seed=5, skew=True)
+    skewed = spark.read.parquet(f"{d}/web_pages.parquet")
+    waves = []
+
+    def capture(df, **kw):
+        waves.append(extract_df(df, **kw))
+        return waves[-1]
+
+    monkeypatch.setattr(runner, "extract_df", capture)
+    stats = run_extraction(spark, skewed, str(tmp_path / "run"), "run1",
+                           n_buckets=N_BUCKETS, waves=4)
+    assert stats["waves"] == 4 and len(waves) == 4
+
+    n_tasks = spark.sparkContext.defaultParallelism
+    for ex in waves:
+        plan = ex._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange") == 1, plan
+        assert "Exchange hashpartitioning(xxhash64(url#" in plan, plan
+        assert plan.count("MapInArrow") == 1, plan
+        counts = [r["count"] for r in
+                  ex.groupBy(F.spark_partition_id()).count().collect()]
+        assert len(counts) == n_tasks
+        mean = sum(counts) / len(counts)
+        assert max(counts) < 2.0 * mean, f"unbalanced tasks: {sorted(counts)}"
+
+
 def test_bucket_is_data_keyed(spark, pages):
     """Same bucket for a url regardless of partitioning/cluster size."""
     a = pages.withColumn("b", bucket_col(n_buckets=N_BUCKETS)).select("url", "b")
@@ -101,7 +137,7 @@ def test_evaluation_pipeline(spark, corpus_dir, pages):
     from webextract.sparkjob import extract_df
 
     truth = spark.read.parquet(f"{corpus_dir}/truth.parquet")
-    extracted = extract_df(pages, num_partitions=8)
+    extracted = extract_df(pages)
     long_df, summary = evaluate(extracted, truth)
     s = {r.metric_name: r for r in summary.collect()}
     assert set(s) == {"exact_match", "len_ratio_ok", "similarity", "span_count_match"}

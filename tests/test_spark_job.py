@@ -16,7 +16,7 @@ from webextract.sparkjob import (EXTRACTED_SCHEMA, extract_batches,
 @pytest.fixture(scope="module")
 def extracted(spark, corpus_dir):
     pages = spark.read.parquet(f"{corpus_dir}/web_pages.parquet")
-    df = extract_df(pages, num_partitions=8).cache()
+    df = extract_df(pages).cache()
     df.count()
     return df
 
@@ -68,8 +68,9 @@ def test_failure_isolation(spark, corpus_dir, extracted):
 
 def test_determinism_two_runs(spark, corpus_dir):
     pages = spark.read.parquet(f"{corpus_dir}/web_pages.parquet")
-    a = extract_df(pages, num_partitions=4)
-    b = extract_df(pages, num_partitions=7)  # different partitioning
+    # different partitionings of the same input
+    a = extract_df(pages.repartition(4), repartition=False)
+    b = extract_df(pages.repartition(7), repartition=False)
     cols = ["url", "warc_ts", "text", "status"]
     assert a.select(cols).exceptAll(b.select(cols)).count() == 0
     assert b.select(cols).exceptAll(a.select(cols)).count() == 0

@@ -64,8 +64,8 @@ def test_salted_repartition_balances_domain_skew(spark, tmp_path, skew):
     top = dom.groupBy("domain").count().orderBy(F.desc("count")).first()
     assert top["count"] > 0.7 * pages.count()
 
-    n_part = 16
-    ex = extract_df(pages, num_partitions=n_part)
+    n_part = spark.sparkContext.defaultParallelism
+    ex = extract_df(pages)
     counts = [r["count"] for r in
               ex.groupBy("partition_id").count().collect()]
     assert len(counts) == n_part

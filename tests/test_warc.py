@@ -57,7 +57,7 @@ def test_read_warc_to_extraction_byte_identity(spark, tmp_path):
 
     back = read_warc(spark, str(wdir))
     assert back.count() == len(rows)
-    ok_w, _ = split_errors(extract_df(back, num_partitions=8))
+    ok_w, _ = split_errors(extract_df(back))
     ok_d, _ = split_errors(extract_df(pages, repartition=False))
     diff = (ok_w.select("url", "text").alias("w")
             .join(ok_d.select("url", "text").alias("d"), "url", "full")

@@ -65,7 +65,7 @@ def main():
         "ReadSchema must include html but NOT the full-page text column; "
         "no Exchange anywhere.")
     add("extraction (skew path: salted url-hash repartition)",
-        extract_df(pages, num_partitions=16),
+        extract_df(pages),
         "Exactly one Exchange, keyed xxhash64(url, salt) — the explicit "
         "partitioning the north rule requires.")
     add("evaluation join (broadcast truth)",
