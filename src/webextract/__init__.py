@@ -40,7 +40,7 @@ Layout
 - :mod:`webextract.queries`    — oracle-checked query registry (driver gate).
 - :mod:`webextract.session`    — SparkSession factory (+ --py-files zip).
 - :mod:`webextract.config`     — YAML-per-component Pydantic configs.
-- :mod:`webextract.tableio`    — parquet/Iceberg table seam.
+- :mod:`webextract.tableio`    — Hadoop path → FileSystem lookup + compaction.
 - :mod:`webextract.cli`        — spark-submit entrypoint (synth/extract/evaluate).
 """
 

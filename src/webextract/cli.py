@@ -48,8 +48,10 @@ def cmd_extract(args) -> int:
     from .runner import run_extraction
 
     cfg = load_pipeline_config(args.config_dir) if args.config_dir else None
-    orch = cfg.orchestrator if cfg else None
     ext = cfg.extractor if cfg else ExtractorConfig()
+    # only the orchestrator fields the YAML sets: a model default would
+    # conflict with the bucketing a resumed run's manifest pinned
+    orch = cfg.orchestrator.model_dump(exclude_unset=True) if cfg else {}
     spark = _spark(args)
     if args.input_format == "warc":
         from .warc import read_warc
@@ -60,9 +62,9 @@ def cmd_extract(args) -> int:
     stats = run_extraction(
         spark, pages, args.output_root, args.run_id,
         # None → inherit the run manifest on resume (or runner defaults)
-        n_buckets=args.n_buckets or (orch.n_buckets if orch else None),
-        waves=args.waves or (orch.waves if orch else 1),
-        salt=orch.salt if orch else None,
+        n_buckets=args.n_buckets or orch.get("n_buckets"),
+        waves=args.waves or orch.get("waves", 1),
+        salt=orch.get("salt"),
         link_density_max=ext.link_density_max,
         min_chars_linked=ext.min_chars_linked,
     )

@@ -37,6 +37,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from .sparkjob import DEFAULT_SALT, EXTRACTED_SCHEMA, extract_df, split_errors
+from .tableio import hadoop_fs
 
 LINEAGE_SCHEMA = T.StructType([
     T.StructField("run_id", T.StringType()),
@@ -95,11 +96,15 @@ def bucket_col(salt: int = DEFAULT_SALT, n_buckets: int = 64):
 
 
 def completed_buckets(spark: SparkSession, paths: RunPaths, run_id: str) -> DataFrame:
-    """Lineage rows for this run (empty DF if no lineage yet)."""
-    try:
-        df = spark.read.schema(LINEAGE_SCHEMA).parquet(paths.lineage())
-    except Exception:  # noqa: BLE001 — first run: no lineage dir yet
+    """Lineage rows for this run (empty DF if no lineage yet).
+
+    Only a missing lineage dir means "nothing completed"; a failing read of
+    an existing one propagates instead of silently re-running every bucket.
+    """
+    fs, lineage = hadoop_fs(spark, paths.lineage())
+    if not fs.exists(lineage):
         return spark.createDataFrame([], LINEAGE_SCHEMA)
+    df = spark.read.schema(LINEAGE_SCHEMA).parquet(paths.lineage())
     return df.filter((F.col("run_id") == run_id) & (F.col("status") == "completed"))
 
 
@@ -107,20 +112,10 @@ def _manifest_path(root: str, run_id: str) -> str:
     return os.path.join(root, "runs", f"{run_id}.json")
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) for ``path``'s scheme — local file://, hdfs://,
-    s3a://, … all resolve through the same API, so runner metadata I/O works
-    wherever the output tables live (a driver-local ``os.listdir`` would
-    silently see nothing on a remote store)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
-
-
 def _load_manifest(spark: SparkSession, root: str, run_id: str) -> dict | None:
     import json
 
-    fs, p = _hadoop_fs(spark, _manifest_path(root, run_id))
+    fs, p = hadoop_fs(spark, _manifest_path(root, run_id))
     if not fs.exists(p):
         return None
     stream = fs.open(p)
@@ -135,7 +130,7 @@ def _save_manifest(spark: SparkSession, root: str, run_id: str,
                    n_buckets: int, salt: int) -> None:
     import json
 
-    fs, p = _hadoop_fs(spark, _manifest_path(root, run_id))
+    fs, p = hadoop_fs(spark, _manifest_path(root, run_id))
     stream = fs.create(p, True)  # create() makes parent dirs on every scheme
     try:
         stream.write(bytearray(json.dumps(
@@ -277,7 +272,7 @@ def _committed_retry_attempts(spark: SparkSession, root: str,
     attempt discovery works when the output root is HDFS/S3A, not only a
     driver-local path.
     """
-    fs, base = _hadoop_fs(spark, os.path.join(root, "retries", f"run_id={run_id}"))
+    fs, base = hadoop_fs(spark, os.path.join(root, "retries", f"run_id={run_id}"))
     if not fs.exists(base):
         return []
     out = []
@@ -324,7 +319,7 @@ def load_errors(spark: SparkSession, root: str, run_id: str) -> DataFrame:
     # a clean run may have committed no error dirs at all — that's the ONLY
     # case that maps to an empty DLQ; real read failures (corrupt file,
     # FS fault) must propagate, not report a falsely-clean run
-    fs, errdir = _hadoop_fs(spark, paths.errors(run_id))
+    fs, errdir = hadoop_fs(spark, paths.errors(run_id))
     if fs.exists(errdir) and fs.getFileStatus(errdir).isDirectory():
         errs = spark.read.schema(ERRORS_SCHEMA).parquet(paths.errors(run_id))
     else:

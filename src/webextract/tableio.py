@@ -1,125 +1,22 @@
-"""Table IO abstraction: Iceberg catalog tables when available, parquet dirs
-locally.
+"""Hadoop-path table maintenance: one path→``FileSystem`` lookup and
+small-file compaction.
 
-The north rule targets Iceberg tables; this sandbox has no Iceberg runtime
-jar (verified — /opt/spark/jars), so the engine codes against this thin
-seam instead of hardcoding either backend:
-
-- ``ParquetIO``  — path-based tables; a bucket commit is a dynamic partition
-  overwrite of the bucket's directory (what runner.py uses today; atomic
-  enough for local/test runs).
-- ``IcebergIO``  — catalog tables; a bucket commit is ``overwritePartitions``
-  on the bucket key and appends become snapshot commits, giving true
-  transactional resume on a real cluster. Constructing it verifies the
-  catalog is configured and raises a clear error otherwise.
-
-Both expose the same four verbs the runner needs: ``append``,
-``overwrite_buckets``, ``read``, ``exists``. The commit unit is the lineage
-BUCKET (``partition_id``), never the wave: wave composition changes when a
-resumed run re-plans, bucket identity never does (see runner.py's
-durability model).
+The runner (``runner.py``) is the only table writer; this module holds the
+storage helpers it and the maintenance queries share.
 """
 
 from __future__ import annotations
 
-import os
-from abc import ABC, abstractmethod
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 
-class TableIO(ABC):
-    @abstractmethod
-    def append(self, df: DataFrame, table: str) -> None: ...
-
-    @abstractmethod
-    def overwrite_buckets(self, df: DataFrame, table: str, run_id: str) -> None:
-        """Replace exactly the ``partition_id`` buckets present in ``df``."""
-
-    @abstractmethod
-    def read(self, spark: SparkSession, table: str) -> DataFrame: ...
-
-    @abstractmethod
-    def exists(self, spark: SparkSession, table: str) -> bool: ...
-
-
-class ParquetIO(TableIO):
-    """Directory-per-table under a root; buckets are partition dirs."""
-
-    def __init__(self, root: str):
-        self.root = root
-
-    def _path(self, table: str, run_id: str | None = None) -> str:
-        p = os.path.join(self.root, table)
-        if run_id is not None:
-            p = os.path.join(p, f"run_id={run_id}")
-        return p
-
-    def append(self, df: DataFrame, table: str) -> None:
-        df.write.mode("append").parquet(self._path(table))
-
-    def overwrite_buckets(self, df: DataFrame, table: str, run_id: str) -> None:
-        (df.write.mode("overwrite")
-           .option("partitionOverwriteMode", "dynamic")
-           .partitionBy("partition_id")
-           .parquet(self._path(table, run_id)))
-
-    def read(self, spark: SparkSession, table: str) -> DataFrame:
-        return spark.read.option("recursiveFileLookup", "true") \
-            .parquet(self._path(table))
-
-    def read_run(self, spark: SparkSession, table: str, run_id: str) -> DataFrame:
-        """Partition-discovered read of one run (bucket dirs pruned by any
-        partition_id filter the caller applies)."""
-        return spark.read.parquet(self._path(table, run_id))
-
-    def exists(self, spark: SparkSession, table: str) -> bool:
-        return os.path.exists(self._path(table))
-
-
-class IcebergIO(TableIO):
-    """Iceberg catalog tables (``catalog.namespace.table``).
-
-    Requires ``spark.sql.catalog.<name>`` configured with the Iceberg runtime
-    on the classpath. Bucket commits use dynamic partition overwrite on the
-    (run_id, partition_id) columns, so a re-run of a crashed wave's buckets
-    is one atomic snapshot replace — the production-strength version of the
-    parquet directory swap.
-    """
-
-    def __init__(self, spark: SparkSession, namespace: str, catalog: str = "iceberg"):
-        self.namespace = namespace
-        self.catalog = catalog
-        if spark.conf.get(f"spark.sql.catalog.{catalog}", None) is None:
-            raise RuntimeError(
-                f"Iceberg catalog '{catalog}' is not configured "
-                f"(set spark.sql.catalog.{catalog}* and add the "
-                f"iceberg-spark-runtime jar); use ParquetIO locally"
-            )
-
-    def _name(self, table: str) -> str:
-        return f"{self.catalog}.{self.namespace}.{table}"
-
-    def append(self, df: DataFrame, table: str) -> None:
-        df.writeTo(self._name(table)).append()
-
-    def overwrite_buckets(self, df: DataFrame, table: str, run_id: str) -> None:
-        from pyspark.sql import functions as F
-
-        (df.withColumn("run_id", F.lit(run_id))
-           .writeTo(self._name(table))
-           .overwritePartitions())
-
-    def read(self, spark: SparkSession, table: str) -> DataFrame:
-        return spark.read.table(self._name(table))
-
-    def exists(self, spark: SparkSession, table: str) -> bool:
-        return spark.catalog.tableExists(self._name(table))
-
-
-# ---------------------------------------------------------------------------
-# small-file compaction
-# ---------------------------------------------------------------------------
+def hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path) for ``path``'s scheme — local file://, hdfs://,
+    s3a://, … all resolve through the same API, so metadata I/O works
+    wherever the tables live (a driver-local ``os.listdir`` would silently
+    see nothing on a remote store)."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
 def compact_parquet(spark: SparkSession, path: str, *,
@@ -133,7 +30,7 @@ def compact_parquet(spark: SparkSession, path: str, *,
     makes small files *queryable* at full speed, but every later consumer
     re-pays listing + footer overhead; compaction pays it once. This is the
     parquet-dir analog of Iceberg's ``rewrite_data_files`` action (which an
-    IcebergIO deployment should call instead — snapshot-safe, no reader
+    Iceberg deployment should call instead — snapshot-safe, no reader
     disruption). Plan: one scan → AQE-planned exchange-free coalesce to
     ceil(bytes / target) output files → atomic-ish directory swap via
     rename (single-writer maintenance window assumed, like any non-Iceberg
@@ -144,20 +41,18 @@ def compact_parquet(spark: SparkSession, path: str, *,
     """
     import math
 
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    jvm = spark.sparkContext._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(hconf)
+    fs, jpath = hadoop_fs(spark, path)
+    # siblings of `path`: the rewrite lands at tmp, the live data parks at
+    # old for the swap
+    jtmp, jold = jpath.suffix("._compact_tmp"), jpath.suffix("._compact_old")
     # crash recovery: a previous compaction killed between its two renames
     # leaves the data parked at ._compact_old and nothing at `path` —
     # restore it before anything else (and clear any stale tmp)
-    jold0 = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "._compact_old")
-    jtmp0 = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "._compact_tmp")
-    if fs.exists(jold0) and not fs.exists(jpath):
-        if not fs.rename(jold0, jpath):
+    if fs.exists(jold) and not fs.exists(jpath):
+        if not fs.rename(jold, jpath):
             raise IOError(
                 f"compact: orphaned {path}._compact_old cannot be restored")
-    fs.delete(jtmp0, True)
+    fs.delete(jtmp, True)
     files = [f for f in fs.listStatus(jpath)
              if f.getPath().getName().endswith(".parquet")]
     total = sum(f.getLen() for f in files)
@@ -166,11 +61,7 @@ def compact_parquet(spark: SparkSession, path: str, *,
                 "bytes": total, "compacted": False}
     n_out = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
     df = spark.read.parquet(path)
-    tmp = path.rstrip("/") + "._compact_tmp"
-    old = path.rstrip("/") + "._compact_old"
-    jtmp = jvm.org.apache.hadoop.fs.Path(tmp)
-    jold = jvm.org.apache.hadoop.fs.Path(old)
-    (df.coalesce(n_out).write.mode("overwrite").parquet(tmp))
+    (df.coalesce(n_out).write.mode("overwrite").parquet(jtmp.toString()))
     fs.delete(jold, True)
     if not fs.rename(jpath, jold):
         fs.delete(jtmp, True)
@@ -182,7 +73,7 @@ def compact_parquet(spark: SparkSession, path: str, *,
     if not swapped:
         fs.rename(jold, jpath)  # roll back
         fs.delete(jtmp, True)
-        raise IOError(f"compact: cannot swap in {tmp}")
+        raise IOError(f"compact: cannot swap in {jtmp}")
     fs.delete(jold, True)
     after = len([f for f in fs.listStatus(jpath)
                  if f.getPath().getName().endswith(".parquet")])

@@ -83,6 +83,34 @@ def test_cli_config_dir_leaves_max_partition_bytes_unset(tmp_path, monkeypatch):
                              str(64 * 1024 * 1024)}
 
 
+def test_cli_config_dir_resume_inherits_manifest(spark, corpus_dir, tmp_path,
+                                                monkeypatch, capsys):
+    """A run started with --n-buckets 8 resumes with a --config-dir whose
+    orchestrator.yaml leaves n_buckets out: the manifest's 8 is inherited,
+    not overridden by the model default. An explicit conflicting value in
+    the YAML still raises."""
+    import json
+
+    import webextract.session
+    from webextract.cli import main
+
+    monkeypatch.setattr(webextract.session, "get_spark", lambda *a, **k: spark)
+    argv = ["extract", "--input", f"{corpus_dir}/web_pages.parquet",
+            "--output-root", str(tmp_path / "out"), "--run-id", "r1"]
+    assert main(argv + ["--n-buckets", "8"]) == 0
+    cfg = tmp_path / "cfg"
+    cfg.mkdir()
+    (cfg / "orchestrator.yaml").write_text("")
+    capsys.readouterr()
+    assert main(argv + ["--config-dir", str(cfg)]) == 0
+    stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert stats["n_buckets"] == 8 and stats["pending"] == 0
+
+    (cfg / "orchestrator.yaml").write_text("n_buckets: 16\n")
+    with pytest.raises(ValueError, match="would corrupt lineage"):
+        main(argv + ["--config-dir", str(cfg)])
+
+
 def test_thresholds_change_extraction():
     """A link-bearing paragraph under the default threshold survives, but is
     dropped when the run configures a stricter link-density cap."""

@@ -117,9 +117,10 @@ def test_reprocess_unknown_run_raises(spark, pages, tmp_path):
 
 
 def test_metrics_wave_overwrite_is_idempotent(spark, pages, tmp_path):
-    """A wave whose metrics were committed but whose lineage append crashed
-    re-runs on resume and OVERWRITES its metrics — docs_processed must not
-    double-count (the round-1 append bug)."""
+    """A wave whose bucket tables were committed but whose lineage append
+    crashed re-runs on resume and OVERWRITES its buckets — the extracted,
+    errors and metrics tables must neither double-count (the round-1 append
+    bug) nor drop rows."""
     import os
     import shutil
 
@@ -127,6 +128,7 @@ def test_metrics_wave_overwrite_is_idempotent(spark, pages, tmp_path):
     run_extraction(spark, pages, root, "run1", n_buckets=N_BUCKETS, waves=2)
     m_clean = load_metrics(spark, root, "run1").agg(
         F.sum("docs_processed").alias("d")).first().d
+    n_err_clean = load_errors(spark, root, "run1").count()
 
     # simulate the crash window: drop the SECOND wave's lineage rows, keeping
     # its metrics dir — the resumed run must redo that wave idempotently
@@ -142,6 +144,9 @@ def test_metrics_wave_overwrite_is_idempotent(spark, pages, tmp_path):
     m_after = load_metrics(spark, root, "run1").agg(
         F.sum("docs_processed").alias("d")).first().d
     assert m_after == m_clean == pages.count()
+    assert (load_extracted(spark, root, "run1", include_failures=True).count()
+            == pages.count())
+    assert load_errors(spark, root, "run1").count() == n_err_clean
 
 
 def test_extractor_thresholds_thread_through_runner(spark, pages, tmp_path):

@@ -7,6 +7,7 @@ from webextract.evaluate import evaluate, per_doc_metrics
 from webextract.runner import (
     RunPaths,
     bucket_col,
+    completed_buckets,
     load_errors,
     load_extracted,
     load_metrics,
@@ -44,6 +45,35 @@ def test_rerun_is_noop(spark, pages, tmp_path):
     stats2 = run_extraction(spark, pages, root, "run1", n_buckets=N_BUCKETS)
     assert stats2["pending"] == 0 and stats2["waves"] == 0
     assert load_extracted(spark, root, "run1").count() == before
+
+
+def test_completed_buckets_probes_for_lineage(spark, tmp_path, monkeypatch):
+    """A fresh root has no lineage dir: completed_buckets answers from a
+    FileSystem existence probe, not from a failing parquet read (which
+    printed a Java stack trace and read every other failure as "nothing
+    completed"). Once lineage exists, it is read."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    read = []
+    parquet = DataFrameReader.parquet
+
+    def spy(self, *paths, **kw):
+        read.extend(paths)
+        return parquet(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    paths = RunPaths(str(tmp_path / "fresh"))
+    assert completed_buckets(spark, paths, "run1").count() == 0
+    assert paths.lineage() not in read
+
+    spark.createDataFrame(
+        [("run1", 3, "completed")],
+        "run_id string, partition_id int, status string",
+    ).withColumn("completed_at", F.current_timestamp()) \
+     .write.parquet(paths.lineage())
+    assert [r.partition_id for r in
+            completed_buckets(spark, paths, "run1").collect()] == [3]
+    assert paths.lineage() in read
 
 
 def test_resume_processes_only_pending(spark, pages, tmp_path):

@@ -1,43 +1,6 @@
-"""TableIO seam tests: parquet backend + Iceberg guard + runner layout parity."""
-
-import pytest
-
-from webextract.runner import RunPaths
-from webextract.tableio import IcebergIO, ParquetIO
-
-
-def test_parquet_io_bucket_overwrite(spark, tmp_path):
-    io = ParquetIO(str(tmp_path))
-    df = spark.createDataFrame([(1, "a", 0), (2, "b", 1)],
-                               "id int, v string, partition_id int")
-    io.overwrite_buckets(df, "extracted", "r1")
-    assert io.exists(spark, "extracted")
-    assert io.read(spark, "extracted").count() == 2
-    # re-commit of bucket 1 replaces ONLY bucket 1 (dynamic overwrite)
-    df1 = spark.createDataFrame([(3, "c", 1), (4, "d", 1)],
-                                "id int, v string, partition_id int")
-    io.overwrite_buckets(df1, "extracted", "r1")
-    got = {r.id for r in io.read_run(spark, "extracted", "r1").collect()}
-    assert got == {1, 3, 4}
-    io.append(df, "lineage")
-    io.append(df, "lineage")
-    assert io.read(spark, "lineage").count() == 4
-
-
-def test_parquet_io_layout_matches_runner(tmp_path):
-    """runner.RunPaths and ParquetIO agree on the on-disk layout, so a future
-    Iceberg swap-in replaces both behind one seam."""
-    io = ParquetIO(str(tmp_path))
-    rp = RunPaths(str(tmp_path))
-    assert io._path("extracted", "r1") == rp.extracted("r1")
-    assert io._path("errors", "r1") == rp.errors("r1")
-    assert io._path("metrics", "r1") == rp.metrics("r1")
-    assert io._path("lineage") == rp.lineage()
-
-
-def test_iceberg_io_requires_catalog(spark):
-    with pytest.raises(RuntimeError, match="not configured"):
-        IcebergIO(spark, "webextract")
+"""Small-file compaction tests: ``compact_parquet`` keeps every row and is a
+no-op on an already compact directory. The runner's own bucket-overwrite
+commits are tested in ``test_reprocess.py``."""
 
 
 def test_compact_parquet_preserves_rows(spark, tmp_path):
